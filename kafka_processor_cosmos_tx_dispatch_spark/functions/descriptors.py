@@ -1,4 +1,5 @@
-"""Descriptor-driven protobuf-JSON rendering for `Any` payloads.
+"""Descriptor-driven protobuf-JSON rendering of transactions and their
+`Any` payloads.
 
 The reference resolves `Any` types by scanning the classpath for every
 compiled protobuf class and folding their descriptors into a JsonFormat
@@ -7,10 +8,14 @@ ProtoTypeRegistry.kt:16-31) — i.e. it can render ANY type it was compiled
 with, with zero per-type code. This module is the same idea for an engine
 with no compiled classes: the checked-in FileDescriptorSet
 (resources/cosmos_tx.desc, also consumed by the JVM decode tier) carries
-the full schema, and ONE table-driven walker renders any message type in
-it by the protobuf-JSON conventions (camelCase/json_name keys, 64-bit
-ints as strings, bytes as base64, enums by name with unknown numbers as
-ints, proto3 scalar default-omission, `Any` nesting with `@type`).
+the full schema, and ONE generated decoder per message type renders it
+by the protobuf-JSON conventions (camelCase/json_name keys, 64-bit ints
+as strings, bytes as base64, enums by name with unknown numbers as ints,
+proto3 scalar default-omission, `Any` nesting with `@type`).  The
+decoders are straight-line Python source generated from the descriptor
+tables, each compiled on its type's first decode (``TypeRegistry.decoders``);
+the transaction itself (functions/protowire.py) decodes through the
+generated `cosmos.tx.v1beta1.Tx` decoder.
 
 A FileDescriptorSet is itself a protobuf message, so it is parsed with
 the same pure-Python wire reader used for transactions
@@ -32,16 +37,17 @@ converts to error-topic routing.
 
 from __future__ import annotations
 
-import base64
+import binascii
 import os
 import struct
 from datetime import datetime, timedelta
 from dataclasses import dataclass
-from typing import Any, Callable
+from typing import Callable
 
-from . import protowire as _pw
 from .protowire import (
     DecodeError,
+    _vrest,
+    _wire_value,
     encode_ld,
     encode_varint,
     parse_fields,
@@ -105,7 +111,7 @@ class _Field:
     type_name: str  # fully-qualified (no leading dot) for message/enum
 
 
-_g = parse_group  # fused parse+group (protowire.py) — the decode hot path
+_g = parse_group  # fused parse+group (protowire.py)
 
 
 def _utf8(v) -> str:
@@ -196,9 +202,290 @@ def _render_duration(v) -> str:
     return f"{sign}{abs(secs)}{_frac(abs(nanos))}s"
 
 
+# -- generated decoders --------------------------------------------------------
+#
+# Every message type in the set becomes one straight-line Python function
+# ``_m<i>(buf, out) -> out``: a tag loop whose expected (field, wire type)
+# keys read their value inline, then one block per field, in descriptor
+# order, that converts the field's last (singular) or every (repeated)
+# occurrence and applies proto3 default omission.  Fields arriving with
+# another wire type take the generic reader and fail in conversion, as
+# any wire-type mismatch must (DecodeError → error topic).
+
+def _unpack(ftype: int, vals: list) -> list:
+    """Expand packed encodings: any length-delimited occurrence of a
+    packable scalar field is a concatenation of values."""
+    flat: list = []
+    for v in vals:
+        if not isinstance(v, bytes):
+            flat.append(v)
+        elif ftype in _PACKED_VARINT:
+            pos = 0
+            while pos < len(v):
+                # varints inside a packed blob
+                item, shift = 0, 0
+                while True:
+                    if pos >= len(v):
+                        raise DecodeError("truncated packed varint")
+                    b = v[pos]
+                    pos += 1
+                    item |= (b & 0x7F) << shift
+                    if not b & 0x80:
+                        break
+                    shift += 7
+                    if shift > 63:
+                        raise DecodeError("packed varint too long")
+                flat.append(item)
+        elif ftype in _PACKED_FIXED64:
+            if len(v) % 8:
+                raise DecodeError("truncated packed fixed64")
+            flat.extend(int.from_bytes(v[i : i + 8], "little") for i in range(0, len(v), 8))
+        elif ftype in _PACKED_FIXED32:
+            if len(v) % 4:
+                raise DecodeError("truncated packed fixed32")
+            flat.extend(int.from_bytes(v[i : i + 4], "little") for i in range(0, len(v), 4))
+        else:
+            raise DecodeError(f"length-delimited value for scalar type {ftype}")
+    return flat
+
+
+def _double(v: int) -> float:
+    if v >> 64:
+        raise DecodeError("double value exceeds 64 bits")
+    return struct.unpack("<d", v.to_bytes(8, "little"))[0]
+
+
+def _float(v: int) -> float:
+    if v >> 32:
+        raise DecodeError("float value exceeds 32 bits")
+    return struct.unpack("<f", v.to_bytes(4, "little"))[0]
+
+
+def _b64(v: bytes) -> str:
+    return binascii.b2a_base64(v, newline=False).decode()
+
+
+_NOT_LD = {
+    _T_MESSAGE: "expected length-delimited message",
+    _T_STRING: "expected length-delimited field",
+    _T_BYTES: "expected length-delimited bytes",
+}
+# scalar → JSON value of the raw wire integer ``s``
+_XFORM = {
+    _T_SINT32: "(s >> 1) ^ -(s & 1)",
+    _T_SINT64: "(s >> 1) ^ -(s & 1)",
+    _T_INT32: "s - 18446744073709551616 if s >= 9223372036854775808 else s",
+    _T_INT64: "s - 18446744073709551616 if s >= 9223372036854775808 else s",
+    _T_SFIXED64: "s - 18446744073709551616 if s >= 9223372036854775808 else s",
+    _T_SFIXED32: "s - 4294967296 if s >= 2147483648 else s",
+    _T_BOOL: "s != 0",
+    _T_DOUBLE: "_double(s)",
+    _T_FLOAT: "_float(s)",
+}
+# proto3 default omission of a singular field's converted value ``v``
+_PRINTABLE = {_T_BOOL: "v is True", _T_ENUM: "s != 0", _T_STRING: "v", _T_BYTES: "v"}
+
+
+def _conv(fd: _Field, names: dict[str, str]) -> list[str]:
+    """Lines turning the raw occurrence ``s`` of field ``fd`` into ``v``."""
+    t = fd.ftype
+    if t == _T_GROUP:
+        return ['raise DecodeError("proto2 groups are not supported")']
+    if t in _NOT_LD:
+        lines = [f"if s.__class__ is not bytes: raise DecodeError({_NOT_LD[t]!r})"]
+        if t == _T_STRING:
+            return lines + [
+                "try: v = s.decode()",
+                'except UnicodeDecodeError: raise DecodeError("invalid utf-8 string") from None',
+            ]
+        if t == _T_BYTES:
+            return lines + ["v = _b64(s)"]
+        if fd.type_name == _ANY_FQN:
+            return lines + ["v = _any(s)"]
+        if fd.type_name == _TIMESTAMP_FQN:
+            return lines + ["v = _render_timestamp(s)"]
+        if fd.type_name == _DURATION_FQN:
+            return lines + ["v = _render_duration(s)"]
+        fn = names.get(fd.type_name, "")
+        if not fn.startswith("_m"):
+            return lines + [f"raise DecodeError({f'type not in descriptor set: {fd.type_name!r}'!r})"]
+        return lines + [f"v = {fn}(s, {{}})"]
+    lines = [
+        f"if s.__class__ is not int: raise DecodeError({f'expected numeric wire value for type {t}'!r})"
+    ]
+    if t == _T_ENUM:
+        table = names.get(fd.type_name, "")
+        return lines + [f"v = {table if table.startswith('_e') else '{}'}.get(s, s)"]
+    expr = _XFORM.get(t, "s")
+    return lines + [f"v = str({expr})" if t in _AS_STRING_64 else f"v = {expr}"]
+
+
+def _fast_wire_type(fd: _Field) -> int | None:
+    """The wire type a field's usual occurrence carries, when it has an
+    inline reader: 2 (length-delimited) or 0 (varint)."""
+    if fd.ftype in _NOT_LD:
+        return 2
+    if fd.ftype in _PACKED_VARINT:
+        return 0
+    return None
+
+
+# inline readers of one value into ``s``; an index past the end of
+# ``buf`` raises IndexError, which the loop turns into "truncated varint"
+_READ = {
+    2: [
+        "n = buf[pos]",
+        "if n < 128:",
+        "    pos += 1",
+        "else:",  # lengths up to 16 KiB take two bytes
+        "    m = buf[pos + 1]",
+        "    if m < 128:",
+        "        n = (n & 127) | m << 7",
+        "        pos += 2",
+        "    else:",
+        "        n, pos = _vrest(buf, pos + 1, n)",
+        "stop = pos + n",
+        'if stop > end: raise DecodeError("truncated bytes field")',
+        "s = buf[pos:stop]",
+        "pos = stop",
+    ],
+    0: [
+        "s = buf[pos]",
+        "pos += 1",
+        "if s > 127:",
+        "    s, pos = _vrest(buf, pos, s)",
+        "    s &= 0xFFFFFFFFFFFFFFFF",
+    ],
+}
+
+
+def _parse_lines(fields: list[_Field], slots: dict[int, str]) -> list[str]:
+    """The body of a decoder up to its field blocks: the tag loop that
+    leaves each field's raw occurrence (or list of them) in its slot.
+    A field's usual key stores and continues; any other occurrence of a
+    known field (a wrong wire type fails later, in conversion) takes the
+    generic store, and unknown fields are read and dropped."""
+    repeated = {fd.number for fd in fields if fd.repeated}
+
+    def store(no: int) -> list[str]:
+        f = slots[no]
+        if no in repeated:
+            return [f"if {f} is None: {f} = [s]", f"else: {f}.append(s)"]
+        return [f"{f} = s"]
+
+    src = ["    " + " = ".join(slots.values()) + " = None"] if slots else []
+    src += [
+        "    pos = 0",
+        "    end = len(buf)",
+        "    try:",
+        "        while pos < end:",
+        "            key = buf[pos]",
+        "            pos += 1",
+        "            if key > 127:",
+        "                key, pos = _vrest(buf, pos, key)",
+        "                key &= 0xFFFFFFFFFFFFFFFF",
+    ]
+    branch = "if"
+    for wt in (2, 0):
+        fast = [fd for fd in fields if _fast_wire_type(fd) == wt]
+        if not fast:
+            continue
+        src.append(f"            {branch} key & 7 == {wt} and key > 7:")
+        src += ["                " + line for line in _READ[wt]]
+        for fd in fast:
+            src.append(f"                if key == {fd.number << 3 | wt}:")
+            src += ["                    " + line for line in store(fd.number) + ["continue"]]
+        branch = "elif"
+    read = "s, pos = _wire_value(buf, pos, key)"
+    src += [f"            {read}"] if branch == "if" else ["            else:", f"                {read}"]
+    if slots:
+        src.append("            no = key >> 3")
+        for k, no in enumerate(slots):
+            src.append(f"            {'el' if k else ''}if no == {no}:")
+            src += ["                " + line for line in store(no)]
+    return src + ["    except IndexError:", '        raise DecodeError("truncated varint") from None']
+
+
+def _message_source(name: str, fields: list[_Field], names: dict[str, str]) -> list[str]:
+    """One message type's decoder: the tag loop, then one block per field
+    in descriptor order (the JSON key order)."""
+    slots = {fd.number: f"f{k}" for k, fd in enumerate(fields)}
+    src = [f"def {name}(buf, out):"] + _parse_lines(fields, slots)
+    for fd in fields:
+        f = slots[fd.number]
+        conv = _conv(fd, names)
+        key = repr(fd.json_name)
+        src.append(f"    if {f} is not None:")
+        if not fd.repeated:
+            src.append(f"        s = {f}")
+            src += ["        " + line for line in conv]
+            if fd.ftype == _T_MESSAGE:
+                src.append(f"        out[{key}] = v")
+            else:
+                shown = _PRINTABLE.get(fd.ftype, 'v != "0"' if fd.ftype in _AS_STRING_64 else "v != 0")
+                src += [f"        if {shown}:", f"            out[{key}] = v"]
+            continue
+        ind = "        "
+        if fd.ftype not in _NOT_LD:
+            src += [f"        {f} = _unpack({fd.ftype}, {f})", f"        if {f}:"]
+            ind += "    "
+        src += [f"{ind}lst = []", f"{ind}for s in {f}:"]
+        src += [f"{ind}    " + line for line in conv]
+        src += [f"{ind}    lst.append(v)", f"{ind}out[{key}] = lst"]
+    return src + ["    return out"]
+
+
+def _any_source(names: dict[str, str]) -> list[str]:
+    """``_any(buf)``: an ``Any`` field's value rendered through the type
+    its URL names, as ``{"@type": url, ...fields}``.
+
+    UNKNOWN-TYPE POLICY (pinned in tests/test_decode.py): the reference's
+    JsonFormat printer throws on a type absent from its registry, and that
+    call sits OUTSIDE the deserialization Result capture
+    (TopologyProducer.kt:213-215 prints inside onSuccess with no
+    runCatching) — i.e. an unknown type CRASHES the reference's stream
+    task rather than routing anywhere. A distributed engine must not die
+    on one record, so by default an unregistered type renders opaque
+    ({"@type": url, "value": base64}) — the pipeline stays total and
+    predicates can still match on @type — and under strict_any it raises
+    DecodeError, which the decode stage turns into error-topic routing,
+    the nearest RECOVERABLE analog of the reference's throw."""
+    url = _Field("typeUrl", 1, _T_STRING, False, "")
+    value = _Field("value", 2, _T_BYTES, False, "")
+    src = ["def _any(buf):"] + _parse_lines([url, value], {1: "f0", 2: "f1"})
+    src += ['    url = ""', "    if f0 is not None:", "        s = f0"]
+    src += ["        " + line for line in _conv(url, names)]
+    return src + [
+        "        url = v",
+        "    if f1 is None:",
+        '        f1 = b""',
+        "    elif f1.__class__ is not bytes:",
+        '        raise DecodeError("Any.value must be bytes")',
+        '    dec = _TYPES.get(url[url.rfind("/") + 1 :])',
+        "    if dec is not None:",
+        '        return dec(f1, {"@type": url})',
+        "    if _STRICT:",
+        '        raise DecodeError(f"unregistered Any type: {url!r}")',
+        '    return {"@type": url, "value": _b64(f1)}',
+    ]
+
+
+_GEN_GLOBALS = {
+    "DecodeError": DecodeError,
+    "_vrest": _vrest,
+    "_wire_value": _wire_value,
+    "_unpack": _unpack,
+    "_double": _double,
+    "_float": _float,
+    "_b64": _b64,
+    "_render_timestamp": _render_timestamp,
+    "_render_duration": _render_duration,
+}
+
+
 class TypeRegistry:
     """fqn → message/enum tables parsed from a FileDescriptorSet, plus
-    the generic JsonFormat-convention decoder over them."""
+    the decoders generated from them."""
 
     def __init__(
         self,
@@ -207,9 +494,11 @@ class TypeRegistry:
     ) -> None:
         self._messages = messages
         self._enums = enums
-        # (fqn, strict_any) → compiled decoder closure; built lazily so
-        # recursive message types resolve their children at decode time
-        self._dec_cache: dict[tuple[str, bool], Any] = {}
+        # generated names: _m<k> per message type, _e<k> per enum table
+        self._names = {fqn: f"_m{k}" for k, fqn in enumerate(messages)}
+        self._names.update({fqn: f"_e{k}" for k, fqn in enumerate(enums)})
+        self._code: dict[str, object] = {}  # fqn ("" for _any) → compiled source
+        self._tables: dict[bool, dict[str, Callable[[bytes, dict], dict]]] = {}
 
     # -- construction --------------------------------------------------------
 
@@ -274,274 +563,52 @@ class TypeRegistry:
 
     # -- decoding ------------------------------------------------------------
 
+    def decoders(self, strict_any: bool = False) -> dict[str, Callable[[bytes, dict], dict]]:
+        """fqn → ``decode(buf, out) -> out``, which adds the message's
+        protobuf-JSON fields to ``out``.  Each type's source is generated
+        and compiled on its first decode, once per registry, so a process
+        pays only for the types it meets; each ``strict_any`` policy runs
+        its own instance of the code."""
+        table = self._tables.get(strict_any)
+        if table is None:
+            table = {}
+            ns = dict(_GEN_GLOBALS, _STRICT=strict_any, _TYPES=table)
+            ns.update((self._names[fqn], t) for fqn, t in self._enums.items())
+            exec(self._compiled("", lambda: _any_source(self._names)), ns)
+            for fqn in self._messages:
+                ns[self._names[fqn]] = table[fqn] = self._first_call(fqn, ns)
+            self._tables[strict_any] = table
+        return table
+
+    def _compiled(self, fqn: str, source: Callable[[], list[str]]):
+        code = self._code.get(fqn)
+        if code is None:
+            code = self._code[fqn] = compile("\n".join(source()) + "\n", f"<decoder {fqn}>", "exec")
+        return code
+
+    def _first_call(self, fqn: str, ns: dict) -> Callable[[bytes, dict], dict]:
+        """A stand-in that compiles the type's decoder, puts it in its
+        place (the namespace the generated code calls through, and the
+        table), and decodes."""
+        name = self._names[fqn]
+
+        def first_call(buf: bytes, out: dict) -> dict:
+            if ns[name] is first_call:
+                code = self._compiled(
+                    fqn, lambda: _message_source(name, self._messages[fqn], self._names)
+                )
+                exec(code, ns)
+                ns["_TYPES"][fqn] = ns[name]
+            return ns[name](buf, out)
+
+        return first_call
+
     def decode(self, fqn: str, buf: bytes, strict_any: bool = False) -> dict:
-        """Render one message of type `fqn` as its protobuf-JSON object.
-
-        Dispatch is COMPILED per message type: the first decode of a type
-        builds a closure with every field's converter and default-
-        omission predicate pre-resolved (no per-value type if-chain, no
-        dataclass attribute walks in the hot loop — this module is the
-        decode tier's inner loop, see r5 verdict perf item). Semantics
-        are identical to the interpreted walk (_value/_printable, kept
-        for re-encoding and pinned by the goldens + the equivalence
-        property test in tests/test_descriptors.py)."""
-        return self._compiled(fqn, strict_any)(buf)
-
-    def _compiled(self, fqn: str, strict_any: bool) -> "Callable[[bytes], dict]":
-        key = (fqn, strict_any)
-        fn = self._dec_cache.get(key)
+        """Render one message of type `fqn` as its protobuf-JSON object."""
+        fn = self.decoders(strict_any).get(fqn)
         if fn is None:
-            if fqn not in self._messages:
-                raise DecodeError(f"type not in descriptor set: {fqn!r}")
-            fn = self._compile(fqn, strict_any)
-            self._dec_cache[key] = fn
-        return fn
-
-    def _compile(self, fqn: str, strict_any: bool) -> "Callable[[bytes], dict]":
-        """Build the specialized decoder closure for one message type.
-
-        Per field: conv(raw wire value) → JSON value (raising DecodeError
-        on shape violations — same garbage-tolerance contract as _value),
-        printable(v, raw) → proto3 default-omission. Nested message
-        fields resolve their child decoder lazily through the cache, so
-        recursive types terminate."""
-        specs: list[tuple] = []
-        for fd in self._messages[fqn]:
-            t = fd.ftype
-            conv: Callable
-            if t == _T_MESSAGE:
-                if fd.type_name == _ANY_FQN:
-
-                    def conv(v, _sa=strict_any):
-                        if not isinstance(v, bytes):
-                            raise DecodeError("expected length-delimited message")
-                        return _pw._decode_any(v, _sa)
-
-                elif fd.type_name == _TIMESTAMP_FQN:
-                    conv = _render_timestamp
-                elif fd.type_name == _DURATION_FQN:
-                    conv = _render_duration
-                else:
-
-                    def conv(v, _tn=fd.type_name, _sa=strict_any, _c=self._compiled):
-                        if not isinstance(v, bytes):
-                            raise DecodeError("expected length-delimited message")
-                        return _c(_tn, _sa)(v)
-
-                printable = lambda v, raw: True  # noqa: E731
-            elif t == _T_STRING:
-                conv = _utf8
-                printable = lambda v, raw: v != ""  # noqa: E731
-            elif t == _T_BYTES:
-
-                def conv(v):
-                    if not isinstance(v, bytes):
-                        raise DecodeError("expected length-delimited bytes")
-                    return base64.b64encode(v).decode("ascii")
-
-                printable = lambda v, raw: v != ""  # noqa: E731
-            elif t == _T_GROUP:
-
-                def conv(v):
-                    raise DecodeError("proto2 groups are not supported")
-
-                printable = lambda v, raw: True  # noqa: E731
-            else:
-                # numeric on the wire: a length-delimited occurrence must
-                # surface as DecodeError, not leak bytes into the JSON
-                if t == _T_BOOL:
-
-                    def num(v):
-                        return bool(v)
-
-                    printable = lambda v, raw: v is True  # noqa: E731
-                elif t == _T_ENUM:
-
-                    def num(v, _table=self._enums.get(fd.type_name, {})):
-                        return _table.get(v, v)
-
-                    printable = lambda v, raw: raw != 0  # noqa: E731
-                elif t == _T_DOUBLE:
-
-                    def num(v):
-                        if v >> 64:
-                            raise DecodeError("double value exceeds 64 bits")
-                        return struct.unpack("<d", v.to_bytes(8, "little"))[0]
-
-                    printable = lambda v, raw: v != 0  # noqa: E731
-                elif t == _T_FLOAT:
-
-                    def num(v):
-                        if v >> 32:
-                            raise DecodeError("float value exceeds 32 bits")
-                        return struct.unpack("<f", v.to_bytes(4, "little"))[0]
-
-                    printable = lambda v, raw: v != 0  # noqa: E731
-                else:
-                    if t in _ZIGZAG:
-
-                        def xform(v):
-                            return (v >> 1) ^ -(v & 1)
-
-                    elif t in _SIGNED_VARINT or t == _T_SFIXED64:
-                        xform = _signed64
-                    elif t == _T_SFIXED32:
-
-                        def xform(v):
-                            return v - (1 << 32) if v >= (1 << 31) else v
-
-                    else:
-                        xform = None
-                    if t in _AS_STRING_64:
-                        if xform is None:
-
-                            def num(v):
-                                return str(v)
-
-                        else:
-
-                            def num(v, _x=xform):
-                                return str(_x(v))
-
-                        printable = lambda v, raw: v != "0"  # noqa: E731
-                    else:
-                        if xform is None:
-
-                            def num(v):
-                                return v
-
-                        else:
-                            num = xform
-                        printable = lambda v, raw: v != 0  # noqa: E731
-
-                def conv(v, _num=num, _t=t):
-                    if not isinstance(v, int):
-                        raise DecodeError(f"expected numeric wire value for type {_t}")
-                    return _num(v)
-
-            needs_unpack = fd.repeated and t not in (_T_MESSAGE, _T_STRING, _T_BYTES)
-            specs.append((fd.number, fd.json_name, fd.repeated, conv, printable, needs_unpack, fd))
-
-        table = tuple(specs)
-        unpack = self._unpack
-
-        def dec(buf: bytes) -> dict:
-            wire = _g(buf)
-            out: dict = {}
-            for number, name, repeated, conv, printable, needs_unpack, fd in table:
-                vals = wire.get(number)
-                if vals is None:
-                    continue
-                if repeated:
-                    if needs_unpack:
-                        vals = unpack(fd, vals)
-                    if vals:
-                        out[name] = [conv(v) for v in vals]
-                else:
-                    raw = vals[-1]  # last occurrence wins for singular
-                    v = conv(raw)
-                    if printable(v, raw):
-                        out[name] = v
-            return out
-
-        return dec
-
-    def _unpack(self, fd: _Field, vals: list) -> list:
-        """Expand packed encodings: any length-delimited occurrence of a
-        packable scalar field is a concatenation of values."""
-        flat: list = []
-        for v in vals:
-            if not isinstance(v, bytes):
-                flat.append(v)
-            elif fd.ftype in _PACKED_VARINT:
-                pos = 0
-                while pos < len(v):
-                    # varints inside a packed blob
-                    item, shift = 0, 0
-                    while True:
-                        if pos >= len(v):
-                            raise DecodeError("truncated packed varint")
-                        b = v[pos]
-                        pos += 1
-                        item |= (b & 0x7F) << shift
-                        if not b & 0x80:
-                            break
-                        shift += 7
-                        if shift > 63:
-                            raise DecodeError("packed varint too long")
-                    flat.append(item)
-            elif fd.ftype in _PACKED_FIXED64:
-                if len(v) % 8:
-                    raise DecodeError("truncated packed fixed64")
-                flat.extend(
-                    int.from_bytes(v[i : i + 8], "little")
-                    for i in range(0, len(v), 8)
-                )
-            elif fd.ftype in _PACKED_FIXED32:
-                if len(v) % 4:
-                    raise DecodeError("truncated packed fixed32")
-                flat.extend(
-                    int.from_bytes(v[i : i + 4], "little")
-                    for i in range(0, len(v), 4)
-                )
-            else:
-                raise DecodeError(
-                    f"length-delimited value for scalar type {fd.ftype}"
-                )
-        return flat
-
-    def _value(self, fd: _Field, v, strict_any: bool):
-        t = fd.ftype
-        if t == _T_MESSAGE:
-            if not isinstance(v, bytes):
-                raise DecodeError("expected length-delimited message")
-            if fd.type_name == _ANY_FQN:
-                # route through protowire so ONE unknown-type policy
-                # (opaque vs strict) governs every nesting level
-                return _pw._decode_any(v, strict_any)
-            if fd.type_name == _TIMESTAMP_FQN:
-                return _render_timestamp(v)
-            if fd.type_name == _DURATION_FQN:
-                return _render_duration(v)
-            return self.decode(fd.type_name, v, strict_any)
-        if t == _T_STRING:
-            return _utf8(v)
-        if t == _T_BYTES:
-            if not isinstance(v, bytes):
-                raise DecodeError("expected length-delimited bytes")
-            return base64.b64encode(v).decode("ascii")
-        if t == _T_GROUP:
-            raise DecodeError("proto2 groups are not supported")
-        # every remaining type is numeric on the wire: a length-delimited
-        # occurrence (e.g. an enum encoded as bytes) must surface as
-        # DecodeError — the error-topic trigger — not leak raw bytes into
-        # the JSON object (json.dumps would then TypeError and crash the
-        # task instead of routing the record)
-        if not isinstance(v, int):
-            raise DecodeError(f"expected numeric wire value for type {t}")
-        if t == _T_BOOL:
-            return bool(v)
-        if t == _T_ENUM:
-            return self._enums.get(fd.type_name, {}).get(v, v)
-        if t == _T_DOUBLE:
-            if v >> 64:
-                raise DecodeError("double value exceeds 64 bits")
-            return struct.unpack("<d", v.to_bytes(8, "little"))[0]
-        if t == _T_FLOAT:
-            if v >> 32:
-                raise DecodeError("float value exceeds 32 bits")
-            return struct.unpack("<f", v.to_bytes(4, "little"))[0]
-        if t in _ZIGZAG:
-            v = (v >> 1) ^ -(v & 1)
-        elif t in _SIGNED_VARINT:
-            v = _signed64(v)
-        elif t == _T_SFIXED64:
-            v = _signed64(v)
-        elif t == _T_SFIXED32:
-            v = v - (1 << 32) if v >= (1 << 31) else v
-        if t in _AS_STRING_64:
-            return str(v)
-        return v
+            raise DecodeError(f"type not in descriptor set: {fqn!r}")
+        return fn(buf, {})
 
     # -- re-encoding ---------------------------------------------------------
 
@@ -615,7 +682,7 @@ class TypeRegistry:
             if fd.repeated:
                 ints = [
                     self._canon_varint(t, v)
-                    for v in self._unpack(fd, [v for _wt, v in occ])
+                    for v in _unpack(fd.ftype, [v for _wt, v in occ])
                 ]
                 payload = b"".join(encode_varint(v) for v in ints)
                 return encode_ld(no, payload) if payload else b""
@@ -623,7 +690,7 @@ class TypeRegistry:
             return encode_varint(no << 3 | 0) + encode_varint(v) if v else b""
         if t in _PACKED_FIXED64:
             if fd.repeated:
-                ints = self._unpack(fd, [v for _wt, v in occ])
+                ints = _unpack(fd.ftype, [v for _wt, v in occ])
                 self._require_ints(ints)
                 payload = b"".join(v.to_bytes(8, "little") for v in ints)
                 return encode_ld(no, payload) if payload else b""
@@ -634,7 +701,7 @@ class TypeRegistry:
             )
         if t in _PACKED_FIXED32:
             if fd.repeated:
-                ints = self._unpack(fd, [v for _wt, v in occ])
+                ints = _unpack(fd.ftype, [v for _wt, v in occ])
                 self._require_ints(ints)
                 payload = b"".join(v.to_bytes(4, "little") for v in ints)
                 return encode_ld(no, payload) if payload else b""
@@ -704,24 +771,6 @@ class TypeRegistry:
                 if wt == want_wt:
                     out += emit(val)
         return out
-
-    @staticmethod
-    def _printable(fd: _Field, v, raw) -> bool:
-        """proto3 default-omission for singular fields: scalars at their
-        default are not printed (no field presence); message fields print
-        whenever set on the wire, even if empty. Enums are judged by the
-        wire NUMBER (0 omitted whatever its name renders as)."""
-        if fd.ftype == _T_MESSAGE:
-            return True
-        if fd.ftype == _T_ENUM:
-            return raw != 0
-        if fd.ftype in _AS_STRING_64:
-            return v != "0"
-        if fd.ftype == _T_BOOL:
-            return v is True
-        if fd.ftype in (_T_STRING, _T_BYTES):
-            return v != ""
-        return v != 0
 
 
 _DESC_PATH = os.path.join(

@@ -21,9 +21,13 @@ This module provides three tiers, fastest first:
 2. ``compile_json_string_predicate(col, path)`` — for untyped JSON string
    columns: definite paths (child + index only) compile to
    ``get_json_object(col, path) IS NOT NULL`` (JVM-side Jackson walk).
-3. ``match(json_text, path)`` inside ``jsonpath_match_pandas_udf`` — the
-   full evaluator in Python, Arrow-batched, for constructs outside the
-   compilable subset. Semantics identical: errors ⇒ non-match.
+3. ``compile_predicate(path)`` — the full grammar compiled to
+   straight-line Python source (``predicate_source``), run on the decoded
+   object inside the decode UDF or on parsed JSON in
+   ``jsonpath_match_pandas_udf``, for constructs outside the native
+   subset. ``evaluate``/``match`` interpret the same grammar and are the
+   reference the compiled form is tested against. Semantics identical:
+   errors ⇒ non-match.
 
 Grammar (the subset the reference exercises, rules_example.yaml:2-11):
 
@@ -47,6 +51,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import pyworker
 
 
 class JsonPathError(ValueError):
@@ -379,7 +385,7 @@ def parse(path: str) -> tuple:
 
 
 # --------------------------------------------------------------------------
-# Tier 3: pure-Python evaluator (UDF fallback; also the test oracle)
+# Tier 3 reference: tree-walking evaluator (the oracle of the compiled form)
 # --------------------------------------------------------------------------
 
 
@@ -505,190 +511,208 @@ def evaluate(obj: Any, path: str | tuple) -> list:
 
 
 # --------------------------------------------------------------------------
-# Compiled tier-3: closure compiler for the hot matching loop
+# Compiled tier-3: JsonPath → straight-line Python source
 # --------------------------------------------------------------------------
 #
 # The tree-walking interpreter above stays the SEMANTIC ORACLE (tests
-# fuzz the compiled form against it); the decode/dispatch hot path uses
-# this compiler instead. Two wins over interpreting per record:
-# per-step isinstance dispatch happens once at compile time (each AST
-# node becomes a specialized closure), and the step chain is LAZY
-# (generators), so a match short-circuits at the first resolved node
-# instead of materializing the full node list — `match` only ever asks
-# "is the result non-empty". Measured ~1.5× on the dispatch rule bank
-# (the residual cost is the recursive-descent walk itself, which a
-# non-match must complete regardless of representation).
-
-_SENT = object()
+# fuzz the compiled form against it); the decode/dispatch hot path runs
+# the code this compiler generates instead. Each step becomes a nested
+# loop or test over local variables, so a record pays no per-step
+# dispatch, no generator frames and no node lists: the first resolved
+# node returns True. ``$..name`` is a stack walk over the document's
+# containers; filters whose relative path is definite (child / index
+# steps) are inlined into the loop that feeds them, other filter terms
+# become one helper function each.
 
 
-def _c_steps(steps: tuple):
-    """steps -> fn(nodes: iterable) -> iterator of resolved nodes."""
-    fns = [_c_step(s) for s in steps]
-
-    def run(nodes):
-        for fn in fns:
-            nodes = fn(nodes)
-        return iter(nodes)
-
-    return run
+def _eq_literal(v, literal) -> bool:
+    """``==`` as _compare defines it, for literals without a fast form."""
+    return _compare(v, "==", literal)
 
 
-def _c_step(step):
-    if isinstance(step, Child):
-        name = step.name
+class _Source:
+    """Lines, helper functions, fresh names and bound constants of one
+    compiled predicate."""
 
-        def fn(nodes):
-            for n in nodes:
-                if isinstance(n, dict) and name in n:
-                    yield n[name]
+    def __init__(self):
+        self.lines: list[str] = []
+        self.helpers: list[str] = []
+        self.consts: dict[str, Any] = {"_eq": _eq_literal}
+        self.n = 0
 
-        return fn
-    if isinstance(step, RecursiveChild):
-        name = step.name
+    def name(self, prefix: str) -> str:
+        self.n += 1
+        return f"{prefix}{self.n}"
 
-        def fn(nodes):
-            for n in nodes:
-                for d in _descendants(n):
-                    if isinstance(d, dict) and name in d:
-                        yield d[name]
+    def const(self, value) -> str:
+        name = self.name("c")
+        self.consts[name] = value
+        return name
 
-        return fn
-    if isinstance(step, Index):
-        i = step.i
-
-        def fn(nodes):
-            for n in nodes:
-                if isinstance(n, list):
-                    try:
-                        yield n[i]
-                    except IndexError:
-                        pass
-
-        return fn
-    if isinstance(step, Slice):
-        start, stop = step.start, step.stop
-
-        def fn(nodes):
-            for n in nodes:
-                if isinstance(n, list):
-                    yield from n[start:stop]
-
-        return fn
-    if isinstance(step, Union):
-        indices = step.indices
-
-        def fn(nodes):
-            for n in nodes:
-                if isinstance(n, list):
-                    for i in indices:
-                        try:
-                            yield n[i]
-                        except IndexError:
-                            pass
-
-        return fn
-    if isinstance(step, Wildcard):
-
-        def fn(nodes):
-            for n in nodes:
-                if isinstance(n, list):
-                    yield from n
-                elif isinstance(n, dict):
-                    yield from n.values()
-
-        return fn
-    if isinstance(step, Filter):
-        pred = _c_filter(step.expr)
-
-        def fn(nodes):
-            for n in nodes:
-                if isinstance(n, list):
-                    for e in n:
-                        if pred(e):
-                            yield e
-                elif pred(n):
-                    yield n
-
-        return fn
-    raise JsonPathError(f"unknown step {step!r}")  # pragma: no cover
+    def emit(self, ind: int, line: str) -> None:
+        self.lines.append("    " * ind + line)
 
 
-def _c_filter(expr):
-    if isinstance(expr, Or):
-        preds = [_c_filter(t) for t in expr.terms]
-        if len(preds) == 1:
-            return preds[0]
-        return lambda n: any(p(n) for p in preds)
-    if isinstance(expr, And):
-        preds = [_c_filter(t) for t in expr.terms]
-        if len(preds) == 1:
-            return preds[0]
-        return lambda n: all(p(n) for p in preds)
-    if isinstance(expr, Not):
-        p = _c_filter(expr.term)
-        return lambda n: not p(n)
-    if isinstance(expr, Exists):
-        sub = _c_steps(expr.rel)
-        return lambda n: next(sub((n,)), _SENT) is not _SENT
-    if isinstance(expr, Cmp):
-        sub = _c_steps(expr.rel)
-        cmp = _c_compare(expr.op, expr.literal)
+def _order(op: str, literal):
+    """``v <op> literal``; a type mismatch is False, as in _compare."""
+    import operator
 
-        def pred(n):
-            v = next(sub((n,)), _SENT)
-            if v is _SENT:
-                return False
-            return cmp(v)
+    o = {"<": operator.lt, "<=": operator.le, ">": operator.gt, ">=": operator.ge}[op]
 
-        return pred
-    raise JsonPathError(f"unknown filter term {expr!r}")
+    def cmp(v):
+        try:
+            return o(v, literal)
+        except TypeError:
+            return False
+
+    return cmp
 
 
-def _c_compare(op: str, literal):
-    """One closure per comparison — literal type checks, regex
-    compilation, and membership fan-out all hoisted to compile time.
-    Each branch mirrors _compare exactly (fuzz-pinned)."""
+def _cmp_expr(src: _Source, v: str, op: str, literal) -> str:
+    """Python expression for ``v <op> literal`` with _compare's meaning."""
     if op == "in":
-        eqs = [_c_compare("==", x) for x in literal]
-        return lambda v: any(e(v) for e in eqs)
+        return "(" + " or ".join(_cmp_expr(src, v, "==", x) for x in literal) + ")"
+    if op == "!=":
+        return f"not {_cmp_expr(src, v, '==', literal)}"
+    if op == "==":
+        if isinstance(literal, str):
+            return f"{v} == {literal!r}"
+        if isinstance(literal, (int, float)) and not isinstance(literal, bool):
+            return f"({v} == {literal!r} and not isinstance({v}, bool))"
+        return f"_eq({v}, {src.const(literal)})"
     if op == "=~":
         import re
 
         pattern, flags = literal
-        f = re.IGNORECASE if "i" in flags else 0
         try:
-            rx = re.compile(pattern, f)
+            rx = re.compile(pattern, re.IGNORECASE if "i" in flags else 0)
         except re.error:
-            return lambda v: False
-        return lambda v: isinstance(v, str) and rx.fullmatch(v) is not None
-    if op == "==":
-        lt = type(literal)
-        lit_is_bool = isinstance(literal, bool)
-        return lambda v: (
-            v == literal and type(v) in (lt, int, float)
-        ) or (isinstance(v, bool) == lit_is_bool and v == literal)
-    if op == "!=":
-        eq = _c_compare("==", literal)
-        return lambda v: not eq(v)
+            return "False"
+        return f"(isinstance({v}, str) and {src.const(rx)}.fullmatch({v}) is not None)"
     if op in ("<", "<=", ">", ">="):
-        import operator
-
-        o = {
-            "<": operator.lt,
-            "<=": operator.le,
-            ">": operator.gt,
-            ">=": operator.ge,
-        }[op]
-
-        def cmp(v):
-            try:
-                return o(v, literal)
-            except TypeError:
-                return False
-
-        return cmp
+        return f"{src.const(_order(op, literal))}({v})"
     raise JsonPathError(f"unknown op {op}")
+
+
+def _definite(rel: tuple) -> bool:
+    return all(isinstance(s, (Child, Index)) for s in rel)
+
+
+def _emit_steps(src: _Source, steps: tuple, node: str, ind: int, leaf) -> None:
+    """Code that walks ``steps`` from the node in variable ``node`` and
+    runs ``leaf(var, ind)`` at every resolved node, in the interpreter's
+    node order."""
+    if not steps:
+        leaf(node, ind)
+        return
+    step, rest = steps[0], steps[1:]
+    out = src.name("n")
+    if isinstance(step, Child):
+        src.emit(ind, f"if isinstance({node}, dict) and {step.name!r} in {node}:")
+        src.emit(ind + 1, f"{out} = {node}[{step.name!r}]")
+        _emit_steps(src, rest, out, ind + 1, leaf)
+    elif isinstance(step, Index):
+        bound = f"len({node}) > {step.i}" if step.i >= 0 else f"len({node}) >= {-step.i}"
+        src.emit(ind, f"if isinstance({node}, list) and {bound}:")
+        src.emit(ind + 1, f"{out} = {node}[{step.i}]")
+        _emit_steps(src, rest, out, ind + 1, leaf)
+    elif isinstance(step, Slice):
+        src.emit(ind, f"if isinstance({node}, list):")
+        src.emit(ind + 1, f"for {out} in {node}[{step.start!r}:{step.stop!r}]:")
+        _emit_steps(src, rest, out, ind + 2, leaf)
+    elif isinstance(step, Union):
+        i = src.name("i")
+        src.emit(ind, f"if isinstance({node}, list):")
+        src.emit(ind + 1, f"for {i} in {step.indices!r}:")
+        src.emit(ind + 2, f"if -len({node}) <= {i} < len({node}):")
+        src.emit(ind + 3, f"{out} = {node}[{i}]")
+        _emit_steps(src, rest, out, ind + 3, leaf)
+    elif isinstance(step, Wildcard):
+        it = src.name("it")
+        src.emit(ind, f"if isinstance({node}, list): {it} = {node}")
+        src.emit(ind, f"elif isinstance({node}, dict): {it} = {node}.values()")
+        src.emit(ind, f"else: {it} = ()")
+        src.emit(ind, f"for {out} in {it}:")
+        _emit_steps(src, rest, out, ind + 1, leaf)
+    elif isinstance(step, RecursiveChild):
+        # every descendant of the node, itself included; a match anywhere
+        # returns, so the walk's order does not matter (``..`` never
+        # appears inside a filter, where the first node decides)
+        stack, d = src.name("st"), src.name("d")
+        src.emit(ind, f"{stack} = [{node}]")
+        src.emit(ind, f"while {stack}:")
+        src.emit(ind + 1, f"{d} = {stack}.pop()")
+        src.emit(ind + 1, f"if isinstance({d}, dict):")
+        src.emit(ind + 2, f"if {step.name!r} in {d}:")
+        src.emit(ind + 3, f"{out} = {d}[{step.name!r}]")
+        _emit_steps(src, rest, out, ind + 3, leaf)
+        src.emit(ind + 2, f"{stack}.extend({d}.values())")
+        src.emit(ind + 1, f"elif isinstance({d}, list):")
+        src.emit(ind + 2, f"{stack}.extend({d})")
+    elif isinstance(step, Filter):
+        src.emit(ind, f"for {out} in ({node} if isinstance({node}, list) else ({node},)):")
+        _emit_filter(src, step.expr, out, ind + 1, lambda i: _emit_steps(src, rest, out, i, leaf))
+    else:  # pragma: no cover
+        raise JsonPathError(f"unknown step {step!r}")
+
+
+def _term(expr) -> object | None:
+    """The single Cmp/Exists an Or-of-And wrapper holds, if that is all."""
+    while isinstance(expr, (Or, And)) and len(expr.terms) == 1:
+        expr = expr.terms[0]
+    return expr if isinstance(expr, (Cmp, Exists)) else None
+
+
+def _emit_filter(src: _Source, expr, node: str, ind: int, body) -> None:
+    """Run ``body(ind)`` when the filter holds for ``node``."""
+    term = _term(expr)
+    if term is not None and _definite(term.rel):
+        # at most one node: inline its lookup, and the test on it
+        def leaf(v, i):
+            if isinstance(term, Cmp):
+                src.emit(i, f"if {_cmp_expr(src, v, term.op, term.literal)}:")
+                i += 1
+            body(i)
+
+        _emit_steps(src, term.rel, node, ind, leaf)
+        return
+    src.emit(ind, f"if {_filter_expr(src, expr, node)}:")
+    body(ind + 1)
+
+
+def _filter_expr(src: _Source, expr, node: str) -> str:
+    if isinstance(expr, Or):
+        return "(" + " or ".join(_filter_expr(src, t, node) for t in expr.terms) + ")"
+    if isinstance(expr, And):
+        return "(" + " and ".join(_filter_expr(src, t, node) for t in expr.terms) + ")"
+    if isinstance(expr, Not):
+        return f"(not {_filter_expr(src, expr.term, node)})"
+    if isinstance(expr, (Exists, Cmp)):
+        # a helper function: the first node the relative path reaches decides
+        fn = src.name("t")
+        outer, src.lines = src.lines, [f"def {fn}(n0):"]
+
+        def leaf(v, i):
+            test = _cmp_expr(src, v, expr.op, expr.literal) if isinstance(expr, Cmp) else "True"
+            src.emit(i, f"return {test}")
+
+        _emit_steps(src, expr.rel, "n0", 1, leaf)
+        src.emit(1, "return False")
+        src.helpers += src.lines
+        src.lines = outer
+        return f"{fn}({node})"
+    raise JsonPathError(f"unknown filter term {expr!r}")
+
+
+def predicate_source(path: str | tuple) -> tuple[str, dict]:
+    """The Python source of ``pred(obj) -> bool`` for ``path`` and the
+    constants it refers to. Evaluation errors make the predicate False."""
+    steps = parse(path) if isinstance(path, str) else path
+    src = _Source()
+    _emit_steps(src, steps, "obj", 2, lambda v, i: src.emit(i, "return True"))
+    text = src.helpers + ["def pred(obj):", "    try:"] + src.lines
+    text += ["    except Exception:", "        return False", "    return False"]
+    return "\n".join(text) + "\n", src.consts
 
 
 def compile_predicate(path: str | tuple):
@@ -696,16 +720,9 @@ def compile_predicate(path: str | tuple):
     per-record errors ⇒ False — TopologyProducer.kt:216-223). Parse/
     compile errors still raise, like parse(); only evaluation is
     error-absorbing."""
-    steps = parse(path) if isinstance(path, str) else path
-    run = _c_steps(steps)
-
-    def pred(obj) -> bool:
-        try:
-            return next(run((obj,)), _SENT) is not _SENT
-        except Exception:
-            return False
-
-    return pred
+    text, ns = predicate_source(path)
+    exec(compile(text, f"<jsonpath {path!r}>", "exec"), ns)
+    return ns["pred"]
 
 
 def match(json_text: str | None, path: str | tuple) -> bool:
@@ -739,6 +756,7 @@ def jsonpath_match_pandas_udf(path: str):
 
     @F.pandas_udf(T.BooleanType())
     def _match(s: pd.Series) -> pd.Series:
+        pyworker.prepare()
         return s.map(row)
 
     return _match
@@ -762,6 +780,8 @@ def jsonpath_match_many_pandas_udf(paths: list[str]):
 
     @F.pandas_udf(T.ArrayType(T.BooleanType()))
     def _match_many(s: pd.Series) -> pd.Series:
+        pyworker.prepare()
+
         def row(txt):
             if txt is None:
                 return [False] * n

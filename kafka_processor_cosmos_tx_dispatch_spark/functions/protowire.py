@@ -4,10 +4,11 @@ Re-implements the reference's tx-deserialization operator
 (/root/reference/src/main/kotlin/com/okp4/processor/cosmos/
 TopologyProducer.kt:86-96 and TxRaw.toTx() at :48-54) without compiled
 protobuf classes: a minimal, pure-Python reader of the protobuf wire
-format (varints, 64/32-bit, length-delimited — the full tag space),
-directed by hand-written decoders for the `cosmos.tx.v1beta1` message
-subset the reference routes on, plus the protobuf-JSON rendering
-conventions its predicates are written against (camelCase field names,
+format (varints, 64/32-bit, length-delimited — the full tag space) for
+re-encoding and descriptor parsing. Decoding renders the tx and every
+`Any` payload through the decoders functions/descriptors.py generates
+from the checked-in descriptor set, by the protobuf-JSON conventions the
+reference's predicates are written against (camelCase field names,
 `Any` as an `@type` key, 64-bit ints as strings, bytes as base64 —
 JsonFormat printer at TopologyProducer.kt:79-82).
 
@@ -23,7 +24,6 @@ functions/descriptors.py, no per-type code).
 
 from __future__ import annotations
 
-import base64
 from typing import Any
 
 __all__ = [
@@ -68,365 +68,97 @@ def encode_ld(field_no: int, data: bytes) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
+_MASK64 = (1 << 64) - 1
+
+
+def _vrest(buf: bytes, pos: int, b: int) -> tuple[int, int]:
+    """The rest of a varint whose first byte ``b`` (≥ 0x80) is read;
+    unmasked, so a length can never wrap to a small value."""
+    result = b & 0x7F
+    shift = 7
+    size = len(buf)
     while True:
-        if pos >= len(buf):
+        if pos >= size:
             raise DecodeError("truncated varint")
         b = buf[pos]
         pos += 1
         result |= (b & 0x7F) << shift
         if not b & 0x80:
-            # a 10-byte varint's final payload can push past 2**64 —
-            # wire format semantics are modulo 2**64 (standard readers
-            # truncate), so mask; otherwise int64 renders the untruncated
-            # value and diverges from JsonFormat on legal encodings
-            return result & ((1 << 64) - 1), pos
+            return result, pos
         shift += 7
         if shift > 63:
             raise DecodeError("varint too long")
 
 
-def parse_fields(buf: bytes) -> list[tuple[int, int, Any]]:
-    """(field_no, wire_type, raw_value) triples in wire order.
+def _wire_value(buf: bytes, pos: int, key: int):
+    """(value, pos) of one field of any wire type: int or bytes."""
+    if key < 8:
+        raise DecodeError("field number 0")
+    wt = key & 7
+    size = len(buf)
+    if wt == 0:
+        if pos >= size:
+            raise DecodeError("truncated varint")
+        b = buf[pos]
+        if b < 0x80:
+            return b, pos + 1
+        v, pos = _vrest(buf, pos + 1, b)
+        return v & _MASK64, pos
+    if wt == 1:
+        if pos + 8 > size:
+            raise DecodeError("truncated fixed64")
+        return int.from_bytes(buf[pos : pos + 8], "little"), pos + 8
+    if wt == 2:
+        if pos >= size:
+            raise DecodeError("truncated varint")
+        n = buf[pos]
+        pos += 1
+        if n >= 0x80:
+            n, pos = _vrest(buf, pos, n)
+        if pos + n > size:
+            raise DecodeError("truncated bytes field")
+        return buf[pos : pos + n], pos + n
+    if wt == 5:
+        if pos + 4 > size:
+            raise DecodeError("truncated fixed32")
+        return int.from_bytes(buf[pos : pos + 4], "little"), pos + 4
+    raise DecodeError(f"unsupported wire type {wt}")
 
-    This is the decode hot loop (every nested message re-enters it), so
-    the varint reads are inlined with a single-byte fast path — in
-    real transactions nearly all keys and lengths fit 7 bits, and the
-    function-call + tuple-return overhead of a helper per varint was
-    ~40% of end-to-end decode time in profile."""
-    out: list[tuple[int, int, Any]] = []
+
+def _fields(buf: bytes):
     pos = 0
     size = len(buf)
     while pos < size:
-        b = buf[pos]
+        key = buf[pos]
         pos += 1
-        if b < 0x80:  # 1-byte key (field ≤ 15, the common case)
-            key = b
-        else:
-            key = b & 0x7F
-            shift = 7
-            while True:
-                if pos >= size:
-                    raise DecodeError("truncated varint")
-                b = buf[pos]
-                pos += 1
-                key |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    key &= 0xFFFFFFFFFFFFFFFF
-                    break
-                shift += 7
-                if shift > 63:
-                    raise DecodeError("varint too long")
-        field_no = key >> 3
-        wire_type = key & 0x07
-        if field_no == 0:
-            raise DecodeError("field number 0")
-        if wire_type == 0:  # varint
-            if pos >= size:
-                raise DecodeError("truncated varint")
-            b = buf[pos]
-            pos += 1
-            if b < 0x80:
-                val = b
-            else:
-                val = b & 0x7F
-                shift = 7
-                while True:
-                    if pos >= size:
-                        raise DecodeError("truncated varint")
-                    b = buf[pos]
-                    pos += 1
-                    val |= (b & 0x7F) << shift
-                    if not b & 0x80:
-                        val &= 0xFFFFFFFFFFFFFFFF
-                        break
-                    shift += 7
-                    if shift > 63:
-                        raise DecodeError("varint too long")
-        elif wire_type == 1:  # 64-bit
-            if pos + 8 > size:
-                raise DecodeError("truncated fixed64")
-            val = int.from_bytes(buf[pos : pos + 8], "little")
-            pos += 8
-        elif wire_type == 2:  # length-delimited
-            if pos >= size:
-                raise DecodeError("truncated varint")
-            b = buf[pos]
-            pos += 1
-            if b < 0x80:
-                n = b
-            else:
-                n = b & 0x7F
-                shift = 7
-                while True:
-                    if pos >= size:
-                        raise DecodeError("truncated varint")
-                    b = buf[pos]
-                    pos += 1
-                    n |= (b & 0x7F) << shift
-                    if not b & 0x80:
-                        break
-                    shift += 7
-                    if shift > 63:
-                        raise DecodeError("varint too long")
-            if pos + n > size:
-                raise DecodeError("truncated bytes field")
-            val = buf[pos : pos + n]
-            pos += n
-        elif wire_type == 5:  # 32-bit
-            if pos + 4 > size:
-                raise DecodeError("truncated fixed32")
-            val = int.from_bytes(buf[pos : pos + 4], "little")
-            pos += 4
-        else:  # groups (3/4) and reserved types are invalid here
-            raise DecodeError(f"unsupported wire type {wire_type}")
-        out.append((field_no, wire_type, val))
-    return out
+        if key > 127:
+            key, pos = _vrest(buf, pos, key)
+            key &= _MASK64
+        val, pos = _wire_value(buf, pos, key)
+        yield key >> 3, key & 7, val
+
+
+def parse_fields(buf: bytes) -> list[tuple[int, int, Any]]:
+    """(field_no, wire_type, raw_value) triples in wire order — the
+    re-encoding path's reader."""
+    return list(_fields(buf))
 
 
 def parse_group(buf: bytes) -> dict[int, list[Any]]:
-    """field_no → [values in wire order], fused parse+group.
-
-    The decode tier calls this once per (nested) message — dict-of-lists
-    is exactly what every decoder consumes, so building it directly
-    saves the tuple-per-field + second grouping pass of
-    parse_fields→setdefault (~12% of end-to-end decode in profile).
-    parse_fields stays the API for consumers that need wire ORDER and
-    wire TYPES (re-encoding, unknown-field handling)."""
+    """field_no → [values in wire order]. Reads the descriptor set and,
+    when re-encoding, the TxRaw envelope (decoding goes through the
+    generated decoders, functions/descriptors.py)."""
     out: dict[int, list[Any]] = {}
-    pos = 0
-    size = len(buf)
-    while pos < size:
-        b = buf[pos]
-        pos += 1
-        if b < 0x80:  # 1-byte key (field ≤ 15, the common case)
-            key = b
-        else:
-            key = b & 0x7F
-            shift = 7
-            while True:
-                if pos >= size:
-                    raise DecodeError("truncated varint")
-                b = buf[pos]
-                pos += 1
-                key |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    key &= 0xFFFFFFFFFFFFFFFF
-                    break
-                shift += 7
-                if shift > 63:
-                    raise DecodeError("varint too long")
-        field_no = key >> 3
-        wire_type = key & 0x07
-        if field_no == 0:
-            raise DecodeError("field number 0")
-        if wire_type == 0:  # varint
-            if pos >= size:
-                raise DecodeError("truncated varint")
-            b = buf[pos]
-            pos += 1
-            if b < 0x80:
-                val = b
-            else:
-                val = b & 0x7F
-                shift = 7
-                while True:
-                    if pos >= size:
-                        raise DecodeError("truncated varint")
-                    b = buf[pos]
-                    pos += 1
-                    val |= (b & 0x7F) << shift
-                    if not b & 0x80:
-                        val &= 0xFFFFFFFFFFFFFFFF
-                        break
-                    shift += 7
-                    if shift > 63:
-                        raise DecodeError("varint too long")
-        elif wire_type == 1:  # 64-bit
-            if pos + 8 > size:
-                raise DecodeError("truncated fixed64")
-            val = int.from_bytes(buf[pos : pos + 8], "little")
-            pos += 8
-        elif wire_type == 2:  # length-delimited
-            if pos >= size:
-                raise DecodeError("truncated varint")
-            b = buf[pos]
-            pos += 1
-            if b < 0x80:
-                n = b
-            else:
-                n = b & 0x7F
-                shift = 7
-                while True:
-                    if pos >= size:
-                        raise DecodeError("truncated varint")
-                    b = buf[pos]
-                    pos += 1
-                    n |= (b & 0x7F) << shift
-                    if not b & 0x80:
-                        break
-                    shift += 7
-                    if shift > 63:
-                        raise DecodeError("varint too long")
-            if pos + n > size:
-                raise DecodeError("truncated bytes field")
-            val = buf[pos : pos + n]
-            pos += n
-        elif wire_type == 5:  # 32-bit
-            if pos + 4 > size:
-                raise DecodeError("truncated fixed32")
-            val = int.from_bytes(buf[pos : pos + 4], "little")
-            pos += 4
-        else:  # groups (3/4) and reserved types are invalid here
-            raise DecodeError(f"unsupported wire type {wire_type}")
-        lst = out.get(field_no)
+    for no, _wt, val in _fields(buf):
+        lst = out.get(no)
         if lst is None:
-            out[field_no] = [val]
+            out[no] = [val]
         else:
             lst.append(val)
     return out
 
 
-_group = parse_group
-
-
-def _str(v: Any) -> str:
-    if not isinstance(v, bytes):
-        raise DecodeError("expected length-delimited field")
-    try:
-        return v.decode("utf-8")
-    except UnicodeDecodeError as e:
-        raise DecodeError("invalid utf-8 string") from e
-
-
-def _b64(v: Any) -> str:
-    if not isinstance(v, bytes):
-        raise DecodeError("expected length-delimited field")
-    return base64.b64encode(v).decode("ascii")
-
-
-# ---------------------------------------------------------------------------
-# cosmos.tx.v1beta1 message decoders (field numbers per the public protos)
-# ---------------------------------------------------------------------------
-
-
-def _decode_coin(buf: bytes) -> dict:
-    # proto3 default-omission: an empty string is the field's DEFAULT, and
-    # JsonFormat omits default-valued scalars even when they are
-    # explicitly length-delimited on the wire (no field presence for
-    # proto3 scalars) — caught by the round-trip property test.
-    f = _group(buf)
-    out: dict = {}
-    if 1 in f and _str(f[1][-1]):
-        out["denom"] = _str(f[1][-1])
-    if 2 in f and _str(f[2][-1]):
-        out["amount"] = _str(f[2][-1])
-    return out
-
-
-_REGISTRY = None
-
-
-def _registry():
-    """Cached handle to descriptors.default_registry() — the import must
-    stay lazy (descriptors imports protowire at module top, so top-level
-    would be circular), but resolving the module + calling the accessor
-    per decoded Any measured ~1µs/record of pure lookup overhead in the
-    hot decode loop. The registry itself is the same process singleton."""
-    global _REGISTRY
-    if _REGISTRY is None:
-        from .descriptors import default_registry
-
-        _REGISTRY = default_registry()
-    return _REGISTRY
-
-
-def _decode_any(buf: bytes, strict_any: bool = False) -> dict:
-    """Decode a google.protobuf.Any.
-
-    UNKNOWN-TYPE POLICY (pinned in tests/test_decode.py): the reference's
-    JsonFormat printer throws on a type absent from its registry, and that
-    call sits OUTSIDE the deserialization Result capture
-    (TopologyProducer.kt:213-215 prints inside onSuccess with no
-    runCatching) — i.e. an unknown type CRASHES the reference's stream
-    task rather than routing anywhere. A distributed engine must not die
-    on one record, so:
-
-    - default (strict_any=False): render the payload opaque
-      ({"@type": url, "value": base64}) — the pipeline stays total and
-      predicates can still match on @type;
-    - strict_any=True: raise DecodeError, which the decode stage's
-      failure capture turns into error-topic routing — the nearest
-      RECOVERABLE analog of the reference's throw.
-
-    Payload rendering is table-driven: any message type present in the
-    checked-in FileDescriptorSet renders through the generic walker in
-    functions/descriptors.py (≅ the reference's resolve-every-compiled-
-    type registry, ProtoTypeRegistry.kt:16-31) — registering a new type
-    means regenerating the descriptor set, not writing a decoder.
-    """
-    f = _group(buf)
-    type_url = _str(f[1][-1]) if 1 in f else ""
-    value = f[2][-1] if 2 in f else b""
-    if not isinstance(value, bytes):
-        raise DecodeError("Any.value must be bytes")
-    registry = _registry()
-    fqn = type_url.rsplit("/", 1)[-1]
-    if registry.has_message(fqn):
-        out = {"@type": type_url}
-        out.update(registry.decode(fqn, value, strict_any))
-        return out
-    if strict_any:
-        raise DecodeError(f"unregistered Any type: {type_url!r}")
-    return {"@type": type_url, "value": _b64(value)}
-
-
-def _decode_tx_body(buf: bytes, strict_any: bool = False) -> dict:
-    f = _group(buf)
-    out: dict = {}
-    if 1 in f:
-        out["messages"] = [_decode_any(m, strict_any) for m in f[1]]
-    if 2 in f:
-        memo = _str(f[2][-1])
-        if memo:
-            out["memo"] = memo
-    if 3 in f:
-        th = f[3][-1]
-        if th:
-            out["timeoutHeight"] = str(th)  # 64-bit ints render as strings
-    return out
-
-
-def _decode_fee(buf: bytes) -> dict:
-    f = _group(buf)
-    out: dict = {}
-    if 1 in f:
-        out["amount"] = [_decode_coin(c) for c in f[1]]
-    if 2 in f and f[2][-1]:
-        out["gasLimit"] = str(f[2][-1])
-    return out
-
-
-def _decode_signer_info(buf: bytes, strict_any: bool = False) -> dict:
-    f = _group(buf)
-    out: dict = {}
-    if 1 in f:
-        out["publicKey"] = _decode_any(f[1][-1], strict_any)
-    if 3 in f and f[3][-1]:
-        out["sequence"] = str(f[3][-1])
-    return out
-
-
-def _decode_auth_info(buf: bytes, strict_any: bool = False) -> dict:
-    f = _group(buf)
-    out: dict = {}
-    if 1 in f:
-        out["signerInfos"] = [_decode_signer_info(s, strict_any) for s in f[1]]
-    if 2 in f:
-        out["fee"] = _decode_fee(f[2][-1])
-    return out
+_TX = "cosmos.tx.v1beta1.Tx"
 
 
 def _bytes(v: Any, what: str) -> bytes:
@@ -440,31 +172,32 @@ def _bytes(v: Any, what: str) -> bytes:
     return v
 
 
+def _registry():
+    # lazy: descriptors imports this module
+    from .descriptors import default_registry
+
+    return default_registry()
+
+
+_DECODERS: dict[bool, Any] = {}  # strict_any → the default registry's decoders
+
+
 def decode_tx(raw: bytes, strict_any: bool = False) -> dict:
-    """bytes → Tx dict: parse TxRaw{1: body_bytes, 2: auth_info_bytes,
-    3: repeated signatures}, then the nested TxBody/AuthInfo — exactly
-    `TxRaw.toTx()` (TopologyProducer.kt:48-54). Raises DecodeError on any
-    malformed input (the error-branch trigger); no other exception type
-    escapes — the decode stage's failure-capture catches DecodeError
-    only, so anything else would crash the job instead of routing the
-    record to the error topic. `strict_any` selects the unknown-Any
-    policy (see _decode_any)."""
+    """bytes → Tx dict — exactly `TxRaw.toTx()` (TopologyProducer.kt:48-54).
+    TxRaw{1: body_bytes, 2: auth_info_bytes, 3: repeated signatures} has
+    Tx's wire layout, so the generated `cosmos.tx.v1beta1.Tx` decoder
+    reads it directly; `body` and `authInfo` are always present, as
+    `toTx()` always sets them. Raises DecodeError on any malformed input
+    (the error-branch trigger); no other exception type escapes — the
+    decode stage's failure-capture catches DecodeError only, so anything
+    else would crash the job instead of routing the record to the error
+    topic. `strict_any` selects the unknown-Any policy (descriptors.py,
+    ``_any_source``)."""
+    types = _DECODERS.get(strict_any)
+    if types is None:
+        types = _DECODERS[strict_any] = _registry().decoders(strict_any)
     try:
-        f = _group(raw)
-        body = (
-            _decode_tx_body(_bytes(f[1][-1], "body_bytes"), strict_any)
-            if 1 in f
-            else {}
-        )
-        auth = (
-            _decode_auth_info(_bytes(f[2][-1], "auth_info_bytes"), strict_any)
-            if 2 in f
-            else {}
-        )
-        tx: dict = {"body": body, "authInfo": auth}
-        if 3 in f:
-            tx["signatures"] = [_b64(_bytes(s, "signature")) for s in f[3]]
-        return tx
+        return types[_TX](raw, {"body": {}, "authInfo": {}})
     except DecodeError:
         raise
     except Exception as e:  # malformed in a shape we didn't enumerate
@@ -495,7 +228,7 @@ def reencode_tx(raw: bytes, strict_any: bool = False) -> bytes:
     already decoded successfully."""
     reg = _registry()
     try:
-        f = _group(raw)
+        f = parse_group(raw)
         body = reg.reencode(
             "cosmos.tx.v1beta1.TxBody",
             _bytes(f[1][-1], "body_bytes") if 1 in f else b"",

@@ -324,6 +324,7 @@ def value_for_topic(
     if reserialize:
         from pyspark.sql.functions import pandas_udf
 
+        from ..functions import pyworker
         from ..functions.protowire import DecodeError, reencode_tx
 
         def _one(b) -> bytes | None:
@@ -336,6 +337,7 @@ def value_for_topic(
 
         @pandas_udf("binary")
         def _reenc(col: pd.Series) -> pd.Series:
+            pyworker.prepare()
             return col.map(_one)
 
         rule_value = _reenc(raw.cast("binary"))

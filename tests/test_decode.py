@@ -200,8 +200,8 @@ def test_nested_any_recursion():
     """authz MsgExec carries `repeated Any msgs` and gov
     MsgSubmitProposal carries `Any content` — an Any inside an Any's
     payload. Every nesting level must resolve through the ONE registry
-    (protowire._decode_any routes descriptor-walker Any fields back to
-    itself), and an unknown type at ANY depth must follow the pinned
+    (every generated decoder renders its Any fields through the same
+    `_any`), and an unknown type at ANY depth must follow the pinned
     opaque/strict policy."""
     inner_send = _any(MSG_SEND_URL, _msg_send(OKP4_ADDR, "tesTo"))
     coin = _ld(1, b"uknow") + _ld(2, b"42")
@@ -531,11 +531,35 @@ def test_routing_on_non_msgsend_predicate(spark):
     assert got == [(1, "topic-staking"), (2, "dlq")]
 
 
+# tx_json must stay byte-identical to json.dumps(obj, separators=(",", ":"))
+# whatever encoder produces it: non-ASCII text escaped (é, U+2028), DEL
+# 0x7f and control characters escaped, 64-bit values rendered as strings
+TX_MEMO_UNICODE = _tx_raw(_ld(2, "café \u2028 ünïcode".encode()))
+TX_MEMO_CONTROL = _tx_raw(_ld(2, b"del\x7f nul\x00 tab\t nl\n bell\x07 esc\x1b"))
+TX_64BIT = _tx_raw(
+    _ld(1, _any(MSG_VOTE_URL, _varint(1 << 3) + _varint(2**64 - 1) + _ld(2, b"v")))
+    + _varint(3 << 3)
+    + _varint(2**63 + 1)
+)
+
+
 def test_golden_routing_end_to_end(spark):
-    df = spark.createDataFrame(
-        [(1, TX1), (2, TX2), (3, TX3), (4, TX_ERR)], "tx_id int, value binary"
-    )
+    inputs = [
+        (1, TX1),
+        (2, TX2),
+        (3, TX3),
+        (4, TX_ERR),
+        (5, TX_MEMO_UNICODE),
+        (6, TX_MEMO_CONTROL),
+        (7, TX_64BIT),
+    ]
+    df = spark.createDataFrame(inputs, "tx_id int, value binary")
     decoded = decode_tx_records(df)
+    tx_json = {r["tx_id"]: r["tx_json"] for r in decoded.collect()}
+    for tx_id, raw in inputs:
+        want = None if raw == TX_ERR else json.dumps(protowire.decode_tx(raw), separators=(",", ":"))
+        assert tx_json[tx_id] == want, tx_id
+    assert '"proposalId":"18446744073709551615"' in tx_json[7]
     routed = dsp.dispatch(
         decoded,
         RULES,
@@ -550,6 +574,9 @@ def test_golden_routing_end_to_end(spark):
         (2, "topic-2"),  # multicast
         (3, "dlq"),
         (4, "error"),
+        (5, "dlq"),
+        (6, "dlq"),
+        (7, "dlq"),
     ]
 
     valued = dsp.value_for_topic(
@@ -685,18 +712,16 @@ def test_descriptor_set_is_valid_protobuf(spark):
             assert names.index(d) < names.index(fname)
 
     # regeneration is deterministic and matches the checked-in bytes
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-        ),
+    tools = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
     )
+    sys.path.insert(0, tools)
     try:
         import gen_descriptor
 
         assert gen_descriptor.descriptor_set() == data
     finally:
-        sys.path.remove("/root/repo/tools")
+        sys.path.remove(tools)
 
     # tier probe: connector absent in this container → Python fallback
     assert dec.jvm_decode_available(spark) is False

@@ -378,8 +378,8 @@ class TestExtendedConstructs:
 
 
 class TestCompiledPredicateFuzz:
-    """The closure-compiled tier-3 (jp.compile_predicate — the decode/
-    dispatch hot path since r7) must agree with the tree-walking
+    """The compiled tier-3 (jp.compile_predicate, generated Python
+    source — the decode/dispatch hot path) must agree with the tree-walking
     interpreter (jp.evaluate / jp.match, the semantic oracle) on every
     record × predicate pair, including documents OUTSIDE the
     protobuf-JSON domain (explicit nulls, mixed types)."""
@@ -396,6 +396,17 @@ class TestCompiledPredicateFuzz:
             "$..messages[*].amount[0]",
             "$.body.messages[-1:]",
             "$.body[?(@.memo =~ /m[0-2]/i)]",
+            # the drain_wire bank's tier-3 shapes
+            "$..amount[?(@.denom == 'uknow')]",
+            "$..amount[?(@.denom == 'uosmo')]",
+            "$..messages[?(@.fromAddress == 'addr3')]",
+            "$..messages[?(@.validatorAddress == 'val1')]",
+            "$..msgs[?(@.toAddress == 'addr2')]",
+            "$.body.messages[?(@.value)]",
+            "$.body.messages[?(@.option in ['NO', 'NO_WITH_VETO'])]",
+            "$.body.messages[?(@.amount[0].amount in ['5', 5])]",
+            "$..messages[?(@.option in ['NO', 3])]",
+            "$.body.messages[?(@.option == 1)]",
         ]
         preds = [jp.compile_predicate(p) for p in battery]
         docs = [gen._random_tx(rng) for _ in range(200)]  # WITH nulls
@@ -406,6 +417,31 @@ class TestCompiledPredicateFuzz:
             {},
             {"body": {"messages": "not-a-list"}},
             {"body": [1, 2, {"messages": [{"fromAddress": "addr1"}]}]},
+        ]
+        # nested Any payloads: gov v1 MsgSubmitProposal.messages and
+        # authz MsgExec.msgs carry messages inside a message
+        for d in docs[:60]:
+            msgs = d.get("body", {}).get("messages") if isinstance(d.get("body"), dict) else None
+            if isinstance(msgs, list) and msgs:
+                inner = [dict(m, validatorAddress="val1", option="NO") for m in msgs if isinstance(m, dict)]
+                docs.append(
+                    {
+                        "body": {
+                            "messages": [
+                                {"@type": "/cosmos.gov.v1.MsgSubmitProposal", "messages": inner},
+                                {"@type": "/cosmos.authz.v1beta1.MsgExec", "msgs": msgs},
+                                {"@type": "/x.Opaque", "value": "AAE="},
+                            ]
+                        }
+                    }
+                )
+        docs += [
+            {"body": {"messages": [{"messages": [{"messages": [{"validatorAddress": "val1"}]}]}]}},
+            {"body": {"messages": [{"msgs": [{"msgs": {"toAddress": "addr2"}}]}]}},
+            {"amount": {"denom": "uosmo"}},
+            {"a": {"amount": [None, {"denom": "uosmo"}]}},
+            {"body": {"messages": [{"option": 3}, {"option": True}]}},
+            {"body": {"messages": [{"amount": [{"amount": 5.0}]}]}},
         ]
         for d in docs:
             txt = json.dumps(d)

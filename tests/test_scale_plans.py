@@ -425,8 +425,23 @@ def test_exact_substring_prunes_singletons_before_self_join(spark, sf_dir):
     from kafka_processor_cosmos_tx_dispatch_spark import queries as q
 
     plan = _plan(q.queries()["dedup_exact_substring"](spark, sf_dir))
-    # the count-distinct prune exists…
-    assert "count(distinct doc_id" in plan or "count(doc_id" in plan, plan
+    # The prune is two stacked windows over one shingle shuffle: a
+    # sum(first-in-doc flag) window (= distinct-doc count) and a filter
+    # 2 ≤ df ≤ 64 on it. Read top-down, each join input must show the
+    # filter, then that window, then the shingle generation below it.
+    lines = plan.splitlines()
+    join = next(
+        i for i, ln in enumerate(lines) if "Join [shingle" in ln
+    )
+    marks = []
+    for ln in lines[join + 1 :]:
+        if "Filter" in ln and ">= 2" in ln and "<= 64" in ln:
+            marks.append("prune")
+        elif "Window [sum(" in ln and "windowspecdefinition(shingle" in ln:
+            marks.append("df")
+        elif "Generate posexplode" in ln:
+            marks.append("shingles")
+    assert marks == ["prune", "df", "shingles"] * 2, plan
     # …and no cartesian/BNLJ sneaks into the pair stage
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

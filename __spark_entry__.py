@@ -1,11 +1,11 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry points of the PySpark build.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash). The real implementations live in
-``kafka_processor_cosmos_tx_dispatch_spark/queries.py``; this module is a
-thin adapter.
+``entry(spark)`` routes the sf0.001 events table through the dispatch
+engine and counts records per destination. ``queries()`` maps each
+dispatch-family query name to its plan builder, and ``oracle_sql()``
+maps the same names to DuckDB SQL over the same tables
+(tools/check_oracle.py compares the two). The implementations live in
+``kafka_processor_cosmos_tx_dispatch_spark/queries/``.
 """
 
 from __future__ import annotations

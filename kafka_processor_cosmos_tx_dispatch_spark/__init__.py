@@ -1,26 +1,24 @@
-"""PySpark-native analytics + dispatch engine.
+"""PySpark tx router.
 
-A from-scratch re-expression of the capabilities of the reference
-``okp4/kafka-processor-cosmos-tx-dispatch`` (a Kafka Streams router that
-dispatches Cosmos-SDK transactions to topics by JsonPath rules — see
-/root/reference/src/main/kotlin/com/okp4/processor/cosmos/TopologyProducer.kt)
-as an idiomatic Spark engine:
-
-- declarative DataFrame/SQL plans (Catalyst optimizes; we don't hand-schedule)
-- Structured Streaming for the unbounded dispatch path
-- a relational operator surface (joins/aggs/windows/set-ops/functions)
-- LLM-data-pipeline operators (dedup, similarity search, text analysis,
-  multimodal column plumbing) designed for 100 TB scale.
+A re-expression of the reference ``okp4/kafka-processor-cosmos-tx-dispatch``
+(a Kafka Streams router that dispatches Cosmos-SDK transactions to topics
+by JsonPath rules, TopologyProducer.kt) as one stateless Spark plan:
+decode ``TxRaw`` bytes, evaluate an ordered rule bank once per record,
+and multicast each record to its rule topics, to the DLQ or to the error
+topic. The same plan builder runs in batch and in Structured Streaming.
 
 Package layout:
-    session      — SparkSession factory tuned for the target scale
+    session      — SparkSession factory
     rules        — YAML dispatch-rule loader (≅ TxsDispatch.kt)
-    functions/   — column-level function libraries (jsonpath, text, vectors)
-    operators/   — composite operators (dispatch, dedup, similarity, multimodal)
-    sources/     — table/stream source builders (parquet tables, kafka)
-    streaming/   — structured-streaming dispatch + windowed/stateful ops
-    plans/       — plan-inspection helpers (pushdown/broadcast assertions)
-    queries.py   — the registry of named queries + DuckDB oracles
+    functions/   — jsonpath (rule compiler, three tiers), protowire and
+                   descriptors (wire reader, generated decoders), pyworker
+                   (Python-worker set-up), exprs (let-binding)
+    operators/   — decode (TxRaw → tx_json/error) and dispatch (rule
+                   matches → rule_idx/topic → per-topic value)
+    sources/     — Kafka reader/writer builders, the synthetic tx source
+                   and the parquet table loader
+    streaming/   — file-stream source and foreachBatch router
+    queries/     — the dispatch-family queries with their DuckDB oracles
 """
 
 __version__ = "0.1.0"

@@ -7,7 +7,7 @@ TypeRegistry (/root/reference/src/main/kotlin/com/okp4/processor/cosmos/
 ProtoTypeRegistry.kt:16-31) — i.e. it can render ANY type it was compiled
 with, with zero per-type code. This module is the same idea for an engine
 with no compiled classes: the checked-in FileDescriptorSet
-(resources/cosmos_tx.desc, also consumed by the JVM decode tier) carries
+(resources/cosmos_tx.desc) carries
 the full schema, and ONE generated decoder per message type renders it
 by the protobuf-JSON conventions (camelCase/json_name keys, 64-bit ints
 as strings, bytes as base64, enums by name with unknown numbers as ints,

@@ -24,7 +24,7 @@ This module provides three tiers, fastest first:
 3. ``compile_predicate(path)`` — the full grammar compiled to
    straight-line Python source (``predicate_source``), run on the decoded
    object inside the decode UDF or on parsed JSON in
-   ``jsonpath_match_pandas_udf``, for constructs outside the native
+   ``jsonpath_match_many_pandas_udf``, for constructs outside the native
    subset. ``evaluate``/``match`` interpret the same grammar and are the
    reference the compiled form is tested against. Semantics identical:
    errors ⇒ non-match.
@@ -738,28 +738,6 @@ def match(json_text: str | None, path: str | tuple) -> bool:
         return bool(evaluate(json.loads(json_text), path))
     except Exception:
         return False
-
-
-def jsonpath_match_pandas_udf(path: str):
-    """Arrow-batched predicate over a JSON-string column (tier-3 fallback)."""
-    import json
-
-    pred = compile_predicate(path)  # compile once; fail fast on bad rules
-
-    def row(txt):
-        if txt is None:
-            return False
-        try:
-            return pred(json.loads(txt))
-        except Exception:
-            return False
-
-    @F.pandas_udf(T.BooleanType())
-    def _match(s: pd.Series) -> pd.Series:
-        pyworker.prepare()
-        return s.map(row)
-
-    return _match
 
 
 def jsonpath_match_many_pandas_udf(paths: list[str]):

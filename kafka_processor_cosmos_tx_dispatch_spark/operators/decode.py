@@ -28,7 +28,7 @@ import os
 
 import orjson
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..functions import protowire, pyworker
 
@@ -68,88 +68,15 @@ def load_descriptor_set() -> bytes:
         return fh.read()
 
 
-_JVM_PROBE: dict[int, bool] = {}  # keyed per SparkSession — two sessions
-# in one process (one plain, one with --packages spark-protobuf) must not
-# share a verdict
-
-
-def jvm_decode_available(spark: SparkSession) -> bool:
-    """True when the spark-protobuf connector is loaded in this session's
-    JVM (it is NOT bundled with pyspark; clusters add it via --packages
-    org.apache.spark:spark-protobuf_2.13). Probed once per session.
-
-    Install attempt record (offline container): pyspark 4.1.2 ships the
-    `org.apache.spark.sql.protobuf.functions` shim (loadable via
-    Class.forName) but not the connector module, so a real decode fails
-    at analysis with PROTOBUF_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE; no
-    spark-protobuf jar exists anywhere on the image (the only protobuf
-    classes are the connect-server's shaded runtime, which the SQL layer
-    can't use) and --packages needs network access. The probe therefore
-    correctly returns False here; on any cluster with the one-line
-    --packages addition the same probe flips the decode tier to JVM."""
-    key = id(spark)
-    if key not in _JVM_PROBE:
-        try:
-            # Class presence is NOT enough: pyspark ships the function
-            # shim while the actual codec (shaded protobuf-java) may be
-            # absent, failing only at analysis with
-            # PROTOBUF_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE. Probe with a
-            # real one-row decode of an empty TxRaw.
-            from pyspark.sql.protobuf.functions import from_protobuf
-
-            probe = spark.createDataFrame([(b"",)], "v binary").select(
-                from_protobuf(
-                    "v",
-                    "cosmos.tx.v1beta1.TxRaw",
-                    binaryDescriptorSet=load_descriptor_set(),
-                )
-            )
-            probe.collect()
-            _JVM_PROBE[key] = True
-        except Exception:
-            _JVM_PROBE[key] = False
-    return _JVM_PROBE[key]
-
-
-def decode_txraw_jvm(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """JVM-side decode tier: `from_protobuf` with the checked-in
-    descriptor set parses TxRaw (and nested Tx/TxBody) entirely inside
-    whole-stage codegen — no Python in the decode stage, matching the
-    reference's in-JVM execution tier.
-
-    Adds `txraw` (struct<body_bytes, auth_info_bytes, signatures>) and
-    `txbody` (struct<messages: array<Any>, memo, timeout_height>). Note
-    the JVM tier's limits: google.protobuf.Any payloads stay opaque
-    (type_url + bytes — spark-protobuf has no dynamic Any expansion), so
-    predicates on @type work natively but nested msg fields still need
-    the Python tier's registry. Raises when the connector is absent —
-    call jvm_decode_available() first or use decode_tx_records (auto)."""
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    desc = load_descriptor_set()
-    with_raw = df.withColumn(
-        "txraw",
-        from_protobuf(value_col, "cosmos.tx.v1beta1.TxRaw", binaryDescriptorSet=desc),
-    )
-    return with_raw.withColumn(
-        "txbody",
-        from_protobuf(
-            "txraw.body_bytes", "cosmos.tx.v1beta1.TxBody", binaryDescriptorSet=desc
-        ),
-    )
-
-
 def decode_tx_records(
     df: DataFrame,
     value_col: str = "value",
     match_paths: list[str] | None = None,
     tier3_col: str = "__tier3",
 ) -> DataFrame:
-    """Arrow-batched decode with Result-style failure capture (wire
-    parsing is inherently per-record Python when the JVM tier is absent;
-    on clusters with spark-protobuf, decode_txraw_jvm handles the
-    structural decode codegen-side — the tx_json + error column contract
-    is identical either way).
+    """Arrow-batched decode with Result-style failure capture: wire
+    parsing runs per record in Python, in the generated decoders
+    (functions/descriptors.py).
 
     Shape: a SCALAR pandas_udf over ONLY the value column returning
     struct<tx_json, error> — passthrough columns (key, offsets, any

@@ -45,34 +45,6 @@ from ..rules import ERROR, UNFILTERED, DispatchRule
 DEFAULT_DLQ_TOPIC = "dlq"
 
 
-def rule_predicate(
-    rule: DispatchRule,
-    json_col: Column | None = None,
-    struct_col: Column | None = None,
-    struct_type: T.DataType | None = None,
-) -> Column:
-    """Compile one rule's JsonPath to a boolean Column, fastest tier first.
-
-    1. typed struct column → native Catalyst expression (codegen);
-    2. JSON string + definite path → get_json_object (JVM-side);
-    3. anything else → Arrow-batched Pandas UDF with the full evaluator.
-
-    A predicate that doesn't parse at all compiles to constant False
-    (never matches) with a warning — reference parity: rule evaluation
-    errors are swallowed as non-matches, never failures
-    (TopologyProducer.kt:221-223), so one bad rule must not take down
-    the topology.
-    """
-    compiled = _predicate_jvm(rule, json_col, struct_col, struct_type)
-    if compiled is not None:
-        return compiled
-    if json_col is None:
-        raise ValueError(
-            f"rule {rule.name!r} needs a json_col or a typed struct_col"
-        )
-    return jp.jsonpath_match_pandas_udf(rule.predicate)(json_col)
-
-
 def _predicate_jvm(
     rule: DispatchRule,
     json_col: Column | None,
@@ -80,10 +52,8 @@ def _predicate_jvm(
     struct_type: T.DataType | None,
 ) -> Column | None:
     """Tiers 1-2 only (plus the never-match compile for unparseable
-    predicates); None means the rule needs the tier-3 Python evaluator —
-    the caller decides whether to fall back per-rule
-    (rule_predicate) or batch every tier-3 rule into one fused UDF
-    (with_matches)."""
+    predicates); None means the rule needs the tier-3 Python evaluator,
+    which with_matches batches into one fused UDF for every such rule."""
     try:
         jp.parse(rule.predicate)
     except jp.JsonPathError as e:

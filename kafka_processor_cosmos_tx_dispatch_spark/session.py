@@ -43,8 +43,8 @@ def get_spark(
       down. Locally ≈ cores; on a cluster 2-3× total cores.
     - ``spark.sql.files.maxPartitionBytes`` stays at the 128 MB default so
       scan tasks fit executor memory regardless of input size.
-    - Arrow on: the few Pandas-UDF operators (full-JsonPath fallback,
-      multimodal decode) move batches, not rows.
+    - Arrow on: the Pandas-UDF operators (tx decode, Python-tier
+      JsonPath) move batches, not rows.
     """
     cpus = default_parallelism()
     if master is None:

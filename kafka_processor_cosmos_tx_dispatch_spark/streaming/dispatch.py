@@ -42,22 +42,6 @@ def file_stream_reader(
     return reader.load(path)
 
 
-def streaming_dispatch(
-    stream: DataFrame,
-    rules: list[DispatchRule],
-    json_col: str | None = None,
-    struct_col: str | None = None,
-    error_col: str | None = None,
-    dlq_topic: str = dsp.DEFAULT_DLQ_TOPIC,
-    error_topic: str | None = None,
-) -> DataFrame:
-    """Identical semantics to batch dispatch — same function, streaming
-    input. Stateless ⇒ append-mode safe, no watermark required."""
-    return dsp.dispatch(
-        stream, rules, json_col, struct_col, error_col, dlq_topic, error_topic
-    )
-
-
 def foreach_batch_router(
     rules: list[DispatchRule],
     write_destination: Callable[[DataFrame, str, int], None],

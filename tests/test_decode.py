@@ -596,11 +596,9 @@ def test_golden_routing_end_to_end(spark):
 
 
 def test_descriptor_set_is_valid_protobuf(spark):
-    """The checked-in descriptor set (JVM decode tier input) must be
-    structurally valid protobuf wire and regenerate byte-identically from
-    tools/gen_descriptor.py. The spark-protobuf connector isn't bundled in
-    this container (jvm_decode_available → False), so the JVM tier is
-    exercised structurally; decode_tx_records stays the working path."""
+    """The checked-in descriptor set (the generated decoders' input) must
+    be structurally valid protobuf wire and regenerate byte-identically
+    from tools/gen_descriptor.py."""
     import os
     import sys
 
@@ -687,8 +685,8 @@ def test_descriptor_set_is_valid_protobuf(spark):
     # protobuf-java (spark-protobuf's binaryDescriptorSet path) resolves
     # each file's type_names against its DECLARED transitive deps only —
     # a globally-resolvable but undeclared reference throws
-    # DescriptorValidationException for the whole set and silently
-    # disables the JVM decode tier (ADVICE r11). Assert the closure.
+    # DescriptorValidationException for the whole set, so any JVM decode
+    # built on it would fail (ADVICE r11). Assert the closure.
     def transitive(fname: str, seen: set) -> set:
         for d in per_file[fname]["deps"]:
             if d not in seen:
@@ -722,9 +720,6 @@ def test_descriptor_set_is_valid_protobuf(spark):
         assert gen_descriptor.descriptor_set() == data
     finally:
         sys.path.remove(tools)
-
-    # tier probe: connector absent in this container → Python fallback
-    assert dec.jvm_decode_available(spark) is False
 
 
 def test_error_records_dropped_without_error_topic(spark):

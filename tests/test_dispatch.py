@@ -229,3 +229,38 @@ def test_observed_metrics_counts(tx_df, rules):
     assert m["n_rule_matches"] == m["n_output_rows"] - m["n_unfiltered"] - m["n_decode_errors"]
     assert m["n_decode_errors"] == 1  # txError fixture
     assert m["n_unfiltered"] == 1  # tx3 fixture
+
+
+def test_entry_counts_match_direct_dispatch(spark):
+    """__spark_entry__.entry() runs, and its per-(topic, rule_name)
+    counts equal a direct dispatch of the same sf0.001 events."""
+    import __spark_entry__ as entrymod
+    from kafka_processor_cosmos_tx_dispatch_spark.queries._core import (
+        EVENT_RULES,
+        _events_record,
+    )
+
+    got = {
+        (r["topic"], r["rule_name"]): r["n_records"]
+        for r in entrymod.entry(spark).collect()
+    }
+    ev = _events_record(spark, entrymod.SMOKE_SF_DIR)
+    want = {
+        (r["topic"], r["rule_name"]): r["n"]
+        for r in dsp.dispatch(ev, EVENT_RULES, struct_col="rec")
+        .groupBy("topic", "rule_name")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert got == want
+    assert sum(got.values()) >= ev.count()  # every event lands somewhere
+    assert ("dlq", None) in got
+
+
+def test_load_table_normalizes_timestamps(spark, sf_dir):
+    """The events parquet stores ts as TIMESTAMP(NANOS); load_table must
+    surface it as a Spark timestamp for the dispatch queries."""
+    from kafka_processor_cosmos_tx_dispatch_spark.sources.tables import load_table
+
+    ev = load_table(spark, sf_dir, "events")
+    assert dict(ev.dtypes)["ts"] == "timestamp"

@@ -38,10 +38,10 @@ def test_gate_spark_protobuf_jar_still_absent():
     )
     if any("spark-protobuf" in j for j in jars):
         pytest.fail(
-            f"spark-protobuf jar present ({jars}) — activate the "
-            "dormant JVM decode tier (operators/decode.py "
-            "decode_txraw_jvm) and add the tier-parity test vs the "
-            "Arrow decoder"
+            f"spark-protobuf jar present ({jars}) — a JVM decode tier "
+            "(from_protobuf over resources/cosmos_tx.desc) can now be "
+            "built; if one is added, test its parity with the Arrow "
+            "decoder"
         )
 
 
@@ -54,7 +54,6 @@ def test_gate_google_protobuf_pip_still_absent():
         spec = None
     if spec is not None:
         pytest.fail(
-            "the protobuf pip package is importable — un-skip the "
-            "transformWithStateInPandas twins (streaming/stateful.py; "
-            "tests/test_streaming.py importorskip sites)"
+            "the protobuf pip package is importable — "
+            "transformWithStateInPandas can now run in this environment"
         )

@@ -202,12 +202,12 @@ class TestJsonStringTier:
 
     def test_pandas_udf_fallback(self, spark):
         df = spark.createDataFrame(
-            [(1, json.dumps(TX1)), (2, json.dumps(TX2)), (3, "broken {")],
+            [(1, json.dumps(TX1)), (2, json.dumps(TX2)), (3, "broken {"), (4, None)],
             "id long, j string",
         )
-        pred = jp.jsonpath_match_pandas_udf(P_FROM)
+        pred = jp.jsonpath_match_many_pandas_udf([P_FROM])
         got = {r["id"]: r["m"] for r in df.select("id", pred("j").alias("m")).collect()}
-        assert got == {1: False, 2: True, 3: False}
+        assert got == {1: [False], 2: [True], 3: [False], 4: [False]}
 
 
 class TestTierConsistencyFuzz:

@@ -2,12 +2,9 @@
 protoc: a FileDescriptorSet is itself a protobuf message, so we encode it
 directly with a minimal wire writer. The output
 (kafka_processor_cosmos_tx_dispatch_spark/resources/cosmos_tx.desc) is
-checked in and consumed by the JVM decode tier
-(operators/decode.py:decode_txraw_jvm via spark-protobuf's
-``from_protobuf(binaryDescriptorSet=...)``) on clusters where the
-spark-protobuf connector is loaded — the reference decodes with compiled
-classes in-JVM (TopologyProducer.kt:86-96); this descriptor set is the
-Spark-native equivalent of those compiled classes.
+checked in; functions/descriptors.py generates the Python decoders of
+the decode UDF from it. The reference decodes with compiled classes
+(TopologyProducer.kt:86-96); this descriptor set stands in for them.
 
 Schema source: the public cosmos-sdk protos (cosmos/tx/v1beta1/tx.proto,
 cosmos/base/v1beta1/coin.proto, cosmos/bank/v1beta1/tx.proto, ...) and

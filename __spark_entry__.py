@@ -2,8 +2,8 @@
 
 ``entry(spark)`` routes the sf0.001 events table through the dispatch
 engine and counts records per destination. ``queries()`` maps each
-dispatch-family query name to its plan builder, and ``oracle_sql()``
-maps the same names to DuckDB SQL over the same tables
+registered query name to its plan builder, and ``oracle_sql()`` maps
+the same names to DuckDB SQL over the same tables
 (tools/check_oracle.py compares the two). The implementations live in
 ``kafka_processor_cosmos_tx_dispatch_spark/queries/``.
 """

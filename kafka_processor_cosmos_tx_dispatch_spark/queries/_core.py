@@ -1,16 +1,49 @@
 """Shared toolkit of the queries package: the register() machinery,
-the query and oracle registries, and the event views and rule banks the
-dispatch queries route."""
+the oracle/query registries, the driver-ordering logic
+(_interleaved/_driver_history/queries/oracle_sql), and every
+module-level helper and constant the per-family query modules use.
+Split from the queries.py monolith (r13, VERDICT r12 #3) with code
+moved VERBATIM in original order; family modules import this
+toolkit explicitly and the package __init__ re-merges namespaces."""
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import pandas as pd
+
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators import dispatch as dsp
 from ..rules import DispatchRule
 from ..sources.tables import load_table
+
+# --------------------------------------------------------------------------
+# helpers
+# --------------------------------------------------------------------------
+
+DEC_PRICE = "decimal(12,2)"  # extendedprice/totalprice ≤ ~600k, 2dp
+DEC_SMALL = "decimal(4,2)"  # discount/tax/quantity-scale fractions
+DEC_QTY = "decimal(12,2)"
+
+
+def _dsum(col: F.Column, cast: str = DEC_PRICE) -> F.Column:
+    """Exact decimal sum, surfaced as double."""
+    return F.sum(col.cast(cast)).cast("double")
+
+
+def _revenue() -> F.Column:
+    """l_extendedprice * (1 - l_discount), decimal-exact."""
+    return F.col("l_extendedprice").cast(DEC_PRICE) * (
+        F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast(DEC_SMALL)
+    )
+
+
+_REV_SQL = (
+    "CAST(l_extendedprice AS DECIMAL(12,2))"
+    " * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))"
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
@@ -41,28 +74,25 @@ EVENT_RULES = [
 ]
 
 
-def _event_rec() -> Column:
-    """The typed record view of an event the JsonPath rules compile
-    against natively (zero Python in the hot path — the whole rule bank
-    is one codegen'd projection).
+def _events_record(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events with a typed record view the JsonPath rules compile against
+    natively (zero Python in the hot path — the whole rule bank is one
+    codegen'd projection).
 
     The single JSON field is extracted with get_json_object, which
     measured 3.4× faster than from_json on this shape (5M rows: 1.6s vs
     5.4s end-to-end dispatch) — from_json pays a full parser+struct
     conversion per record. Rule of thumb: ≤2 fields → get_json_object
     per field; wide/nested JSON → one from_json."""
-    return F.struct(
+    ev = load_table(spark, sf_dir, "events")
+    rec = F.struct(
         F.col("event_type"),
         F.col("value"),
         F.struct(
             F.get_json_object("props", "$.k").cast("int").alias("k")
         ).alias("props"),
     )
-
-
-def _events_record(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events with the `rec` view (_event_rec)."""
-    return load_table(spark, sf_dir, "events").withColumn("rec", _event_rec())
+    return ev.withColumn("rec", rec)
 
 
 # Rule bank that FORCES the tier-3 Arrow evaluator: evaluated against a
@@ -80,6 +110,399 @@ TIER3_RULES = [
 ]
 
 
+# --------------------------------------------------------------------------
+# Window functions
+# --------------------------------------------------------------------------
+
+
+_TIERS = [  # (name, lo, hi) — deliberately unaligned with the 25-bucket grid
+    ("bronze", 0.0, 40.0),
+    ("silver", 40.0, 100.0),
+    ("gold", 100.0, 150.0),
+    ("platinum", 150.0, 200.0),
+]
+_TIER_SQL = ", ".join(f"('{n}', {lo}, {hi})" for n, lo, hi in _TIERS)
+
+
+def _sql_query(sql: str, *tables: str):
+    """A query expressed through the SQL API surface (views + spark.sql)."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        for t in tables:
+            load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+        return spark.sql(sql)
+
+    return fn
+
+
+_EXISTS_SQL = """
+    SELECT o_orderkey, o_totalprice FROM orders o
+    WHERE EXISTS (SELECT 1 FROM lineitem l
+                  WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 45)
+"""
+# Correlated EXISTS — Catalyst rewrites to a left-semi join; integer-exact.
+
+_SCALAR_SUBQ_SQL = """
+    SELECT n_name,
+           (SELECT COUNT(*) FROM customer c
+            WHERE c.c_nationkey = n.n_nationkey) AS n_cust
+    FROM nation n
+"""
+# Correlated scalar subquery — rewritten to an outer-join + aggregate.
+
+_IN_SUBQ_SQL = """
+    SELECT s_suppkey, s_name FROM supplier
+    WHERE s_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 1)
+"""
+
+_RECURSIVE_SQL = """
+    WITH RECURSIVE r(n, f) AS (
+      SELECT 1, CAST(1 AS BIGINT)
+      UNION ALL SELECT n + 1, f * (n + 1) FROM r WHERE n < 12
+    ) SELECT n, f FROM r
+"""
+
+
+# --------------------------------------------------------------------------
+# LLM-data-pipeline operators: dedup / similarity / text analysis /
+# multimodal (operators/{dedup,similarity,multimodal}.py)
+# --------------------------------------------------------------------------
+
+# Shared DuckDB fragments — these MUST stay formula-identical to
+# functions/text.py and functions/vectors.py.
+_D_TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
+_D_SHINGLES = (
+    "CASE WHEN len(t) >= 3 THEN list_transform(generate_series(1, len(t)-2),"
+    " i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
+    " ELSE CAST([] AS VARCHAR[]) END"
+)
+_D_NORM = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
+_MINHASH_K, _MINHASH_BANDS, _LSH_MAX_BUCKET = 12, 3, 64
+_FIXED = "1048576.0"  # 2^20, functions/vectors.py FIXED_SCALE
+
+
+def _minhash_sig_sql(src: str = "documents") -> str:
+    aggs = ",\n           ".join(
+        f"min(h1 + {s} * h2) AS h{s}" for s in range(_MINHASH_K)
+    )
+    r = _MINHASH_K // _MINHASH_BANDS
+    bands = ", ".join(
+        "md5(concat_ws('|', "
+        + ", ".join(f"h{b * r + i}" for i in range(r))
+        + "))"
+        for b in range(_MINHASH_BANDS)
+    )
+    return f"""
+    toks AS (SELECT doc_id, {_D_TOKS} AS t FROM {src}),
+    sh AS (SELECT DISTINCT doc_id, unnest({_D_SHINGLES}) AS s FROM toks),
+    hs AS (SELECT doc_id,
+                  ('0x' || substring(md5(s), 1, 15))::BIGINT AS h1,
+                  ('0x' || substring(md5(s), 17, 13))::BIGINT AS h2 FROM sh),
+    sig AS (SELECT doc_id, {aggs} FROM hs GROUP BY doc_id),
+    banded AS (SELECT DISTINCT doc_id, band_key FROM (
+      SELECT doc_id, unnest([{bands}]) AS band_key FROM sig)),
+    ok AS (SELECT band_key FROM banded GROUP BY band_key
+           HAVING COUNT(*) <= {_LSH_MAX_BUCKET})
+    """
+
+
+def _pr_iter(k: int, prev: str) -> str:
+    """One unrolled PageRank iteration as a DuckDB CTE."""
+    return f"""
+    i{k} AS (
+      SELECT n_.node,
+             tp.t + COALESCE(SUM((85 * p.r) // (100 * od.d)), 0) AS r
+      FROM nodes n_
+      CROSS JOIN tp
+      LEFT JOIN edges e ON e.dst = n_.node
+      LEFT JOIN {prev} p ON p.node = e.src
+      LEFT JOIN outd od ON od.src = e.src
+      GROUP BY n_.node, tp.t)"""
+
+
+def _wpr_iter(k: int, prev: str) -> str:
+    """One unrolled WEIGHTED PageRank iteration: mass splits along
+    out-edges proportionally to integer edge weight."""
+    return f"""
+    i{k} AS (
+      SELECT n_.node,
+             tp.t + COALESCE(SUM((85 * p.r * e.w) // (100 * ow.wt)), 0) AS r
+      FROM nodes n_
+      CROSS JOIN tp
+      LEFT JOIN edges e ON e.dst = n_.node
+      LEFT JOIN {prev} p ON p.node = e.src
+      LEFT JOIN outw ow ON ow.src = e.src
+      GROUP BY n_.node, tp.t)"""
+
+
+def _ppr_iter(k: int, prev: str) -> str:
+    """One unrolled personalized-PageRank iteration: teleport mass goes
+    to SEED nodes only; everything else matches _pr_iter."""
+    return f"""
+    i{k} AS (
+      SELECT n_.node,
+             CASE WHEN sd.node IS NOT NULL
+                  THEN 150000000000 // ns.ns ELSE 0 END
+               + COALESCE(SUM((85 * p.r) // (100 * od.d)), 0) AS r
+      FROM nodes n_
+      CROSS JOIN ns
+      LEFT JOIN seeds sd ON sd.node = n_.node
+      LEFT JOIN edges e ON e.dst = n_.node
+      LEFT JOIN {prev} p ON p.node = e.src
+      LEFT JOIN outd od ON od.src = e.src
+      GROUP BY n_.node, ns.ns, sd.node)"""
+
+
+_HITS_SCALE = 1_000_000_000  # operators/graph.py HITS_SCALE
+
+
+def _hits_iter(k: int, prev: str) -> str:
+    """One unrolled HITS round as DuckDB CTEs: authority then hub, each
+    sum-normalized to SCALE with int64 floor division."""
+    return f"""
+    ar{k} AS (
+      SELECT n_.node, COALESCE(SUM(h.h), 0) AS a
+      FROM nodes n_
+      LEFT JOIN edges e ON e.dst = n_.node
+      LEFT JOIN {prev} h ON h.node = e.src
+      GROUP BY n_.node),
+    at{k} AS (SELECT SUM(a) AS t FROM ar{k}),
+    a{k} AS (SELECT node, (a * {_HITS_SCALE}) // t AS a
+             FROM ar{k} CROSS JOIN at{k}),
+    hr{k} AS (
+      SELECT n_.node, COALESCE(SUM(a.a), 0) AS h
+      FROM nodes n_
+      LEFT JOIN edges e ON e.src = n_.node
+      LEFT JOIN a{k} a ON a.node = e.dst
+      GROUP BY n_.node),
+    ht{k} AS (SELECT SUM(h) AS t FROM hr{k}),
+    h{k} AS (SELECT node, (h * {_HITS_SCALE}) // t AS h
+             FROM hr{k} CROSS JOIN ht{k})"""
+
+
+def _pr_iter_dangling(k: int, prev: str) -> str:
+    """One unrolled dangling-mass PageRank iteration as DuckDB CTEs:
+    dm{k} = the uniform share of rank mass held by sink nodes under
+    {prev}, added to every node's teleport term."""
+    return f"""
+    dm{k} AS (SELECT (85 * COALESCE(
+                 (SELECT SUM(p.r) FROM {prev} p JOIN dang USING (node)), 0))
+               // (100 * (SELECT n FROM nn)) AS dmt),
+    i{k} AS (
+      SELECT n_.node,
+             tp.t + dm{k}.dmt
+                  + COALESCE(SUM((85 * p.r) // (100 * od.d)), 0) AS r
+      FROM nodes n_
+      CROSS JOIN tp
+      CROSS JOIN dm{k}
+      LEFT JOIN edges e ON e.dst = n_.node
+      LEFT JOIN {prev} p ON p.node = e.src
+      LEFT JOIN outd od ON od.src = e.src
+      GROUP BY n_.node, tp.t, dm{k}.dmt)"""
+
+
+_IVF_CELLS = 8
+
+# The embeddings table's dimensionality is part of the registered-query
+# contract: every sim/dedup oracle above and below hard-codes it in SQL
+# (`i // 64`, `generate_series(0, k * 64 - 1)`, the 32+32 Hamming word
+# split, the 4×16 PQ subspace slices). Passing it to the operators
+# skips their fallback one-row schema probe — a ~0.26 s driver job per
+# query invocation, pure overhead given the constant is already baked
+# into each query's oracle. Operators keep the probe for generic
+# callers; if the fixture ever changed dims, the oracle SQL would have
+# to change in lockstep anyway and the gate would catch a mismatch.
+_EMB_DIMS = 64
+
+
+def _km_assign_sql(cent: str, out: str) -> str:
+    """One Lloyd assignment as a DuckDB CTE: nearest centroid by exact
+    integer squared L2 (|v|² − 2·v·c + |c|²), ties → lowest centroid."""
+    dist = (
+        "CAST(list_dot_product(v.qv, v.qv) AS BIGINT)"
+        " - 2 * CAST(list_dot_product(v.qv, ct.cv) AS BIGINT)"
+        " + CAST(list_dot_product(ct.cv, ct.cv) AS BIGINT)"
+    )
+    return f"""
+    {out} AS (
+      SELECT vec_id, qv, c AS cluster, dist_sq FROM (
+        SELECT v.vec_id, v.qv, ct.c, {dist} AS dist_sq,
+               row_number() OVER (PARTITION BY v.vec_id
+                                  ORDER BY {dist} ASC, ct.c ASC) AS rn
+        FROM q v CROSS JOIN {cent} ct) WHERE rn = 1)"""
+
+
+def _km_update_sql(assign: str, prev_cent: str, out: str) -> str:
+    """One Lloyd centroid update as DuckDB CTEs: per-(cluster, dim)
+    integer floor-div mean over offset-shifted components (+40000 keeps
+    the numerator non-negative, so floor and truncating division agree);
+    empty clusters keep the previous centroid."""
+    return f"""
+    {out}_s AS (
+      SELECT cluster, d, SUM(qv[d + 1] + 40000) AS s, COUNT(*) AS n
+      FROM {assign} CROSS JOIN unnest(generate_series(0, 63)) AS t(d)
+      GROUP BY cluster, d),
+    {out} AS (
+      SELECT p.c, COALESCE(u.cv, p.cv) AS cv
+      FROM {prev_cent} p LEFT JOIN (
+        SELECT cluster AS c, list(s // n - 40000 ORDER BY d) AS cv
+        FROM {out}_s GROUP BY cluster) u USING (c))"""
+
+
+def _sim_topk_ivf_multiprobe_body(emb: DataFrame) -> DataFrame:
+    from ..operators.similarity import ivf_topk
+
+    return ivf_topk(
+        emb.filter(F.col("vec_id") < 10),
+        emb,
+        n_centroids=_IVF_CELLS,
+        k=5,
+        n_probe=2,
+        dims=_EMB_DIMS,
+    )
+
+
+def _simhash_sql() -> str:
+    votes = ",\n             ".join(
+        f"SUM(CASE WHEN (h32 >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS v{j}"
+        for j in range(32)
+    )
+    bits = " + ".join(f"CASE WHEN v{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(32))
+    return f"""
+    toks AS (SELECT doc_id, unnest({_D_TOKS}) AS tok FROM documents),
+    h AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h32 FROM toks),
+    votes AS (SELECT doc_id, {votes} FROM h GROUP BY doc_id),
+    sig AS (SELECT doc_id, CAST({bits} AS BIGINT) AS simhash FROM votes)
+    """
+
+
+# ---- similarity search ----------------------------------------------------
+
+_D_FLAT = f"""
+    flat AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
+                    unnest(embedding) AS v
+             FROM embeddings),
+    norms AS (SELECT vec_id,
+                SUM(CAST(floor(CAST(v AS DOUBLE)*CAST(v AS DOUBLE)*{_FIXED})
+                    AS BIGINT)) AS n
+              FROM flat GROUP BY vec_id)
+"""
+
+
+def _lsh_bucket_sql(n_planes: int = 4, dims: int = 64) -> str:
+    """Bucket id per vec — mirrors functions/vectors.py lsh_bucket."""
+    return f"""
+    planes AS (
+      SELECT p, d,
+        ((CAST(1103515245 AS BIGINT) * (p*{dims} + d) + 12345) % 2147483648)
+          / 2147483648.0 - 0.5 AS pv
+      FROM (SELECT unnest(generate_series(0, {n_planes - 1})) AS p),
+           (SELECT unnest(generate_series(0, {dims - 1})) AS d)),
+    projs AS (
+      SELECT f.vec_id, pl.p,
+        SUM(CAST(floor(CAST(f.v AS DOUBLE) * pl.pv * {_FIXED}) AS BIGINT)) AS proj
+      FROM flat f JOIN planes pl ON pl.d = f.pos - 1
+      GROUP BY 1, 2),
+    buckets AS (
+      SELECT vec_id,
+        SUM(CASE WHEN proj >= 0 THEN (1 << p) ELSE 0 END) AS bucket
+      FROM projs GROUP BY vec_id)
+    """
+
+
+def _kcenter_step(i: int) -> str:
+    """One unrolled k-center greedy step as DuckDB CTEs: pick the
+    smallest-penalty untaken vector (ties → min vec_id), then fold
+    cos(·, pick) into every penalty with GREATEST — the incremental
+    identity pen_i(c) = max(pen_{i-1}(c), cos(c, pick_i))."""
+    prev = f"st{i - 1}"
+    picked_prev = f"picked{i - 1}"
+    not_taken = (
+        f"WHERE vec_id NOT IN (SELECT vid FROM {picked_prev})"
+        if i > 1
+        else ""
+    )
+    picked_def = (
+        f"SELECT vid FROM {picked_prev} UNION ALL SELECT vid FROM p{i}"
+        if i > 1
+        else f"SELECT vid FROM p{i}"
+    )
+    return f"""
+    p{i} AS MATERIALIZED (SELECT vec_id AS vid, pen AS ppen FROM {prev}
+             {not_taken}
+             ORDER BY pen ASC, vec_id ASC LIMIT 1),
+    picked{i} AS ({picked_def}),
+    d{i} AS MATERIALIZED (
+      SELECT f.vec_id,
+             SUM(CAST(floor(CAST(f.v AS DOUBLE)*CAST(g.v AS DOUBLE)*{_FIXED})
+                 AS BIGINT)) AS d
+      FROM flat f CROSS JOIN p{i}
+      JOIN flat g ON g.pos = f.pos AND g.vec_id = p{i}.vid
+      GROUP BY f.vec_id),
+    st{i} AS MATERIALIZED (
+      SELECT s.vec_id,
+             GREATEST(s.pen,
+               (d{i}.d / {_FIXED})
+                 / sqrt((na.n / {_FIXED}) * (nb.n / {_FIXED}))) AS pen
+      FROM {prev} s
+      JOIN d{i} ON d{i}.vec_id = s.vec_id
+      JOIN norms na ON na.vec_id = s.vec_id
+      CROSS JOIN p{i}
+      JOIN norms nb ON nb.vec_id = p{i}.vid)"""
+
+
+def _mmr_step(k: int) -> str:
+    """One unrolled MMR greedy step as DuckDB CTEs: penalty = max sim to
+    the selected-so-far set, score = 0.75·rel − 0.25·penalty, argmax per
+    query with cid tiebreak. λ = 0.75 on purpose: both 0.75 and 0.25 are
+    exact dyadic doubles, so the λ-arithmetic is bit-identical in every
+    engine (0.7/0.3 would round differently from 1−λ)."""
+    prev_sel = f"sel{k - 1}"
+    return f"""
+    pen{k} AS (
+      SELECT p.query_id, p.c1, MAX(p.sim) AS pen
+      FROM pair p JOIN {prev_sel} s
+        ON p.query_id = s.query_id AND p.c2 = s.cid
+      GROUP BY p.query_id, p.c1),
+    s{k}_sc AS (
+      SELECT c.query_id, c.neighbor_id AS cid,
+             0.75 * c.rel - 0.25 * p.pen AS score
+      FROM cand c JOIN pen{k} p
+        ON p.query_id = c.query_id AND p.c1 = c.neighbor_id
+      WHERE NOT EXISTS (SELECT 1 FROM {prev_sel} s
+                        WHERE s.query_id = c.query_id
+                          AND s.cid = c.neighbor_id)),
+    s{k} AS (
+      SELECT query_id, cid, score, {k} AS position FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                 ORDER BY score DESC, cid) AS rn
+        FROM s{k}_sc) WHERE rn = 1),
+    sel{k} AS (SELECT query_id, cid FROM {prev_sel}
+               UNION ALL SELECT query_id, cid FROM s{k})"""
+
+
+# ---- text analysis --------------------------------------------------------
+
+_SW = {  # must stay identical to functions/text.py STOPWORDS
+    "en": "['the','of','and','to','in','a','is','that','it','was']",
+    "es": "['el','la','de','que','y','en','un','una','es','los']",
+    "de": "['der','die','das','und','ist','von','mit','den','ein','zu']",
+    "fr": "['le','les','des','et','est','dans','une','du','au','pour']",
+}
+
+
+_FILL_BUDGET = 5000  # global token budget for the fill query
+
+
+_EPOCHS = {  # per-lang epoch factor as exact rational (num, den)
+    "en": (5, 2),  # 2.5 epochs
+    "de": (3, 2),  # 1.5
+    "fr": (1, 1),  # 1.0
+    "es": (1, 2),  # 0.5 — deterministic half subsample
+    "zh": (2, 1),  # 2.0
+}
+
+
 # ---- streaming (run to completion, then checked like any batch query) -----
 
 _EVENTS_PHYSICAL_SCHEMA = (
@@ -87,6 +510,7 @@ _EVENTS_PHYSICAL_SCHEMA = (
     "value double, props string"
 )  # ts read as raw int64 — nanos or micros since epoch depending on the
 # harness generation's physical type (see _events_stream)
+
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,9 +552,489 @@ def _run_stream_to_table(df: DataFrame, prefix: str, mode: str) -> DataFrame:
     return df.sparkSession.table(name)
 
 
+_VAD_TH = 9850  # mean-square-per-sample activity threshold (~median)
+
+
+_SCENE_CUT_TH = 192  # |Δ byte-sum| above this = cut (~p92 of deltas)
+
+
+def _phash_block_sql(b: int) -> str:
+    """One 16-bit block signature over the TEXT (ASCII ⇒ char == byte
+    offsets, asserted by the query): md5 of the b-th of 8 equal slices."""
+    return (
+        f"substring(md5(substring(text, 1 + {b} * ((length(text) + 7) // 8),"
+        f" (length(text) + 7) // 8)), 1, 4)"
+    )
+
+
+_QM_WEIGHT_SQL = "('0x' || substr(md5(f), 1, 12))::BIGINT % 2001 - 1000"
+_QM_BIGRAMS_SQL = (
+    "CASE WHEN len(t) >= 2 THEN list_transform(generate_series(1, len(t)-1),"
+    " i -> concat_ws(' ', t[i], t[i+1]))"
+    " ELSE CAST([] AS VARCHAR[]) END"
+)
+
+
+# PQ index construction + ADC scoring as relational CTEs — shared by
+# the pure-PQ top-k oracle and the coarse->fine rerank oracle below.
+_PQ_CTES = """
+    cent AS (
+      SELECT i // 16 AS cid, list(
+               ((1103515245 * (7919 + i) + 12345) % 2147483648) % 2001 - 1000
+               ORDER BY i) AS cv
+      FROM unnest(generate_series(0, 64 * 16 - 1)) AS t(i)
+      GROUP BY 1),
+    q AS (
+      SELECT vec_id,
+             list_transform(embedding,
+               x -> CAST(floor(CAST(x AS DOUBLE) * 1024.0) AS BIGINT)) AS qv
+      FROM embeddings),
+    sub AS (
+      SELECT vec_id, m, qv[m * 16 + 1 : m * 16 + 16] AS sv
+      FROM q CROSS JOIN unnest(generate_series(0, 3)) AS t(m)),
+    dists AS (
+      SELECT s.vec_id, s.m, c.cid,
+             CAST(list_dot_product(s.sv, s.sv) AS BIGINT)
+               - 2 * CAST(list_dot_product(s.sv, c.cv) AS BIGINT)
+               + CAST(list_dot_product(c.cv, c.cv) AS BIGINT) AS dist
+      FROM sub s JOIN cent c ON c.cid // 16 = s.m),
+    enc AS (
+      SELECT vec_id, m, cid % 16 AS code FROM (
+        SELECT vec_id, m, cid,
+               ROW_NUMBER() OVER (PARTITION BY vec_id, m
+                                  ORDER BY dist ASC, cid ASC) AS rn
+        FROM dists) WHERE rn = 1),
+    scored AS (
+      SELECT qs.vec_id AS query_id, e.vec_id AS neighbor_id,
+             CAST(SUM(CAST(list_dot_product(qs.sv, qs.sv) AS BIGINT)
+                 - 2 * CAST(list_dot_product(qs.sv, c.cv) AS BIGINT)
+                 + CAST(list_dot_product(c.cv, c.cv) AS BIGINT))
+               AS BIGINT) AS adc_dist
+      FROM sub qs
+      JOIN enc e ON qs.m = e.m AND qs.vec_id <> e.vec_id
+      JOIN cent c ON c.cid = e.m * 16 + e.code
+      WHERE qs.vec_id < 10
+      GROUP BY 1, 2)"""
+
+
+def _kcore_round(r: int, k: int) -> str:
+    """One unrolled peel: degrees on e{r-1}, keep deg>=k, restrict."""
+    return f"""
+    d{r} AS (SELECT node, COUNT(*) AS d FROM (
+               SELECT s1 AS node FROM e{r - 1}
+               UNION ALL SELECT s2 FROM e{r - 1}) GROUP BY 1),
+    k{r} AS (SELECT node FROM d{r} WHERE d >= {k}),
+    e{r} AS (SELECT e.s1, e.s2 FROM e{r - 1} e
+             JOIN k{r} a ON e.s1 = a.node
+             JOIN k{r} b ON e.s2 = b.node)"""
+
+
+def _lp_round(k: int, prev: str) -> str:
+    """One unrolled min-label-propagation round as a DuckDB CTE: each
+    node takes the min of its own label and its neighbors' labels."""
+    return f"""
+    l{k} AS (
+      SELECT p.node,
+             LEAST(p.lab, COALESCE(MIN(p2.lab), p.lab)) AS lab
+      FROM {prev} p
+      LEFT JOIN edges e ON e.src = p.node
+      LEFT JOIN {prev} p2 ON p2.node = e.dst
+      GROUP BY p.node, p.lab)"""
+
+
+# Ordered BPE merge table (word chars + </w> terminator). Symbols are
+# DELIMITER-WRAPPED in the replace stream ("|o|t|h|e|r|</w>|") so a
+# merge is one global replace of "|a|b|" -> "|ab|": the closing "|"
+# after each symbol makes cross-boundary prefix matches impossible
+# ("|th|e|" cannot match inside "|th|er</w>|" — an undelimited "th e"
+# WOULD, which tests/test_llm_ops.py pins as the bug this form fixes).
+# Spark replace() and DuckDB replace() share single-pass left-to-right
+# semantics, so both engines agree on every input; vs canonical BPE the
+# ONLY residual divergence is the same pair repeating immediately
+# adjacent (a b a b — the replace's consumed trailing delimiter hides
+# the second occurrence for that pass), pinned by the same test.
+# Precondition: "|" never appears in a token. Derived offline from the
+# corpus vocabulary.
+_BPE_MERGES = [
+    ("e r", "er"),
+    ("er </w>", "er</w>"),
+    ("t h", "th"),
+    ("th e", "the"),
+    ("the </w>", "the</w>"),
+    ("o r", "or"),
+    ("a n", "an"),
+    ("i n", "in"),
+    ("s c", "sc"),
+    ("sc an", "scan"),
+    ("j o", "jo"),
+    ("jo in", "join"),
+]
+
+
+def _bpe_oracle_replace_chain(expr: str) -> str:
+    for a, b in _BPE_MERGES:
+        pa = "|" + a.replace(" ", "|") + "|"
+        pb = f"|{b}|"
+        expr = f"replace({expr}, '{pa}', '{pb}')"
+    return expr
+
+
+def _bigram_lm(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_bigrams, lm_fp) for the given documents relation — the
+    corpus-self-trained integer-fixed-point bigram LM shared by
+    text_bigram_lm_score, sample_perplexity_buckets and
+    pipeline_curate_cap (the LM trains on whatever corpus the caller
+    passes: the full table for the standalone score, the deduped
+    survivors inside the curation pipeline)."""
+    arr = docs.select("doc_id", F.split("text", " ").alias("a"))
+    # CASE guard: sequence(1, 0) is the DESCENDING array [1, 0], so a
+    # single-token document would evaluate element_at(a, 0) and die
+    # under ANSI — the oracle's generate_series(1, 0) is simply empty.
+    # Empty array -> explode drops the doc, matching the oracle.
+    bg = arr.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "CASE WHEN size(a) >= 2 THEN"
+                " filter(transform(sequence(1, size(a) - 1),"
+                " i -> struct(element_at(a, i) AS w1,"
+                " concat(element_at(a, i), ' ', element_at(a, i + 1)) AS b,"
+                " element_at(a, i + 1) AS w2)),"
+                " p -> p.w1 <> '' AND p.w2 <> '')"
+                " ELSE array() END"
+            )
+        ).alias("p"),
+    ).select("doc_id", "p.w1", "p.b")
+    uc = (
+        docs.select(F.explode(F.split("text", " ")).alias("w"))
+        .filter(F.col("w") != "")
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("uc"))
+    )
+    bc = bg.groupBy("b").agg(F.count(F.lit(1)).alias("bc"))
+    return (
+        bg.join(F.broadcast(bc), "b")
+        .join(F.broadcast(uc), F.col("w1") == F.col("w"))
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_bigrams"),
+            F.sum(F.expr("bc * 1000000 DIV uc")).alias("lm_fp"),
+        )
+    )
+
+
+_BM25_TERMS = ("data", "vector", "query")
+
+
+def _bm25_term_sql(term: str) -> str:
+    """One fixed-point BM25 term contribution (k1=1.2, b=0.75, odds
+    idf) — mirrors the Spark expression tree token for token."""
+    tf = f"tf_{term}"
+    df = f"df_{term}"
+    return f"""
+      CASE WHEN {tf} = 0 THEN 0 ELSE CAST(floor(
+        ((CAST(2 * (nd - {df}) + 1 AS DOUBLE) / CAST(2 * {df} + 1 AS DOUBLE))
+         * (CAST({tf} AS DOUBLE) * 2.2)
+         / (CAST({tf} AS DOUBLE)
+            + 1.2 * (0.25 + 0.75
+                     * ((CAST(dl AS DOUBLE) * CAST(nd AS DOUBLE))
+                        / CAST(tot AS DOUBLE)))))
+        * 1048576.0) AS BIGINT) END"""
+
+
+_BPE_TRAIN_ITERS = 4
+
+
+def _bpe_train_oracle(iters: int) -> str:
+    """Unrolled BPE-trainer oracle: iteration i counts adjacent symbol
+    pairs over the (i-1)-merged vocabulary, picks the (cnt DESC, pair
+    ASC) argmax, and applies it as a delimiter-wrapped replace — the
+    same unroll-the-loop oracle style as graph_pagerank."""
+
+    def pair_counts(src: str) -> str:
+        return (
+            "SELECT pair, CAST(SUM(f) AS BIGINT) AS cnt FROM ("
+            "SELECT f, unnest(list_transform(generate_series(1, len(s)-1),"
+            " i -> s[i] || ' ' || s[i+1])) AS pair FROM ("
+            "SELECT f, list_filter(string_split(e, '|'), c -> c <> '') AS s"
+            f" FROM {src})) GROUP BY pair"
+        )
+
+    ctes = [
+        "wf AS (SELECT w, COUNT(*) AS f FROM "
+        "(SELECT unnest(string_split(text, ' ')) AS w FROM documents) "
+        "WHERE w <> '' GROUP BY w)",
+        "e0 AS (SELECT f, '|' || array_to_string("
+        "list_filter(string_split(w, ''), c -> c <> ''), '|') "
+        "|| '|</w>|' AS e FROM wf)",
+    ]
+    for i in range(1, iters + 1):
+        ctes.append(f"p{i} AS ({pair_counts(f'e{i - 1}')})")
+        ctes.append(
+            f"b{i} AS (SELECT pair, cnt FROM p{i} "
+            "ORDER BY cnt DESC, pair LIMIT 1)"
+        )
+        if i < iters:
+            ctes.append(
+                f"e{i} AS (SELECT f, replace(e, "
+                "'|' || replace(pair, ' ', '|') || '|', "
+                "'|' || replace(pair, ' ', '') || '|') AS e "
+                f"FROM e{i - 1} CROSS JOIN b{i})"
+            )
+    sel = " UNION ALL ".join(
+        f"SELECT CAST({i} AS INTEGER) AS it, pair AS merge_pair, cnt "
+        f"FROM b{i}"
+        for i in range(1, iters + 1)
+    )
+    return "WITH " + ",\n".join(ctes) + "\n" + sel
+
+
+_MIX_WEIGHTS = {"en": 4, "de": 2, "fr": 2, "es": 1, "zh": 1}
+_MIX_SCALE = 840  # divisible by every weight → integer stride keys
+
+
+_CAP_BUDGET = 600  # whitespace tokens per source (trims at sf≥0.01)
+
+_DOMAIN_CAP_SQL = f"""
+    WITH t AS (SELECT doc_id, source,
+                      CAST(len({_D_TOKS}) AS BIGINT) AS n_toks
+               FROM documents),
+    c AS (SELECT doc_id, source, n_toks,
+                 SUM(n_toks) OVER (PARTITION BY source ORDER BY doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS cum_toks
+          FROM t)
+    SELECT doc_id, source, n_toks, CAST(cum_toks AS BIGINT) AS cum_toks
+    FROM c WHERE cum_toks <= {_CAP_BUDGET}
+    """
+
+
+_PIPE_CAP_BUDGET = 400  # tokens per source after dedup + tail-drop
+
+
+_FRAME_DUP_TH = 64  # |Δ byte-sum| at or below this = same content (~p45)
+
+
+_HOLDOUT_BUDGET = 1500  # tokens per lang in the packed eval shard
+
+
+_SPIPE_CAP_BUDGET = 600  # tokens per source after dedup + quality gate
+
+
+_WALK_STEPS = 4
+
+
+def _walk_step_sql(i: int) -> str:
+    """One unrolled walk step: from w{i}'s node, pick the neighbor whose
+    adjacency rank equals hash(node, step) mod degree."""
+    return f"""
+    w{i + 1} AS (
+      SELECT w.seed, {i + 1} AS step, a.dst AS node
+      FROM w{i} w
+      JOIN deg d ON d.src = w.node
+      JOIN adj a ON a.src = w.node
+        AND a.rnk = 1 + (('0x' || substring(md5(
+              CAST(w.node AS VARCHAR) || ':' || CAST({i + 1} AS VARCHAR)
+            ), 1, 8))::BIGINT % d.deg))
+    """
+
+
+_CDC_CHUNKS_SQL = """
+    pos AS (
+      SELECT doc_id, text,
+             unnest(range(1, GREATEST(LENGTH(text) - 7, 0) + 1)) AS i
+      FROM documents),
+    bnd AS (
+      SELECT doc_id, i + 7 AS cut FROM pos
+      WHERE substring(md5(substring(text, CAST(i AS INT), 8)), 1, 2) < '08'),
+    kept AS (
+      SELECT doc_id, cut FROM (
+        SELECT doc_id, cut,
+               LAG(cut, 1, -7) OVER (PARTITION BY doc_id ORDER BY cut) AS pc
+        FROM bnd) WHERE cut - pc >= 8),
+    cuts AS (SELECT doc_id, cut FROM kept
+             UNION SELECT doc_id, LENGTH(text) FROM documents
+             WHERE LENGTH(text) > 0),
+    spans AS (SELECT doc_id, cut,
+                     LAG(cut, 1, 0) OVER (PARTITION BY doc_id ORDER BY cut)
+                       AS prev
+              FROM cuts),
+    chunks AS (
+      SELECT s.doc_id,
+             md5(substring(d.text, CAST(s.prev + 1 AS INT),
+                           CAST(s.cut - s.prev AS INT))) AS fp,
+             s.cut - s.prev AS clen
+      FROM spans s JOIN documents d ON s.doc_id = d.doc_id
+      WHERE s.cut > s.prev)
+"""  # the CDC span derivation, shared by text_cdc_chunks / dedup_cdc_pairs
+
+
+def _family(name: str) -> str:
+    """Coarse family tag for interleaving (prefix heuristics)."""
+    if name.startswith("dispatch"):
+        return "dispatch"
+    if len(name) > 1 and name[0] == "q" and name[1].isdigit():
+        return "tpch"
+    for prefix, fam in (
+        ("q_scd2", "window"),
+        ("q_source", "scan"),
+        ("q_join", "join"),
+        ("q_merge", "join"),
+        ("q_asof", "join"),
+        ("q_skew", "join"),
+        ("q_window", "window"),
+        ("q_stats", "window"),
+        ("q_subquery", "subquery"),
+        ("q_recursive", "subquery"),
+        ("q_agg", "agg"),
+        ("q_cogroup", "join"),
+        ("q_rollup", "agg"),
+        ("q_cube", "agg"),
+        ("q_grouping", "agg"),
+        ("q_percentiles", "agg"),
+        ("q_distinct", "agg"),
+        ("q_pivot", "agg"),
+        ("q_udaf", "agg"),
+        ("q_explode", "flatten"),
+        ("q_unpivot", "flatten"),
+        ("graph_", "graph"),
+        ("dedup_", "dedup"),
+        ("sim_", "sim"),
+        ("text_", "text"),
+        ("sample_", "sample"),
+        ("streaming_", "streaming"),
+        ("multimodal_", "multimodal"),
+    ):
+        if name.startswith(prefix):
+            return fam
+    return "scalar"  # q_scalar_*, q_json_*, q_variant_*, q_order/set ops
+
+
+def _interleaved() -> list[str]:
+    """Round-robin interleave of all registered query names across families
+    (dispatch family leads), so any prefix samples every family."""
+    buckets: dict[str, list[str]] = {}
+    for name in _QUERIES:  # registration order within each family
+        buckets.setdefault(_family(name), []).append(name)
+    ordered: list[str] = []
+    groups = list(buckets.values())  # dispatch registered first → leads
+    i = 0
+    while True:
+        emitted = False
+        for g in groups:
+            if i < len(g):
+                ordered.append(g[i])
+                emitted = True
+        if not emitted:
+            break
+        i += 1
+    return ordered
+
+
+def _driver_history() -> tuple[dict[str, int], set[str]]:
+    """Scan the repo-root ``CORRECTNESS_r*.json`` driver reports.
+
+    Returns ``(proved, errored)``: proved maps each name with at least
+    one FULLY green driver result (rows matched, value hash matched
+    when the driver recorded one, no error) to the LATEST round number
+    it was green in — the staleness key the rotation sorts on; errored
+    is names whose only driver appearances were errors/mismatches
+    (highest re-proof priority). A rows-match-but-hash-fail row is NOT
+    proof — r6's two oracle-typing reds would otherwise sink into the
+    proved bucket and never be re-sampled after the oracle fix
+    (r6 verdict #2). Missing/unreadable reports are ignored — fresh
+    checkouts fall back to the plain family interleave.
+    """
+    import glob as _glob
+    import json as _json
+    import os
+    import re as _re
+
+    root = os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    proved: dict[str, int] = {}
+    seen_bad: set[str] = set()
+    for path in sorted(_glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        rnd = int(m.group(1)) if m else 0
+        try:
+            with open(path) as fh:
+                report = _json.load(fh)
+        except (OSError, ValueError):
+            continue
+        if not isinstance(report, dict):
+            continue
+        for name, res in report.items():
+            if not isinstance(res, dict):
+                continue
+            hash_ok = res.get("hash_match", res.get("rows_match"))
+            if res.get("rows_match") and hash_ok and res.get("err") is None:
+                proved[name] = max(proved.get(name, 0), rnd)
+            else:
+                seen_bad.add(name)
+    return proved, seen_bad - set(proved)
+
+
 def queries() -> dict[str, QueryFn]:
-    """All registered queries, in registration order."""
-    return dict(_QUERIES)
+    """All registered queries, ordered so the driver's fixed sampling
+    budget keeps extending coverage round over round.
+
+    The correctness driver checks only a *prefix* of this dict (50 of
+    138 as of round 5), so a static ordering would leave the tail
+    forever unverified. This ordering is self-maintaining: it reads the
+    driver's own past ``CORRECTNESS_r*.json`` reports and front-loads
+
+    1. ``dispatch_route`` — the flagship, always slot 1;
+    2. names whose only driver appearances were errors (re-proof first);
+    3. names never driver-checked green, family-interleaved;
+    4. already-proved names, STALEST FIRST — ordered by the round of
+       their latest green (ascending), family-interleave as tiebreak.
+
+    Each round the newly-proved prefix migrates into bucket 4, rotating
+    fresh entries into the driver's budget with no manual bookkeeping.
+    Bucket 4's staleness sort matters once the registry is fully proven
+    (r13: 296/296): without it the driver's fixed sample budget would
+    re-check the same static prefix forever and the early-round tail
+    would never re-prove; with it every name re-proves within
+    ~registry/budget rounds (~6 at 296/50) (r13 verdict #5).
+    """
+    base = _interleaved()
+    proved, errored = _driver_history()
+    if not proved and not errored:
+        return {n: _QUERIES[n] for n in base}
+    flagship = [n for n in ("dispatch_route",) if n in _QUERIES]
+    rest = [n for n in base if n not in flagship]
+    # builder-flagged re-proof names: semantics/oracles changed since
+    # their last driver check; front of the never-proved bucket so the
+    # fix lands inside this round's sample budget (r7: the two latent
+    # HUGEINT/DECIMAL oracle repairs). r10's forced re-proofs
+    # (q_heavy_hitters_mg / q_join_anti, de-vacuated empty-vs-empty
+    # greens) both landed real nonempty driver greens in
+    # CORRECTNESS_r10.json, so the unconditional force is retired —
+    # they sit in the proved bucket again and their two slots go to
+    # never-proven names (pipeline_curate_cap first).
+    priority = [
+        n
+        for n in ("q_table_checksum", "q_cogroup_reconcile")
+        if n in _QUERIES and n not in proved
+    ]
+    never = [
+        n
+        for n in rest
+        if n not in errored and n not in proved and n not in priority
+    ]
+    proved_tail = [n for n in rest if n in proved and n not in priority]
+    # stable sort: equal-staleness names keep the family interleave
+    proved_tail.sort(key=lambda n: proved[n])
+    ordered = (
+        flagship
+        + [n for n in rest if n in errored and n not in priority]
+        + priority
+        + never
+        + proved_tail
+    )
+    return {n: _QUERIES[n] for n in ordered}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,22 +1,19 @@
-"""The dispatch-family queries: the reference topology over the
-`events` table, each with its DuckDB oracle. Shared helpers come from
-queries/_core.py."""
+"""'dispatch'-family queries — split verbatim from the queries.py
+monolith (r13); registration order within the family is
+unchanged, so the driver-sampling interleave is identical.
+Shared helpers come from queries/_core.py."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from ..operators import dispatch as dsp
-from ..sources.tables import load_table
-from ._core import (
+from ._core import (  # noqa: F401 — shared query toolkit
+    DataFrame,
     EVENT_RULES,
+    F,
+    SparkSession,
     TIER3_RULES,
-    _ORACLE,
-    _event_rec,
     _events_record,
-    _events_stream,
-    _run_stream_to_table,
+    dsp,
+    load_table,
     register,
 )
 
@@ -138,16 +135,3 @@ def dispatch_route_tier3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = dsp.dispatch(ev.withColumn("tx_json", view), TIER3_RULES, json_col="tx_json")
     return out.select("event_id", "rule_idx", "rule_name", "topic")
-
-
-@register("streaming_dispatch_route", _ORACLE["dispatch_route"])
-def streaming_dispatch_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME oracle as dispatch_route, satisfied through Structured
-    Streaming: file stream → rule evaluation → multicast → memory sink.
-    Streaming/batch parity is the core guarantee of sharing one plan
-    builder (the dispatch path is stateless ⇒ append mode, no watermark)."""
-    ev = _events_stream(spark, sf_dir).withColumn("rec", _event_rec())
-    routed = dsp.dispatch(ev, EVENT_RULES, struct_col="rec").select(
-        "event_id", "rule_idx", "rule_name", "topic"
-    )
-    return _run_stream_to_table(routed, "stream_route", "append")

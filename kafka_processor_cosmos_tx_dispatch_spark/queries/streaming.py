@@ -24,6 +24,7 @@ from ._core import (  # noqa: F401 — shared query toolkit
     _events_stream,
     _minhash_sig_sql,
     _run_stream_to_table,
+    dsp,
     load_table,
     register,
 )
@@ -61,8 +62,6 @@ def streaming_dispatch_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streaming: file stream → rule evaluation → multicast → memory sink.
     Streaming/batch parity is the core guarantee of sharing one plan
     builder (the dispatch path is stateless ⇒ append mode, no watermark)."""
-    from ..streaming.dispatch import streaming_dispatch
-
     ev = _events_stream(spark, sf_dir)
     rec = F.struct(
         F.col("event_type"),
@@ -71,7 +70,7 @@ def streaming_dispatch_route(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.get_json_object("props", "$.k").cast("int").alias("k")
         ).alias("props"),
     )
-    routed = streaming_dispatch(
+    routed = dsp.dispatch(
         ev.withColumn("rec", rec), EVENT_RULES, struct_col="rec"
     ).select("event_id", "rule_idx", "rule_name", "topic")
     return _run_stream_to_table(routed, "stream_route", "append")

@@ -44,7 +44,7 @@ def get_spark(
     - ``spark.sql.files.maxPartitionBytes`` stays at the 128 MB default so
       scan tasks fit executor memory regardless of input size.
     - Arrow on: the Pandas-UDF operators (tx decode, Python-tier
-      JsonPath) move batches, not rows.
+      JsonPath, multimodal decode) move batches, not rows.
     """
     cpus = default_parallelism()
     if master is None:

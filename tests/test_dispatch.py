@@ -256,11 +256,3 @@ def test_entry_counts_match_direct_dispatch(spark):
     assert sum(got.values()) >= ev.count()  # every event lands somewhere
     assert ("dlq", None) in got
 
-
-def test_load_table_normalizes_timestamps(spark, sf_dir):
-    """The events parquet stores ts as TIMESTAMP(NANOS); load_table must
-    surface it as a Spark timestamp for the dispatch queries."""
-    from kafka_processor_cosmos_tx_dispatch_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    assert dict(ev.dtypes)["ts"] == "timestamp"

@@ -54,6 +54,7 @@ def test_gate_google_protobuf_pip_still_absent():
         spec = None
     if spec is not None:
         pytest.fail(
-            "the protobuf pip package is importable — "
-            "transformWithStateInPandas can now run in this environment"
+            "the protobuf pip package is importable — un-skip the "
+            "transformWithStateInPandas twins (streaming/stateful.py; "
+            "tests/test_streaming.py importorskip sites)"
         )

@@ -34,12 +34,24 @@ def duck(sf_dir):
     con.close()
 
 
+# Queries whose oracle legitimately returns 0 rows at the tiny sweep sf
+# but is nonempty at the driver's sf0.01 (verified in DuckDB): TPC-H Q7's
+# nation-pair × 2-year date filter simply has no qualifying lineitem at
+# 1/1000 scale. Anything else returning 0 rows is a VACUOUS oracle pair
+# (empty-vs-empty hash match proves nothing — r8 verdict finding #1:
+# q_heavy_hitters_mg was green at every sf with a 0-row answer) and must
+# be reworked, not whitelisted.
+_EMPTY_OK_AT_SWEEP_SF = {"q7_volume_shipping"}
+
+
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_oracle_answer_is_nonempty(name, duck):
     """No registered query may be vacuously green: its oracle answer at
     the sweep sf must have ≥1 row so the value-hash comparison actually
-    compares values (an empty-vs-empty hash match proves nothing).
-    Pure-DuckDB (no Spark run), so the sweep stays cheap."""
+    compares values. Pure-DuckDB (no Spark run), so the whole-registry
+    sweep stays cheap."""
+    if name in _EMPTY_OK_AT_SWEEP_SF:
+        pytest.skip("documented empty-at-sweep-sf; nonempty at sf0.01")
     n = duck.execute(
         f"SELECT COUNT(*) FROM ({_ORACLES[name]})"
     ).fetchone()[0]
@@ -67,8 +79,8 @@ def test_oracle_parity(name, spark, duck, sf_dir):
 def test_comparator_catches_breakage(spark, duck, sf_dir):
     # The gate is only as good as its comparator: prove a broken query
     # (wrong rows / wrong values / engine error) actually reports.
-    ok_fn = _QUERIES["dispatch_route"]
-    ok_sql = _ORACLES["dispatch_route"]
+    ok_fn = _QUERIES["q1_pricing_summary"]
+    ok_sql = _ORACLES["q1_pricing_summary"]
     assert compare_query(spark, duck, ok_fn, "SELECT 1 AS one", sf_dir)
     assert compare_query(
         spark, duck, lambda s, d: ok_fn(s, d).limit(1), ok_sql, sf_dir

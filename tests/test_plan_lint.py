@@ -1,40 +1,251 @@
-"""Physical-plan lint: every registered query's plan is scanned for scale
-red flags, so a regression anywhere in the surface (a join that degrades
-to cartesian, a Python eval node sneaking into a JVM path) fails CI — the
-whole-surface generalization of the hand-pinned asserts in
-test_scale_plans.py.
+"""Repo-wide physical-plan lint: every registered query's plan is scanned
+for scale red flags, so a regression anywhere in the surface (a join that
+degrades to cartesian, a Python eval node sneaking into a JVM path)
+fails CI — the whole-surface generalization of the hand-pinned asserts
+in test_scale_plans.py.
 
 Red flags:
 - CartesianProduct — an unconditioned cross join of two scaling sides.
-- BatchEvalPython / ArrowEvalPython / MapInPandas — Python eval in a plan
+- BatchEvalPython / ArrowEvalPython — row/batch Python eval in a plan
   that should be whole-stage codegen (deliberate Python operators are
   whitelisted below).
-- BroadcastNestedLoopJoin — non-equi fallback join.
+- BroadcastNestedLoopJoin — non-equi fallback join; allowed only where
+  one side is a bounded 1-row/handful aggregate (whitelisted).
 """
 
 import pytest
 
 from kafka_processor_cosmos_tx_dispatch_spark import queries as Q
 
+# Queries whose CALL already executes jobs (streaming run-to-completion,
+# checkpointed iteration) — their plans are exercised by the oracle gate;
+# re-running them here would double the suite's runtime for no new signal.
+EAGER = {
+    "dedup_connected_components",
+    "dedup_cluster_histogram",  # CC union-find rounds run on call
+    "sample_split_by_cluster",  # same CC stage feeding the split hash
+    "q_bucketed_join_agg",  # warehouse writes on call
+    "q_source_csv_roundtrip",  # warehouse writes on call
+    "q_source_jsonl_roundtrip",  # warehouse writes on call
+    "q_source_orc_roundtrip",  # warehouse writes on call
+    "q_source_partition_prune",  # warehouse writes on call
+    "q_source_schema_evolution",  # warehouse writes on call
+    "q_join_dpp",  # warehouse write on call (partitioned fact layout)
+    "graph_pagerank",
+    "graph_pagerank_dangling",
+    "graph_weighted_pagerank",
+    "graph_hits",  # per-round score materialization (hits loop)
+    "graph_ppr",  # per-round materialization (personalized pagerank loop)
+    "sim_diversify_mmr",  # cand/pair/selected checkpoints between greedy steps
+    "sample_kcenter_coreset",  # per-step state checkpoints (k-center loop)
+    "graph_k_core",  # per-round edge materialization (k_core loop)
+    "graph_bfs_hops",  # per-round frontier/visited materialization
+    "graph_closeness_bfs",  # same labeled-BFS per-round materialization
+    "graph_betweenness_sampled",  # und/level/dlevel materialization (r15)
+    "graph_triangle_count",  # canonical edge-list materialization (r15)
+    "dedup_cdc_pairs",  # (doc_id, fp) chunk materialization (r15)
+    "dedup_exact_spans",  # runs materialization (r16: fed both span-union sides)
+    "sim_topk_ivf_trained",  # trained-index materialization (r15: idx fed both join sides)
+    "graph_connected_components",  # CC pointer-jump rounds run on call
+    "graph_random_walks",  # adjacency localCheckpoint on call (4-step unroll)
+    "q_gap_fill_locf",
+    "q_sketch_countmin",
+    "sample_temperature_weights",
+    "text_neg_sampling_table",  # same vocab-table checkpoint + 1-row total
+    "streaming_incremental_merge",
+    "text_tfidf_topterms",
+    "text_token_rarity",
+}
+
 # Deliberate Python-eval operators: Arrow-batched by design.
 PYTHON_OK = {
+    "dispatch_dlq_envelope",  # tier-3 Pandas-UDF JsonPath fallback path
     "dispatch_route_tier3",  # DELIBERATE tier-3 bank: one fused Arrow UDF
+    "multimodal_features",  # mapInPandas feature extraction (stub codecs)
+    "multimodal_frame_sample",
+    "multimodal_audio_energy",
+    "multimodal_scene_cuts",  # Arrow frame-feature decode stand-in
+    "multimodal_frame_dedup",  # same frame-feature Arrow pass
+    "multimodal_av_align",  # same frame-feature Arrow pass (scene side)
+    "pipeline_clip_extract",  # same Arrow frame-feature pass feeding the scene windows
+    "multimodal_video_keyframes",  # same Arrow frame-feature pass
+    "pipeline_media_curate",  # same Arrow frame-feature pass in the clip stage
+    "q_udaf_grouped_cents",  # grouped-agg pandas UDF (the point of the query)
+    "text_udtf_bigrams",  # Python UDTF via LATERAL
+    "sim_embedding_near_dup",  # block-tiled dgemm under mapInPandas
+    "dedup_hybrid_verify",
+    "dedup_verify_editdist",
+    "q_cogroup_reconcile",  # cogrouped applyInPandas (the point of the query)
+    "q_heavy_hitters_mg",  # per-partition Misra-Gries summaries (mapInPandas)
+    "q_skyline_pareto",  # partition-local skyline sweep (mapInPandas)
+    "sim_topk_pq",  # numpy einsum PQ encode/tables under mapInPandas
+    "sim_topk_rerank",  # stage 1 IS sim_topk_pq (same encode); rerank is JVM
+    "sim_topk_ivfpq",  # same Arrow encode/ADC-table passes + cell equi-join
 }
+
+# Bounded-side nested-loop joins: the broadcast side is a 1-row (or
+# few-row) aggregate, which is the intended plan for scalar joins.
+BNLJ_OK = {
+    "q22_idle_balances",  # scalar avg subquery broadcast
+    "q11_important_value",  # 1-row global-total broadcast threshold
+    "q20_potential_promotion",  # 1-row (count, sum) broadcast threshold
+    "q_subquery_scalar",
+    "q_histogram_equiheight",  # 1-row cut-point table
+    "sim_power_iteration",  # 1-row model-state broadcasts between rounds
+    "sim_pca_top2",  # same 1-row model-state broadcasts (v1 + deflation)
+    "text_vocab_coverage",  # bounded vocab, joined non-equi-free
+    "q_data_profile",
+    "text_pack_sequences",  # offset table
+    "sample_stratified",
+    "sample_hash_split",
+    "q_join_range_nonequi",  # broadcast non-equi vs bounded dim (by design)
+    "q_join_bloom_prefilter",  # 1-row bloom word-array broadcast into the scan
+    "text_bm25_rank",  # 1-row corpus-stats (N, Σdl, df_t) broadcast
+    "q_heavy_hitters_mg",  # 1-row (n, u) threshold broadcast
+    "q_changepoint_cusum",  # 1-row floor-mean target broadcast
+    "text_bpe_train",  # 1-row argmax merge-pair broadcast per iteration
+    "sim_topk_bruteforce",  # bounded query set broadcast vs corpus
+    "sim_topk_hamming",  # same bounded-query broadcast over packed words
+    "sim_topk_hamming_rerank",  # stage 1 IS sim_topk_hamming; rerank bounded
+    "sim_recall_at_k",  # same bounded-query broadcast on both result sides
+    "sim_hamming_recall",  # same shape: exact + hamming sides both bounded
+    "sim_matryoshka_recall",  # same shape: exact + prefix sides both bounded
+    "sim_mutual_knn",  # bounded side-A broadcast vs side-B corpus (exact miner)
+    "sim_range_search",  # same bounded-query broadcast, threshold filter
+    "sim_knn_classify",  # same bounded-query broadcast + label vote
+    "sim_maxsim_multivector",  # bounded token-set broadcast vs corpus
+    "sample_hard_negatives",  # same bounded-query broadcast shape
+    "sim_topk_pq",  # same bounded-query broadcast, ADC-scored codes
+    "sim_topk_rerank",  # same stage-1 plan + candidate-set broadcast rerank
+    "sim_embedding_near_dup",  # bounded block-pair KEY table broadcast
+    "q_sketch_merge_hll",  # 1-row merged-sketch estimate
+    "q_benford_audit",  # 1-row digit-total aggregate broadcast
+    "q_stats_ab_ttest",  # 1-row group-aggregate crossJoin (two arms)
+    "q_rfm_segmentation",  # 1-row anchor-date aggregate crossJoin
+    "sample_mixture_eval",  # 4-row prefix-length table broadcast (non-equi)
+    "q_join_cross",  # deliberate cross join of two bounded dims
+    # r11: the Lloyd loop went lazy (kmeans_assign bank tier carries the
+    # centroid bank as in-plan 1-row broadcasts — similarity.py) so the
+    # family moved here from the EAGER whitelist; the BNLJ is the 1-row
+    # bank crossJoin, same shape as sim_power_iteration above
+    "sim_kmeans_clusters",
+    "sim_kmeans_inertia",
+    "sample_cluster_balanced",
+    "dedup_semantic",
+    # r13: the trained quality classifier — the BNLJ is the 1-row
+    # array<long> model-state broadcast between unrolled gradient steps
+    # (operators/quality.py), the text_bpe_train/sim_power_iteration shape
+    "text_quality_train",
+    "text_quality_train_eval",
+    "text_quality_train_holdout",
+    # r13: modularity — the BNLJ is the 1-row edge-count (m) broadcast
+    # crossJoin into the ≤25-community result rows
+    "graph_modularity",
+    # r13 (collapsed to the grouped one-chain shape in r15): PQ
+    # codebook trainer — ONE kmeans_assign_grouped lazy-bank run over
+    # the posexploded subspace rows; the BNLJ is the 1-row composite
+    # centroid-bank broadcast each round rides
+    "sim_pq_train",
+    "sim_pq_train_gain",
+    # r13: trained-IVF — the kmeans lazy-bank BNLJ plus the bounded
+    # 10-query broadcast every IVF query whitelists
+    "sim_topk_ivf_trained",
+    # r14 (collapsed to the grouped one-chain shape in r15): sample-
+    # trained PQ — ONE kmeans_assign_grouped lazy-bank BNLJ over the
+    # persisted posexploded sample, plus the single grouped apply
+    # pass's 1-row composite-bank broadcast
+    # (kmeans_assign_cells_grouped)
+    "sim_pq_train_sampled",
+}
+
+# The one deliberate cartesian: a bounded dim × bounded dim cross join.
+CROSS_OK = {"q_join_cross"}
 
 
 def _names():
-    # streaming queries run to completion on call; the oracle gate
-    # exercises them
-    return [n for n in Q.queries() if not n.startswith("streaming_")]
+    return [n for n in Q.queries() if not n.startswith("streaming_") and n not in EAGER]
 
 
 @pytest.mark.parametrize("name", _names())
 def test_plan_has_no_scale_red_flags(spark, sf_dir, name):
     df = Q.queries()[name](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+    if name not in CROSS_OK:
+        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     if name not in PYTHON_OK:
         assert "BatchEvalPython" not in plan, f"{name}: row-Python eval"
         assert "ArrowEvalPython" not in plan, f"{name}: Python eval"
         assert "MapInPandas" not in plan, f"{name}: unexpected mapInPandas"
-    assert "BroadcastNestedLoopJoin" not in plan, f"{name}: BNLJ"
+    if name not in BNLJ_OK:
+        assert "BroadcastNestedLoopJoin" not in plan, f"{name}: BNLJ"
+
+
+# ---------------------------------------------------------------------------
+# EAGER queries (r5 verdict #1 blind spot): their CALL already runs jobs
+# (checkpointed iteration rounds, centroid collects, warehouse writes), so
+# the lazy executedPlan lint above cannot see the plans that actually
+# executed. The SQL status store can: every execution — each iteration
+# round, each model-state collect, the final materialization — records its
+# physical plan description there. The test snapshots the execution-id
+# watermark, runs the query to completion, and red-flag-lints EVERY plan
+# that executed after the watermark. A deliberate exception needs a named
+# whitelist entry like everything else.
+# ---------------------------------------------------------------------------
+
+# Arrow-batched Python stages inside eager operators, by design:
+EAGER_PYTHON_OK = {
+    "dedup_connected_components",  # partition-local union-find (mapInPandas)
+    "dedup_cluster_histogram",  # same union-find stage
+    "sample_split_by_cluster",  # same union-find stage
+}
+# Bounded-broadcast nested-loop stages inside eager operators:
+EAGER_BNLJ_OK = {
+    "graph_pagerank",  # 1-row node-count aggregate crossJoin (graph.py:75)
+    "graph_pagerank_dangling",  # 1-row dangling-mass aggregate crossJoin
+    "graph_weighted_pagerank",  # 1-row node-count aggregate crossJoin
+    "graph_hits",  # 1-row normalization-total crossJoin per half-step
+    "graph_ppr",  # 1-row seed-count aggregate crossJoin
+    "sim_diversify_mmr",  # bounded query-set broadcast (brute_force_topk stage)
+    "sample_kcenter_coreset",  # 1-row pick broadcast per greedy step
+    "q_gap_fill_locf",  # 1-row ts-bounds aggregate crossJoin
+    "q_sketch_countmin",  # 1-row sketch-table broadcast into the probe
+    "sample_temperature_weights",  # 1-row normalization aggregate
+    "text_neg_sampling_table",  # same 1-row normalization-total crossJoin
+    "text_tfidf_topterms",  # 1-row corpus-size aggregate
+    "text_token_rarity",  # 1-row corpus-size aggregate
+    "streaming_incremental_merge",  # 1-row snapshot watermark aggregate
+}
+
+
+def _executions_after(spark, watermark: int) -> list[tuple[int, str]]:
+    store = spark._jsparkSession.sharedState().statusStore()
+    lst = store.executionsList()
+    out = []
+    for i in range(lst.size()):
+        e = lst.apply(i)
+        if e.executionId() > watermark:
+            out.append((e.executionId(), e.physicalPlanDescription()))
+    return out
+
+
+def _execution_watermark(spark) -> int:
+    return max((eid for eid, _ in _executions_after(spark, -1)), default=-1)
+
+
+@pytest.mark.parametrize("name", sorted(EAGER))
+def test_eager_query_executed_plans_have_no_red_flags(spark, sf_dir, name):
+    watermark = _execution_watermark(spark)
+    df = Q.queries()[name](spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()  # final plan too
+    plans = _executions_after(spark, watermark)
+    assert plans, f"{name}: no executions captured in the SQL status store"
+    for eid, plan in plans:
+        tag = f"{name} execution#{eid}"
+        if name not in CROSS_OK:
+            assert "CartesianProduct" not in plan, f"{tag}: cartesian product"
+        if name not in PYTHON_OK | EAGER_PYTHON_OK:
+            assert "BatchEvalPython" not in plan, f"{tag}: row-Python eval"
+            assert "ArrowEvalPython" not in plan, f"{tag}: Python eval"
+            assert "MapInPandas" not in plan, f"{tag}: unexpected mapInPandas"
+        if name not in BNLJ_OK | EAGER_BNLJ_OK:
+            assert "BroadcastNestedLoopJoin" not in plan, f"{tag}: BNLJ"

@@ -529,8 +529,8 @@ def streaming_decode_throughput(
     spark, n: int = 10_800_000, rows_per_batch: int = 1_800_000
 ) -> dict:
     """Steady-state throughput of the FULL reference pipeline — txgen
-    bounded stream (protobuf TxRaw wire bytes) → decode_tx_records
-    (Python tier) → JsonPath dispatch → sink — i.e. what the engine
+    bounded stream (protobuf TxRaw wire bytes) → dsp.route (Python
+    decode + every rule, multicast, value) → sink — i.e. what the engine
     sustains end-to-end when the decode stage cannot run JVM-side
     (no spark-protobuf in this container). n/rows_per_batch give
     ceil(n/rows_per_batch) micro-batches; rates exclude batch 0.
@@ -547,9 +547,6 @@ def streaming_decode_throughput(
     seconds of compute, not milliseconds); both knobs stay explicit
     here so either regime can be measured."""
     from kafka_processor_cosmos_tx_dispatch_spark.operators import dispatch as dsp
-    from kafka_processor_cosmos_tx_dispatch_spark.operators.decode import (
-        decode_tx_records,
-    )
     from kafka_processor_cosmos_tx_dispatch_spark.rules import DispatchRule
     from kafka_processor_cosmos_tx_dispatch_spark.sources import txgen
 
@@ -573,25 +570,9 @@ def streaming_decode_throughput(
         .option("rows_per_batch", rows_per_batch)
         .load()
     )
-    # Fused tier: the Python-tier JsonPath predicates evaluate inside
-    # the decode UDF on the just-decoded dict (decode_tx_records
-    # match_paths), so the tx_json text is parsed exactly once and never
-    # re-crosses Arrow to a second matcher worker pool.
-    t3_paths = dsp.python_tier_paths(rules, json_col="tx_json")
-
-    def pipeline(src):
-        return dsp.dispatch(
-            decode_tx_records(src, match_paths=t3_paths or None),
-            rules,
-            json_col="tx_json",
-            error_col="error",
-            error_topic="errors",
-            tier3_col="__tier3" if t3_paths else None,
-        )
-
-    # Warm-up pass: one small bounded batch run of the SAME pipeline so
-    # the Python worker pool (datasource + decode + fused-match UDF
-    # workers, 32 each) exists before measurement. Cold pools measured
+    # Warm-up pass: one small bounded batch run of the SAME route() so
+    # the Python worker pool (datasource + decode UDF workers, 32 each)
+    # exists before measurement. Cold pools measured
     # 30-66k rows/s vs ~158k warm for identical code — the steady-state
     # number this function claims to report is the warm one; batch-0
     # exclusion alone doesn't cover pool spin-up bleeding into batches
@@ -603,9 +584,11 @@ def streaming_decode_throughput(
         .load()
     )
     for _ in range(2):
-        pipeline(warm).write.format("noop").mode("overwrite").save()
+        dsp.route(warm, rules, error_topic="errors").write.format("noop").mode(
+            "overwrite"
+        ).save()
 
-    routed = pipeline(stream)
+    routed = dsp.route(stream, rules, error_topic="errors")
     query = routed.writeStream.format("noop").start()
     query.processAllAvailable()
     query.stop()

@@ -14,7 +14,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_processor_cosmos_tx_dispatch_spark.operators import dispatch as dsp
-from kafka_processor_cosmos_tx_dispatch_spark.operators.decode import decode_tx_records
 from kafka_processor_cosmos_tx_dispatch_spark.rules import load_rules
 from kafka_processor_cosmos_tx_dispatch_spark.session import get_spark
 
@@ -33,21 +32,7 @@ def main() -> None:
     rules = load_rules(rules_path)
     spark = get_spark(app_name="dispatch-demo")
     df = spark.createDataFrame(demo_records(), "tx_id int, value binary")
-    # Production shape: Python-tier predicates fuse into the decode UDF
-    # (one JSON parse per record, no second Arrow hop); JVM-tier rules
-    # still compile to native Columns downstream.
-    t3 = dsp.python_tier_paths(rules, json_col="tx_json")
-    routed = dsp.dispatch(
-        decode_tx_records(df, match_paths=t3 or None),
-        rules,
-        json_col="tx_json",
-        error_col="error",
-        error_topic="error",
-        tier3_col="__tier3" if t3 else None,
-    )
-    valued = dsp.value_for_topic(
-        routed, rules, payload_col="value", raw_col="value", json_col="tx_json"
-    )
+    valued = dsp.route(df, rules, error_topic="error")
     valued.select("tx_id", "rule_name", "topic", "value").orderBy(
         "tx_id", "topic"
     ).show(truncate=60)

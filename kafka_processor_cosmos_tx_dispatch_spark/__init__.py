@@ -13,7 +13,7 @@ operators), each checked against a DuckDB oracle.
 Package layout:
     session      — SparkSession factory
     rules        — YAML dispatch-rule loader (≅ TxsDispatch.kt)
-    functions/   — jsonpath (rule compiler, three tiers), protowire and
+    functions/   — jsonpath (rule compiler, two tiers), protowire and
                    descriptors (wire reader, generated decoders), pyworker
                    (Python-worker set-up), exprs (let-binding), text and
                    vectors (column-level text and vector functions)

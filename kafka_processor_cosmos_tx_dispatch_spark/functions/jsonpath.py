@@ -8,26 +8,24 @@ missed definite path like ``$.nop``) is swallowed and treated as a
 non-match (/root/reference/src/main/kotlin/com/okp4/processor/cosmos/
 TopologyProducer.kt:56-59, 216-223).
 
-This module provides three tiers, fastest first:
+A rule runs in one of two tiers, chosen from the parse tree alone
+(``compiles_natively``, no Spark needed):
 
-1. ``compile_struct_predicate(col, dtype, path)`` — compiles the JsonPath
-   subset (child / index / wildcard / recursive descent / array filters
-   with ``== != < <= > >= && ||`` and existence) into a **native boolean
-   Column** over a typed struct column. Pure Catalyst expressions
-   (``exists`` / higher-order functions) — whole-stage codegen, no Python
-   in the hot path. Recursive descent is schema-directed: ``$..name`` is
-   statically expanded over the struct schema into an OR of concrete
-   accessors, so it costs exactly the fields it touches.
-2. ``compile_json_string_predicate(col, path)`` — for untyped JSON string
-   columns: definite paths (child + index only) compile to
-   ``get_json_object(col, path) IS NOT NULL`` (JVM-side Jackson walk).
-3. ``compile_predicate(path)`` — the full grammar compiled to
-   straight-line Python source (``predicate_source``), run on the decoded
-   object inside the decode UDF or on parsed JSON in
-   ``jsonpath_match_many_pandas_udf``, for constructs outside the native
-   subset. ``evaluate``/``match`` interpret the same grammar and are the
-   reference the compiled form is tested against. Semantics identical:
-   errors ⇒ non-match.
+1. ``compile_struct_predicate(col, dtype, path)`` — when the record has a
+   typed struct, compiles the JsonPath subset (child / index / wildcard /
+   recursive descent / array filters with ``== != < <= > >= && ||`` and
+   existence) into a **native boolean Column** over it. Pure Catalyst
+   expressions (``exists`` / higher-order functions) — whole-stage
+   codegen, no Python in the hot path. Recursive descent is
+   schema-directed: ``$..name`` is statically expanded over the struct
+   schema into an OR of concrete accessors, so it costs exactly the
+   fields it touches.
+2. ``compile_predicate(path)`` — every other rule: the full grammar
+   compiled to straight-line Python source (``predicate_source``), run on
+   the decoded object inside the decode UDF or on parsed JSON in
+   ``jsonpath_match_many_pandas_udf``. ``evaluate``/``match`` interpret
+   the same grammar and are the reference the compiled form is tested
+   against. Semantics identical: errors ⇒ non-match.
 
 Grammar (the subset the reference exercises, rules_example.yaml:2-11):
 
@@ -385,7 +383,7 @@ def parse(path: str) -> tuple:
 
 
 # --------------------------------------------------------------------------
-# Tier 3 reference: tree-walking evaluator (the oracle of the compiled form)
+# Python-tier reference: tree-walking evaluator (the oracle of the compiled form)
 # --------------------------------------------------------------------------
 
 
@@ -511,7 +509,7 @@ def evaluate(obj: Any, path: str | tuple) -> list:
 
 
 # --------------------------------------------------------------------------
-# Compiled tier-3: JsonPath → straight-line Python source
+# Python tier: JsonPath → straight-line Python source
 # --------------------------------------------------------------------------
 #
 # The tree-walking interpreter above stays the SEMANTIC ORACLE (tests
@@ -741,7 +739,7 @@ def match(json_text: str | None, path: str | tuple) -> bool:
 
 
 def jsonpath_match_many_pandas_udf(paths: list[str]):
-    """One Arrow-batched pass for a whole tier-3 rule bank: the JSON
+    """One Arrow-batched pass for a whole Python-tier rule bank: the JSON
     text is json.loads'd ONCE per record and every predicate evaluates
     against the same parsed object, returning array<boolean> in rule
     order. With N Python-tier rules the per-rule UDF costs N parses per
@@ -775,7 +773,7 @@ def jsonpath_match_many_pandas_udf(paths: list[str]):
 
 
 # --------------------------------------------------------------------------
-# Tier 1: native Column compiler over a typed struct column
+# Native tier: Column compiler over a typed struct column
 # --------------------------------------------------------------------------
 
 NodeFn = Callable[[Column], Column]  # node column -> boolean Column
@@ -1083,6 +1081,14 @@ def _recursive_fns(dtype: T.DataType, name: str, rest: tuple) -> list[NodeFn] | 
     return fns
 
 
+def compiles_natively(path: str | tuple, struct_type: T.DataType | None) -> bool:
+    """True when ``compile_struct_predicate`` accepts ``path`` over
+    ``struct_type`` — decided on the parse tree, without building a Column
+    (so without a SparkContext). Raises JsonPathError like ``parse``."""
+    steps = parse(path) if isinstance(path, str) else path
+    return struct_type is not None and _exists_fn(struct_type, steps) is not None
+
+
 def compile_struct_predicate(
     col: Column, dtype: T.DataType, path: str | tuple
 ) -> Column | None:
@@ -1102,7 +1108,7 @@ def compile_struct_predicate(
 
 
 # --------------------------------------------------------------------------
-# Tier 2: definite paths over untyped JSON strings
+# Definite paths over untyped JSON strings (not planned by dispatch)
 # --------------------------------------------------------------------------
 
 
@@ -1129,14 +1135,11 @@ def compile_json_string_predicate(col: Column, path: str | tuple) -> Column | No
     KNOWN DIVERGENCE (deliberate, pinned in tests/test_jsonpath.py):
     ``get_json_object`` returns SQL NULL for both a MISSING key and a key
     explicitly set to JSON ``null``, so ``{"a": null}`` + ``$.a`` is a
-    non-match on this tier while Jayway (and the tier-3 evaluator) match
-    the path. There is no detection/fallback — tier 2 wins whenever the
-    path is definite. This is benign for the dispatch pipeline because
-    protobuf JSON printing never emits null values (proto3 default
-    omission, functions/protowire.py), so no tx JSON the rules see can
-    contain an explicit null. Callers evaluating arbitrary user JSON that
-    must distinguish null-valued keys should use the tier-3 evaluator
-    directly (``jsonpath_matches_udf``).
+    non-match here while Jayway (and the Python evaluator) match
+    the path. Dispatch does not use this function: its rules run natively
+    over a typed struct or in the Python evaluator
+    (``jsonpath_match_many_pandas_udf``), which matches null-valued keys
+    like Jayway.
     """
     steps = parse(path) if isinstance(path, str) else path
     gpath = _definite_get_json_path(steps)

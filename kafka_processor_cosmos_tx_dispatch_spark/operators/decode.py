@@ -16,9 +16,8 @@ must emit them verbatim (TopologyProducer.kt:122), and rule topics may
 re-serialize (here: original bytes, which round-trip identically for
 the supported subset).
 
-Downstream, `operators/dispatch.py` consumes this with
-`json_col="tx_json", error_col="error"` — the full reference topology is
-then decode → dispatch → route with zero extra stages.
+`operators/dispatch.py:route` wires this stage to dispatch and
+`value_for_topic` — the full reference topology with zero extra stages.
 """
 
 from __future__ import annotations
@@ -87,8 +86,9 @@ def decode_tx_records(
 
     ``match_paths``: JsonPath predicates to evaluate ON THE DECODED
     OBJECT inside the same UDF, emitted as ``tier3_col:
-    array<boolean>`` for `dispatch(tier3_col=...)` (in
-    `python_tier_paths()` order). Without this fusion the downstream
+    array<boolean>`` for `dispatch(tier3_col=...)`. `route` passes
+    `python_tier_paths(rules)` — on wire input that is every rule that
+    parses, in rule order. Without this fusion the downstream
     Python matcher re-parses the JSON text the decoder just serialized
     — one redundant json.loads per record — AND the ~KB tx_json strings
     make a second full Arrow round-trip to a separate Python worker
@@ -100,7 +100,8 @@ def decode_tx_records(
     with the UDF. Per-path error semantics match the
     unfused tier (error ⇒ False for that rule only,
     TopologyProducer.kt:221-223); decode failures emit all-False (the
-    dispatcher's error sentinel wins before tier-3 is consulted)."""
+    dispatcher's error sentinel wins before the Python-tier results are
+    consulted)."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 

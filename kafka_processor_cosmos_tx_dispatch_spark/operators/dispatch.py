@@ -6,11 +6,13 @@ DataFrame plan:
 
     reference                           here
     ---------                           ----
-    mapValues tx-deserialization        caller provides tx struct / error col
+    mapValues tx-deserialization        route(): decode_tx_records or from_json
     mapValues evaluate-tx (:97,205-231) with_matches(): one array<int> column
     flatMapValues flatten (:100-105)    explode(matches)
     split()+branches (:106-201)         a 'topic' string column
     per-branch serialization            value_for_topic() projections
+
+`route()` builds that whole chain from a Kafka-shaped frame.
 
 Semantics pinned by the reference tests (TopologyTest.kt:88-94):
   * multicast — a record matching k rules yields k output rows;
@@ -32,6 +34,8 @@ reference's stateless topology, and survives any scale-up.
 
 from __future__ import annotations
 
+import warnings
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -41,43 +45,10 @@ from pyspark.sql import types as T
 from ..functions import jsonpath as jp
 from ..functions.exprs import bind
 from ..rules import ERROR, UNFILTERED, DispatchRule
+from .decode import decode_tx_records
 
 DEFAULT_DLQ_TOPIC = "dlq"
-
-
-def _predicate_jvm(
-    rule: DispatchRule,
-    json_col: Column | None,
-    struct_col: Column | None,
-    struct_type: T.DataType | None,
-) -> Column | None:
-    """Tiers 1-2 only (plus the never-match compile for unparseable
-    predicates); None means the rule needs the tier-3 Python evaluator,
-    which with_matches batches into one fused UDF for every such rule."""
-    try:
-        jp.parse(rule.predicate)
-    except jp.JsonPathError as e:
-        import warnings
-
-        warnings.warn(
-            f"rule {rule.name!r}: unparseable predicate "
-            f"{rule.predicate!r} ({e}) — compiled to never-match",
-            stacklevel=2,
-        )
-        return F.lit(False)
-    if struct_col is not None and struct_type is not None:
-        compiled = jp.compile_struct_predicate(struct_col, struct_type, rule.predicate)
-        if compiled is not None:
-            return compiled
-    if json_col is not None:
-        compiled = jp.compile_json_string_predicate(json_col, rule.predicate)
-        if compiled is not None:
-            return compiled
-    if json_col is None and (struct_col is None or struct_type is None):
-        raise ValueError(
-            f"rule {rule.name!r} needs a json_col or a typed struct_col"
-        )
-    return None
+_TIER3 = "__tier3"
 
 
 def python_tier_paths(
@@ -85,18 +56,20 @@ def python_tier_paths(
     json_col: str = "tx_json",
     struct_type: T.StructType | None = None,
 ) -> list[str]:
-    """Predicates (in rule order) that `with_matches` would route to the
-    Python tier given the same views — the contract for precomputing a
-    `tier3_col` upstream (e.g. fused into the decode UDF, where the
-    parsed object already exists and the per-record json.loads can be
-    skipped)."""
-    jc = F.col(json_col)
-    sc = F.col("__s") if struct_type is not None else None
-    return [
-        r.predicate
-        for r in rules
-        if _predicate_jvm(r, jc, sc, struct_type) is None
-    ]
+    """Predicates, in rule order, that `with_matches` runs in the Python
+    tier: every rule that parses and does not compile natively over
+    ``struct_type`` (all of them when there is no struct). This order is
+    the contract of a precomputed ``tier3_col``. Decided on the parse
+    tree, so it needs no SparkContext. ``json_col`` plays no part in the
+    choice; it stays because existing callers pass it."""
+    paths = []
+    for r in rules:
+        try:
+            if not jp.compiles_natively(r.predicate, struct_type):
+                paths.append(r.predicate)
+        except jp.JsonPathError:
+            pass  # with_matches compiles it to never-match and warns
+    return paths
 
 
 def with_matches(
@@ -105,7 +78,6 @@ def with_matches(
     json_col: str | None = None,
     struct_col: str | None = None,
     error_col: str | None = None,
-    out_col: str = "matches",
     tier3_col: str | None = None,
 ) -> DataFrame:
     """Add ``matches: array<int>`` — indices of matching rules in rule order.
@@ -116,20 +88,35 @@ def with_matches(
     the reference's evaluate-once/route-by-tag shape; Catalyst's
     subexpression elimination keeps it single-pass.
 
+    Each rule is one of: never-match (with a warning) when its path does
+    not parse; native, over ``struct_col``, when `jp.compiles_natively`
+    accepts it; otherwise Python — the `python_tier_paths()` rules.
+
     ``tier3_col``: name of an existing ``array<boolean>`` column holding
     the PRECOMPUTED Python-tier results, one per `python_tier_paths()`
-    entry in rule order (produced upstream, e.g. by
+    entry in rule order (produced upstream by
     ``decode_tx_records(match_paths=...)`` where the decoded object is
-    already in hand). When set, no matcher UDF is planned and the column
-    is consumed (dropped from the output).
+    already in hand; `route` wires both). When set, no matcher UDF is
+    planned and the column is consumed (dropped from the output).
     """
-    jc = F.col(json_col) if json_col else None
-    sc = F.col(struct_col) if struct_col else None
     st = df.schema[struct_col].dataType if struct_col else None
 
-    preds: list[Column | None] = [
-        _predicate_jvm(r, jc, sc, st) for r in rules
-    ]
+    preds: list[Column | None] = []
+    for r in rules:
+        try:
+            steps = jp.parse(r.predicate)
+        except jp.JsonPathError as e:
+            warnings.warn(
+                f"rule {r.name!r}: unparseable predicate "
+                f"{r.predicate!r} ({e}) — compiled to never-match",
+                stacklevel=2,
+            )
+            preds.append(F.lit(False))
+            continue
+        if jp.compiles_natively(steps, st):
+            preds.append(jp.compile_struct_predicate(F.col(struct_col), st, steps))
+        else:
+            preds.append(None)
     py_idx = [i for i, p in enumerate(preds) if p is None]
     if py_idx and tier3_col is not None:
         for pos, i in enumerate(py_idx):
@@ -139,12 +126,12 @@ def with_matches(
                 F.element_at(F.col(tier3_col), pos + 1), F.lit(False)
             )
     elif py_idx:
-        if jc is None:
+        if json_col is None:
             raise ValueError(
                 f"rule {rules[py_idx[0]].name!r} needs a json_col or a "
                 "typed struct_col"
             )
-        # Every tier-3 rule rides ONE fused UDF (one json.loads per
+        # Every Python-tier rule rides ONE fused UDF (one json.loads per
         # record for the whole bank, one Arrow column back). The fused
         # array is MATERIALIZED as its own column rather than inlined
         # into each element_at: inlining leaves m copies of the same
@@ -153,8 +140,8 @@ def with_matches(
         # optimizer-version-dependent behavior.
         many = jp.jsonpath_match_many_pandas_udf(
             [rules[i].predicate for i in py_idx]
-        )(jc)
-        tier3_col = f"__tier3_{out_col}"
+        )(F.col(json_col))
+        tier3_col = "__tier3_matches"
         df = df.withColumn(tier3_col, many)
         for pos, i in enumerate(py_idx):
             preds[i] = F.element_at(F.col(tier3_col), pos + 1)
@@ -165,9 +152,8 @@ def with_matches(
     no_match = F.array(F.lit(UNFILTERED))
     # bind(): `hits` (the full rule-bank evaluation) appears twice in the
     # WHEN/OTHERWISE below; without the let-binding Catalyst duplicates
-    # the whole predicate array — including any get_json_object calls —
-    # textually into both branches (and into any filter later inferred
-    # from this column).
+    # the whole predicate array textually into both branches (and into
+    # any filter later inferred from this column).
     matched = bind(
         hits, lambda h: F.when(F.size(h) > 0, h).otherwise(no_match)
     )
@@ -175,7 +161,7 @@ def with_matches(
         matched = F.when(
             F.col(error_col).isNotNull(), F.array(F.lit(ERROR))
         ).otherwise(matched)
-    out = df.withColumn(out_col, matched.cast(T.ArrayType(T.IntegerType())))
+    out = df.withColumn("matches", matched.cast(T.ArrayType(T.IntegerType())))
     if tier3_col is not None:
         # consumed plumbing — caller-provided or the internally
         # materialized fused array (tier3_col was reassigned above)
@@ -321,6 +307,41 @@ def value_for_topic(
         .otherwise(F.encode(dlq_envelope(txj, dlq_bytes), "UTF-8"))
     )
     return dispatched.withColumn("value", value)
+
+
+def route(
+    df: DataFrame,
+    rules: list[DispatchRule],
+    *,
+    schema: T.StructType | None = None,
+    error_topic: str | None = None,
+    dlq_topic: str = DEFAULT_DLQ_TOPIC,
+) -> DataFrame:
+    """The whole topology, batch or streaming: decode → match →
+    multicast → per-topic ``value``. One row per (record, destination):
+    ``df``'s columns, the tx views, ``rule_idx``, ``rule_name``, ``topic``,
+    and ``value`` replaced by the destination's payload.
+
+    ``df``'s ``value`` holds TxRaw wire bytes (``schema is None``: decoded
+    in Python, every rule evaluated on the decoded object in the decode
+    UDF) or protobuf-JSON text of struct type ``schema`` (``from_json``;
+    rules native where they compile, the rest in the JSON-text UDF)."""
+    if schema is None:
+        df = decode_tx_records(
+            df, match_paths=python_tier_paths(rules), tier3_col=_TIER3
+        )
+        views = {"error_col": "error", "tier3_col": _TIER3}
+    else:
+        df = df.withColumn("tx_json", F.col("value").cast("string"))
+        df = df.withColumn("tx", F.from_json("tx_json", schema))
+        views = {"struct_col": "tx"}
+    routed = dispatch(
+        df, rules, json_col="tx_json", dlq_topic=dlq_topic,
+        error_topic=error_topic, **views,
+    )
+    return value_for_topic(
+        routed, rules, payload_col="value", json_col="tx_json", dlq_topic=dlq_topic
+    )
 
 
 def dispatch_metrics() -> list[Column]:

@@ -95,11 +95,9 @@ def _events_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.withColumn("rec", rec)
 
 
-# Rule bank that FORCES the tier-3 Arrow evaluator: evaluated against a
-# JSON-string view (no typed struct), so the regex and numeric-band
-# filters are outside the tier-2 definite-path subset and fall to the
-# fused Python evaluator, while the two definite paths stay tier-2
-# native — a mixed bank through with_matches' per-rule tier routing.
+# Rule bank for the Python-tier Arrow evaluator: evaluated against a
+# JSON-string view (no typed struct), so every rule — regex, numeric
+# band and the two definite paths — runs in the one fused Python UDF.
 TIER3_RULES = [
     DispatchRule(
         "error-or-signup", "topic-es", "$[?(@.eventType =~ /error|signup/)]"

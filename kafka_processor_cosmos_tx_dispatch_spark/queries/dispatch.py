@@ -107,21 +107,18 @@ def dispatch_dlq_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dispatch_route_tier3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dispatch topology with a rule bank that exercises the TIER-3
-    fallback in the driver-proven path (r10 verdict #6: every prior
-    driver-green dispatch row compiled 100% tier-1/2 native). The record
-    view here is a JSON STRING (to_json of the event — the reference's
-    own evaluation substrate, TopologyProducer.kt:213), so the regex
-    rule (`=~`, Jayway full-match semantics) and the &&-band filter are
-    uncompilable on the definite-path tier-2 and route through the ONE
-    fused Arrow UDF (with_matches: single json.loads per record for the
-    whole bank), while `$.bigValue` / `$.missing` stay tier-2
-    get_json_object natives — per-rule tier mixing in one bank. The
+    """The dispatch topology with a rule bank that runs in the Python
+    tier. The record view here is a JSON STRING (to_json of the event —
+    the reference's own evaluation substrate, TopologyProducer.kt:213)
+    with no typed struct, so every rule — the regex rule (`=~`, Jayway
+    full-match semantics), the &&-band filter and the definite paths
+    `$.bigValue` / `$.missing` — routes through the ONE fused Arrow UDF
+    (with_matches: single json.loads per record for the whole bank). The
     sometimes-absent `bigValue` key (to_json omits nulls) makes the
     definite-path rule a real filter rather than an always-match.
 
     Scale: still narrow and shuffle-free like dispatch_route; the Python
-    stage is one Arrow hop costing parse + 2 cheap walks per record —
+    stage is one Arrow hop costing parse + 4 cheap walks per record —
     the measured fused-bank design (SURVEY §8 r7 deltas). The oracle
     re-derives every rule relationally; regex full-match anchoring
     (^(?:...)$) mirrors the evaluator's \\A(?:...)\\Z."""

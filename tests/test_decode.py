@@ -434,9 +434,7 @@ def test_routing_on_ibc_field(spark):
     df = spark.createDataFrame(
         [(1, tx_ibc), (2, tx_wasm), (3, TX1)], "tx_id int, value binary"
     )
-    routed = dsp.dispatch(
-        decode_tx_records(df), rules, json_col="tx_json", error_col="error"
-    )
+    routed = dsp.route(df, rules)
     got = sorted((r["tx_id"], r["topic"]) for r in routed.collect())
     assert got == [(1, "topic-ibc"), (2, "topic-wasm"), (3, "dlq")]
 
@@ -480,9 +478,7 @@ def test_routing_on_validator_and_vesting_fields(spark):
     df = spark.createDataFrame(
         [(1, tx_val), (2, tx_vest), (3, TX1)], "tx_id int, value binary"
     )
-    routed = dsp.dispatch(
-        decode_tx_records(df), rules, json_col="tx_json", error_col="error"
-    )
+    routed = dsp.route(df, rules)
     got = sorted((r["tx_id"], r["topic"]) for r in routed.collect())
     assert got == [(1, "topic-validators"), (2, "topic-vesting"), (3, "dlq")]
 
@@ -524,9 +520,7 @@ def test_routing_on_non_msgsend_predicate(spark):
     df = spark.createDataFrame(
         [(1, tx_del), (2, TX1)], "tx_id int, value binary"
     )
-    routed = dsp.dispatch(
-        decode_tx_records(df), rules, json_col="tx_json", error_col="error"
-    )
+    routed = dsp.route(df, rules)
     got = sorted((r["tx_id"], r["topic"]) for r in routed.collect())
     assert got == [(1, "topic-staking"), (2, "dlq")]
 
@@ -554,20 +548,13 @@ def test_golden_routing_end_to_end(spark):
         (7, TX_64BIT),
     ]
     df = spark.createDataFrame(inputs, "tx_id int, value binary")
-    decoded = decode_tx_records(df)
-    tx_json = {r["tx_id"]: r["tx_json"] for r in decoded.collect()}
+    out = dsp.route(df, RULES, error_topic="error").collect()
+    tx_json = {r["tx_id"]: r["tx_json"] for r in out}
     for tx_id, raw in inputs:
         want = None if raw == TX_ERR else json.dumps(protowire.decode_tx(raw), separators=(",", ":"))
         assert tx_json[tx_id] == want, tx_id
     assert '"proposalId":"18446744073709551615"' in tx_json[7]
-    routed = dsp.dispatch(
-        decoded,
-        RULES,
-        json_col="tx_json",
-        error_col="error",
-        error_topic="error",
-    )
-    got = sorted((r["tx_id"], r["topic"]) for r in routed.collect())
+    got = sorted((r["tx_id"], r["topic"]) for r in out)
     assert got == [
         (1, "topic-1"),
         (2, "topic-1"),
@@ -579,10 +566,7 @@ def test_golden_routing_end_to_end(spark):
         (7, "dlq"),
     ]
 
-    valued = dsp.value_for_topic(
-        routed, RULES, payload_col="value", raw_col="value", json_col="tx_json"
-    )
-    rows = {(r["tx_id"], r["topic"]): bytes(r["value"]) for r in valued.collect()}
+    rows = {(r["tx_id"], r["topic"]): bytes(r["value"]) for r in out}
     # error topic carries the ORIGINAL bytes (TopologyProducer.kt:122)
     assert rows[(4, "error")] == TX_ERR
     # rule topics carry the payload bytes
@@ -724,10 +708,7 @@ def test_descriptor_set_is_valid_protobuf(spark):
 
 def test_error_records_dropped_without_error_topic(spark):
     df = spark.createDataFrame([(4, TX_ERR)], "tx_id int, value binary")
-    routed = dsp.dispatch(
-        decode_tx_records(df), RULES, json_col="tx_json", error_col="error"
-    )
-    assert routed.count() == 0
+    assert dsp.route(df, RULES).count() == 0
 
 
 def test_streaming_decode_dispatch(spark, tmp_path):
@@ -740,13 +721,7 @@ def test_streaming_decode_dispatch(spark, tmp_path):
     ).write.parquet(src)
 
     stream = spark.readStream.schema("tx_id int, value binary").parquet(src)
-    routed = dsp.dispatch(
-        decode_tx_records(stream),
-        RULES,
-        json_col="tx_json",
-        error_col="error",
-        error_topic="error",
-    ).select("tx_id", "topic")
+    routed = dsp.route(stream, RULES, error_topic="error").select("tx_id", "topic")
     q = (
         routed.writeStream.format("memory")
         .queryName("decode_stream")
@@ -766,14 +741,13 @@ def test_streaming_decode_dispatch(spark, tmp_path):
 
 
 def test_fused_decode_match_parity(spark):
-    """decode_tx_records(match_paths=...) + dispatch(tier3_col=...)
-    must route EXACTLY like the unfused decode → matcher-UDF pipeline —
-    the fusion only moves the Python-tier evaluation onto the decoded
-    dict before serialization (skipping the per-record json.loads and
-    the tx_json Arrow round-trip), never changes semantics. Covers:
-    multicast, DLQ fallback, never-matching definite path, decode
-    failure routed to the error topic, and the no-Python-tier rule bank
-    (match_paths=None degenerate case)."""
+    """route() on wire input evaluates every rule inside the decode UDF
+    and must route EXACTLY like the unfused decode → JSON-text matcher
+    pipeline, and route() on the same txs as JSON text (all rules
+    native over the struct) like both: multicast, DLQ fallback,
+    never-matching definite path, decode failure to the error topic."""
+    from pyspark.sql import types as T
+
     df = spark.createDataFrame(
         [(1, TX1), (2, TX2), (3, TX3), (4, TX_ERR)], "tx_id int, value binary"
     )
@@ -788,31 +762,59 @@ def test_fused_decode_match_parity(spark):
         error_col="error",
         error_topic="error",
     )
-    paths = dsp.python_tier_paths(RULES, json_col="tx_json")
-    assert paths, "fixture bank should exercise the Python tier"
-    fused = dsp.dispatch(
-        decode_tx_records(df, match_paths=paths),
-        RULES,
-        json_col="tx_json",
-        error_col="error",
-        error_topic="error",
-        tier3_col="__tier3",
-    )
+    assert dsp.python_tier_paths(RULES) == [r.predicate for r in RULES]
+    fused = dsp.route(df, RULES, error_topic="error")
     assert routes(fused) == routes(unfused)
     assert "__tier3" not in fused.columns  # plumbing consumed
 
-    # single-JVM-tier bank (definite path -> tier 2): no python paths,
-    # plain decode, no tier3 column anywhere
-    jvm_only = [RULES[2]]  # "never": $.nop
-    assert dsp.python_tier_paths(jvm_only, json_col="tx_json") == []
-    out = dsp.dispatch(
-        decode_tx_records(df),
-        jvm_only,
-        json_col="tx_json",
-        error_col="error",
-        error_topic="error",
-    )
+    # a definite path runs in Python on wire input, natively over a struct
+    never = [RULES[2]]  # $.nop
+    assert dsp.python_tier_paths(never) == ["$.nop"]
+    msg = T.StructType([T.StructField(f, T.StringType()) for f in ("@type", "fromAddress")])
+    msgs = T.StructType([T.StructField("messages", T.ArrayType(msg))])
+    tx_type = T.StructType([T.StructField("body", msgs)])
+    assert dsp.python_tier_paths(never, struct_type=tx_type) == []
+    out = dsp.route(df, never, error_topic="error")
     assert routes(out) == [(1, "dlq"), (2, "dlq"), (3, "dlq"), (4, "error")]
+
+    assert dsp.python_tier_paths(RULES, struct_type=tx_type) == []
+    texts = [(i, json.dumps(protowire.decode_tx(b)).encode()) for i, b in [(1, TX1), (2, TX2)]]
+    texts = spark.createDataFrame(texts + [(3, b'{"body":{}}')], "tx_id int, value binary")
+    assert routes(dsp.route(texts, RULES, schema=tx_type)) == routes(fused)[:-1]  # no error row
+
+
+def test_poison_records_through_route(spark):
+    """Poison records next to normal ones: an Any nested 1,000 deep
+    (authz MsgExec in MsgExec) and a non-UTF-8 memo reach the error topic
+    with their original bytes, a 4 MB memo routes like its small twin,
+    and the normal records route exactly as they do alone."""
+    send = _any(MSG_SEND_URL, _msg_send(OKP4_ADDR, "tesTo"))
+    deep = send
+    for _ in range(1000):
+        deep = _any(MSG_AUTHZ_EXEC_URL, _ld(1, b"okp41grantee") + _ld(2, deep))
+    poison = [
+        (10, _tx_raw(_ld(1, deep))),
+        (11, _tx_raw(_ld(1, send) + _ld(2, b"\xff\xfe"))),
+        (12, _tx_raw(_ld(1, send) + _ld(2, b"m" * (4 << 20)))),
+        (13, _tx_raw(_ld(1, send) + _ld(2, b"m"))),  # the 4 MB memo's twin
+    ]
+    normal = [(1, TX1), (2, TX2), (3, TX3), (4, TX_ERR)]
+
+    def routed(rows):
+        df = spark.createDataFrame(rows, "tx_id int, value binary")
+        out = dsp.route(df, RULES, error_topic="error").collect()
+        return {(r["tx_id"], r["topic"]): (bytes(r["value"]), r["error"]) for r in out}
+
+    alone = routed(normal)
+    mixed = routed(normal + poison)
+    assert {k: v for k, v in mixed.items() if k[0] < 10} == alone
+    raw = dict(poison)
+    assert mixed[(10, "error")] == (raw[10], "malformed tx: maximum recursion depth exceeded")
+    assert mixed[(11, "error")] == (raw[11], "invalid utf-8 string")
+    topics = {i: {t for j, t in mixed if j == i} for i in (10, 11, 12, 13)}
+    assert topics[10] == topics[11] == {"error"}
+    assert topics[12] == topics[13] == {"topic-1", "topic-2"}
+    assert mixed[(12, "topic-1")] == (raw[12], None)
 
 
 def test_any_registry_r12_wave2():
@@ -1219,9 +1221,7 @@ def test_routing_on_proposal_content_field(spark):
     df = spark.createDataFrame(
         [(1, tx_param), (2, tx_spend), (3, TX1)], "tx_id int, value binary"
     )
-    routed = dsp.dispatch(
-        decode_tx_records(df), rules, json_col="tx_json", error_col="error"
-    )
+    routed = dsp.route(df, rules)
     got = sorted((r["tx_id"], r["topic"]) for r in routed.collect())
     assert got == [(1, "topic-params"), (2, "topic-spend"), (3, "dlq")]
 
@@ -1570,8 +1570,6 @@ def test_routing_on_redelegate_and_ica_fields(spark):
     df = spark.createDataFrame(
         [(1, tx_redel), (2, tx_ica), (3, TX1)], "tx_id int, value binary"
     )
-    routed = dsp.dispatch(
-        decode_tx_records(df), rules, json_col="tx_json", error_col="error"
-    )
+    routed = dsp.route(df, rules)
     got = sorted((r["tx_id"], r["topic"]) for r in routed.collect())
     assert got == [(1, "topic-redelegate"), (2, "topic-ica"), (3, "dlq")]

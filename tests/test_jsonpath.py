@@ -366,6 +366,8 @@ class TestExtendedConstructs:
         )
         from kafka_processor_cosmos_tx_dispatch_spark.rules import DispatchRule
 
+        from kafka_processor_cosmos_tx_dispatch_spark.sources import txgen
+
         df = spark.createDataFrame([(1, '{"a": 1}')], "tx_id long, tx_json string")
         rules = [
             DispatchRule("bad", "t1", "$.a[0:2"),  # unterminated bracket
@@ -375,6 +377,20 @@ class TestExtendedConstructs:
             warnings.simplefilter("ignore")
             out = dsp.dispatch(df, rules, json_col="tx_json")
         assert [(r["tx_id"], r["topic"]) for r in out.collect()] == [(1, "t2")]
+
+        # route() classifies the bank twice (decode UDF, then dispatch)
+        # but warns once; txgen record 1 is the only one from OKP4_ADDR
+        wire = [txgen.record_at(i, 0) for i in range(4)]
+        wire = spark.createDataFrame(wire, "k string, value binary")
+        p_okp4 = f"$..messages[?(@.fromAddress == '{txgen.OKP4_ADDR}')]"
+        rules[1] = DispatchRule("good", "t2", p_okp4)
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            out = dsp.route(wire, rules)
+        msgs = [str(w.message) for w in caught if "unparseable" in str(w.message)]
+        assert len(msgs) == 1 and msgs[0].startswith("rule 'bad'"), msgs
+        got = sorted((r["k"], r["topic"]) for r in out.collect())
+        assert got == [("tx-0", "dlq"), ("tx-1", "t2"), ("tx-2", "dlq"), ("tx-3", "dlq")]
 
 
 class TestCompiledPredicateFuzz:

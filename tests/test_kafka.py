@@ -10,9 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_processor_cosmos_tx_dispatch_spark.operators import dispatch as dsp
-from kafka_processor_cosmos_tx_dispatch_spark.operators.decode import (
-    decode_tx_records,
-)
 from kafka_processor_cosmos_tx_dispatch_spark.rules import DispatchRule
 from kafka_processor_cosmos_tx_dispatch_spark.sources import txgen
 from kafka_processor_cosmos_tx_dispatch_spark.sources.kafka import (
@@ -106,15 +103,8 @@ class TestBuilders:
             .option("rows_per_batch", 50)
             .load()
         )
-        routed = dsp.dispatch(
-            decode_tx_records(stream),
-            RULES,
-            json_col="tx_json",
-            error_col="error",
-            error_topic="errors",
+        routed = dsp.route(stream, RULES, error_topic="errors").select(
+            "key", "value", "topic"
         )
-        routed = dsp.value_for_topic(
-            routed, RULES, payload_col="value", json_col="tx_json"
-        ).select("key", "value", "topic")
         writer = kafka_topic_sink(routed, "broker:9092", str(tmp_path / "ckpt"))
         assert writer is not None

@@ -40,19 +40,18 @@ def test_dispatch_evaluates_rules_once(spark, sf_dir):
 
 
 def test_dispatch_tier3_bank_is_one_fused_arrow_pass(spark, sf_dir):
-    """dispatch_route_tier3's two Python-tier rules must ride ONE fused
-    ArrowEvalPython stage (one json.loads per record for the whole
-    bank, one Arrow transfer — with_matches' fused-bank contract), the
-    tier-2 rules stay native, and the plan stays shuffle-free like the
-    all-native dispatch."""
+    """dispatch_route_tier3's rules (a JSON-string view, no struct) all
+    ride ONE fused ArrowEvalPython stage (one json.loads per record for
+    the whole bank, one Arrow transfer — with_matches' fused-bank
+    contract), and the plan stays shuffle-free like the all-native
+    dispatch."""
     from kafka_processor_cosmos_tx_dispatch_spark import queries as q
 
     plan = _plan(q.queries()["dispatch_route_tier3"](spark, sf_dir))
     assert plan.count("ArrowEvalPython") == 1, plan
     assert "Exchange" not in plan
-    # the two definite-path rules compile to get_json_object natives
-    # inside the same projection that builds the JSON view
-    assert "get_json_object" in plan
+    # the one get_json_object is the view's own `$.k`: dispatch plans none
+    assert plan.count("get_json_object") == 1, plan
 
 
 def test_star_join_broadcasts_all_dims(spark, sf_dir):

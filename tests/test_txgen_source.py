@@ -8,7 +8,6 @@ import uuid
 from pyspark.sql import functions as F
 
 from kafka_processor_cosmos_tx_dispatch_spark.operators import dispatch as dsp
-from kafka_processor_cosmos_tx_dispatch_spark.operators.decode import decode_tx_records
 from kafka_processor_cosmos_tx_dispatch_spark.rules import DispatchRule
 from kafka_processor_cosmos_tx_dispatch_spark.sources import txgen
 
@@ -22,13 +21,6 @@ RULES = [
 ]
 
 N, ERROR_EVERY = 200, 10
-
-
-def _routed(spark, df):
-    decoded = decode_tx_records(df)
-    return dsp.dispatch(
-        decoded, RULES, json_col="tx_json", error_col="error", error_topic="errors"
-    )
 
 
 def test_batch_read_is_deterministic(spark):
@@ -64,7 +56,7 @@ def test_batch_decode_dispatch_routing_mix(spark):
         .option("error_every", ERROR_EVERY)
         .load()
     )
-    out = _routed(spark, df)
+    out = dsp.route(df, RULES, error_topic="errors")
     got = {}
     for r in out.select("key", "topic").collect():
         got.setdefault(r["key"], set()).add(r["topic"])

@@ -132,15 +132,13 @@ def main() -> None:
         lambda: run(dsp.dispatch(ev.withColumn("rec", rec), EVENT_RULES, struct_col="rec")),
     )
 
-    # full reference pipeline at generator scale: Arrow-batched txgen →
-    # Python decode tier → fused tier-3 JsonPath dispatch (one
-    # json.loads per record for the whole rule bank). This is the
-    # engine's slowest honest path (decode cannot run JVM-side in this
-    # container); the probe pins its rows/sec so a regression in any of
-    # the three chained Python stages is measured, not guessed.
-    from kafka_processor_cosmos_tx_dispatch_spark.operators.decode import (
-        decode_tx_records,
-    )
+    # full reference pipeline at generator scale through route():
+    # Arrow-batched txgen → Python decode with every rule evaluated on
+    # the decoded dict (no re-parse, no second Arrow hop for the tx_json
+    # text) → multicast → per-topic value. This is the engine's slowest
+    # honest path (decode cannot run JVM-side in this container); the
+    # probe pins its rows/sec so a regression in the Python stage is
+    # measured, not guessed.
     from kafka_processor_cosmos_tx_dispatch_spark.rules import DispatchRule
     from kafka_processor_cosmos_tx_dispatch_spark.sources import txgen as txg
 
@@ -165,35 +163,9 @@ def main() -> None:
         .load()
     )
     probe(
-        "decode_dispatch_python_tier",
-        n_tx,
-        lambda: run(
-            dsp.dispatch(
-                decode_tx_records(tx_src),
-                tx_rules,
-                json_col="tx_json",
-                error_col="error",
-                error_topic="errors",
-            )
-        ),
-    )
-    # fused variant (the production shape since r7): tier-3 predicates
-    # evaluate inside the decode UDF on the decoded dict — no re-parse,
-    # no second Arrow hop for the tx_json text
-    t3 = dsp.python_tier_paths(tx_rules, json_col="tx_json")
-    probe(
         "decode_dispatch_fused",
         n_tx,
-        lambda: run(
-            dsp.dispatch(
-                decode_tx_records(tx_src, match_paths=t3 or None),
-                tx_rules,
-                json_col="tx_json",
-                error_col="error",
-                error_topic="errors",
-                tier3_col="__tier3" if t3 else None,
-            )
-        ),
+        lambda: run(dsp.route(tx_src, tx_rules, error_topic="errors")),
     )
 
     # tumbling window agg (batch analog of the streaming window)

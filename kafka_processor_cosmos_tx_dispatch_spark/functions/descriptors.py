@@ -7,11 +7,11 @@ TypeRegistry (/root/reference/src/main/kotlin/com/okp4/processor/cosmos/
 ProtoTypeRegistry.kt:16-31) — i.e. it can render ANY type it was compiled
 with, with zero per-type code. This module is the same idea for an engine
 with no compiled classes: the checked-in FileDescriptorSet
-(resources/cosmos_tx.desc) carries
-the full schema, and ONE generated decoder per message type renders it
-by the protobuf-JSON conventions (camelCase/json_name keys, 64-bit ints
-as strings, bytes as base64, enums by name with unknown numbers as ints,
-proto3 scalar default-omission, `Any` nesting with `@type`).  The
+(``load_descriptor_set``) carries the full schema, and ONE generated
+decoder per message type renders it by the protobuf-JSON conventions
+(camelCase/json_name keys, 64-bit ints as strings, bytes as base64,
+enums by name with unknown numbers as ints, proto3 scalar
+default-omission, `Any` nesting with `@type`).  The
 decoders are straight-line Python source generated from the descriptor
 tables, each compiled on its type's first decode (``TypeRegistry.decoders``);
 the transaction itself (functions/protowire.py) decodes through the
@@ -54,7 +54,7 @@ from .protowire import (
     parse_group,
 )
 
-__all__ = ["TypeRegistry", "default_registry"]
+__all__ = ["TypeRegistry", "default_registry", "load_descriptor_set"]
 
 # FieldDescriptorProto.Type (descriptor.proto)
 _T_DOUBLE = 1
@@ -439,17 +439,14 @@ def _any_source(names: dict[str, str]) -> list[str]:
     """``_any(buf)``: an ``Any`` field's value rendered through the type
     its URL names, as ``{"@type": url, ...fields}``.
 
-    UNKNOWN-TYPE POLICY (pinned in tests/test_decode.py): the reference's
-    JsonFormat printer throws on a type absent from its registry, and that
-    call sits OUTSIDE the deserialization Result capture
+    UNKNOWN-TYPE POLICY (pinned in tests/test_decode.py): a type absent
+    from the descriptor set renders opaque, ``{"@type": url, "value":
+    base64}``, so decode stays total and predicates can still match on
+    ``@type``. The reference's JsonFormat printer throws on such a type,
+    and that call sits OUTSIDE the deserialization Result capture
     (TopologyProducer.kt:213-215 prints inside onSuccess with no
-    runCatching) — i.e. an unknown type CRASHES the reference's stream
-    task rather than routing anywhere. A distributed engine must not die
-    on one record, so by default an unregistered type renders opaque
-    ({"@type": url, "value": base64}) — the pipeline stays total and
-    predicates can still match on @type — and under strict_any it raises
-    DecodeError, which the decode stage turns into error-topic routing,
-    the nearest RECOVERABLE analog of the reference's throw."""
+    runCatching) — an unknown type CRASHES the reference's stream task.
+    A distributed engine must not die on one record."""
     url = _Field("typeUrl", 1, _T_STRING, False, "")
     value = _Field("value", 2, _T_BYTES, False, "")
     src = ["def _any(buf):"] + _parse_lines([url, value], {1: "f0", 2: "f1"})
@@ -464,10 +461,12 @@ def _any_source(names: dict[str, str]) -> list[str]:
         '    dec = _TYPES.get(url[url.rfind("/") + 1 :])',
         "    if dec is not None:",
         '        return dec(f1, {"@type": url})',
-        "    if _STRICT:",
-        '        raise DecodeError(f"unregistered Any type: {url!r}")',
         '    return {"@type": url, "value": _b64(f1)}',
     ]
+
+
+def _compile(fqn: str, source: list[str]):
+    return compile("\n".join(source) + "\n", f"<decoder {fqn}>", "exec")
 
 
 _GEN_GLOBALS = {
@@ -497,8 +496,7 @@ class TypeRegistry:
         # generated names: _m<k> per message type, _e<k> per enum table
         self._names = {fqn: f"_m{k}" for k, fqn in enumerate(messages)}
         self._names.update({fqn: f"_e{k}" for k, fqn in enumerate(enums)})
-        self._code: dict[str, object] = {}  # fqn ("" for _any) → compiled source
-        self._tables: dict[bool, dict[str, Callable[[bytes, dict], dict]]] = {}
+        self._table: dict[str, Callable[[bytes, dict], dict]] | None = None
 
     # -- construction --------------------------------------------------------
 
@@ -563,28 +561,20 @@ class TypeRegistry:
 
     # -- decoding ------------------------------------------------------------
 
-    def decoders(self, strict_any: bool = False) -> dict[str, Callable[[bytes, dict], dict]]:
+    def decoders(self) -> dict[str, Callable[[bytes, dict], dict]]:
         """fqn → ``decode(buf, out) -> out``, which adds the message's
         protobuf-JSON fields to ``out``.  Each type's source is generated
         and compiled on its first decode, once per registry, so a process
-        pays only for the types it meets; each ``strict_any`` policy runs
-        its own instance of the code."""
-        table = self._tables.get(strict_any)
-        if table is None:
-            table = {}
-            ns = dict(_GEN_GLOBALS, _STRICT=strict_any, _TYPES=table)
+        pays only for the types it meets."""
+        if self._table is None:
+            table: dict[str, Callable[[bytes, dict], dict]] = {}
+            ns = dict(_GEN_GLOBALS, _TYPES=table)
             ns.update((self._names[fqn], t) for fqn, t in self._enums.items())
-            exec(self._compiled("", lambda: _any_source(self._names)), ns)
+            exec(_compile("", _any_source(self._names)), ns)
             for fqn in self._messages:
                 ns[self._names[fqn]] = table[fqn] = self._first_call(fqn, ns)
-            self._tables[strict_any] = table
-        return table
-
-    def _compiled(self, fqn: str, source: Callable[[], list[str]]):
-        code = self._code.get(fqn)
-        if code is None:
-            code = self._code[fqn] = compile("\n".join(source()) + "\n", f"<decoder {fqn}>", "exec")
-        return code
+            self._table = table
+        return self._table
 
     def _first_call(self, fqn: str, ns: dict) -> Callable[[bytes, dict], dict]:
         """A stand-in that compiles the type's decoder, puts it in its
@@ -594,25 +584,22 @@ class TypeRegistry:
 
         def first_call(buf: bytes, out: dict) -> dict:
             if ns[name] is first_call:
-                code = self._compiled(
-                    fqn, lambda: _message_source(name, self._messages[fqn], self._names)
-                )
-                exec(code, ns)
+                exec(_compile(fqn, _message_source(name, self._messages[fqn], self._names)), ns)
                 ns["_TYPES"][fqn] = ns[name]
             return ns[name](buf, out)
 
         return first_call
 
-    def decode(self, fqn: str, buf: bytes, strict_any: bool = False) -> dict:
+    def decode(self, fqn: str, buf: bytes) -> dict:
         """Render one message of type `fqn` as its protobuf-JSON object."""
-        fn = self.decoders(strict_any).get(fqn)
+        fn = self.decoders().get(fqn)
         if fn is None:
             raise DecodeError(f"type not in descriptor set: {fqn!r}")
         return fn(buf, {})
 
     # -- re-encoding ---------------------------------------------------------
 
-    def reencode(self, fqn: str, buf: bytes, strict_any: bool = False) -> bytes:
+    def reencode(self, fqn: str, buf: bytes) -> bytes:
         """Canonical re-serialization of one message: the bytes
         protobuf-java produces after parse→toByteArray() — known fields
         in ascending number order, minimal varints, proto3 default-valued
@@ -636,15 +623,13 @@ class TypeRegistry:
         for no in sorted(occ):
             fd = known.get(no)
             if fd is not None:
-                out += self._reenc_field(fd, occ[no], strict_any)
+                out += self._reenc_field(fd, occ[no])
         for no in sorted(occ):
             if no not in known:
                 out += self._reenc_unknown(no, occ[no])
         return out
 
-    def _reenc_field(
-        self, fd: _Field, occ: list[tuple[int, object]], strict_any: bool
-    ) -> bytes:
+    def _reenc_field(self, fd: _Field, occ: list[tuple[int, object]]) -> bytes:
         t, no = fd.ftype, fd.number
         if t == _T_GROUP:
             raise DecodeError("proto2 groups are not supported")
@@ -656,11 +641,12 @@ class TypeRegistry:
             for v in vals:
                 if not isinstance(v, bytes):
                     raise DecodeError("expected length-delimited message")
-                if fd.type_name == _ANY_FQN:
-                    body = self._reenc_any(v, strict_any)
-                else:
-                    body = self.reencode(fd.type_name, v, strict_any)
-                out += encode_ld(no, body)
+                # an Any takes this branch too: its `value` is a BYTES
+                # field, so the payload passes through VERBATIM, as in
+                # protobuf-java (TxRaw.parseFrom→toTx→toByteArray never
+                # parses the payload behind an Any), while the envelope
+                # gets the canonical treatment
+                out += encode_ld(no, self.reencode(fd.type_name, v))
             return out
         if t in (_T_STRING, _T_BYTES):
             vals = [v for _wt, v in occ]
@@ -738,26 +724,6 @@ class TypeRegistry:
             return v & 0xFFFFFFFF
         return v
 
-    def _reenc_any(self, buf: bytes, strict_any: bool) -> bytes:
-        """Re-serialize a google.protobuf.Any the way protobuf-java does:
-        the ENVELOPE (type_url, value) is a parsed message and gets the
-        canonical treatment, but `value` is a BYTES field — the payload
-        passes through VERBATIM, never recursively canonicalized. (The
-        reference's TxRaw.parseFrom→toTx→toByteArray never parses the
-        payload behind an Any, so non-canonical-but-legal payload bytes
-        survive the round-trip; an earlier revision normalized them,
-        breaking byte parity — r5 ADVICE.) Routing through the generic
-        reencode over the descriptor's own Any entry also preserves
-        unknown envelope fields in the trailing section. strict_any keeps
-        the pinned unknown-type policy: unregistered type_urls raise so
-        the record routes to the error topic."""
-        if strict_any:
-            f = _g(buf)
-            type_url = _utf8(f[1][-1]) if 1 in f else ""
-            if not self.has_message(type_url.rsplit("/", 1)[-1]):
-                raise DecodeError(f"unregistered Any type: {type_url!r}")
-        return self.reencode(_ANY_FQN, buf, strict_any)
-
     @staticmethod
     def _reenc_unknown(no: int, occ: list[tuple[int, object]]) -> bytes:
         out = b""
@@ -779,6 +745,16 @@ _DESC_PATH = os.path.join(
     "cosmos_tx.desc",
 )
 
+
+def load_descriptor_set() -> bytes:
+    """The checked-in FileDescriptorSet for cosmos.tx.v1beta1 (+ bank/
+    staking/gov/distribution msgs), generated by tools/gen_descriptor.py
+    without protoc — the Spark-native analog of the reference's compiled
+    proto classes (TopologyProducer.kt:86-96)."""
+    with open(_DESC_PATH, "rb") as fh:
+        return fh.read()
+
+
 _default: TypeRegistry | None = None
 
 
@@ -790,6 +766,5 @@ def default_registry() -> TypeRegistry:
     module)."""
     global _default
     if _default is None:
-        with open(_DESC_PATH, "rb") as fh:
-            _default = TypeRegistry.from_bytes(fh.read())
+        _default = TypeRegistry.from_bytes(load_descriptor_set())
     return _default

@@ -9,12 +9,13 @@ non-match (/root/reference/src/main/kotlin/com/okp4/processor/cosmos/
 TopologyProducer.kt:56-59, 216-223).
 
 A rule runs in one of two tiers, chosen from the parse tree alone
-(``compiles_natively``, no Spark needed):
+(``struct_node_fn``, no Spark needed):
 
-1. ``compile_struct_predicate(col, dtype, path)`` — when the record has a
-   typed struct, compiles the JsonPath subset (child / index / wildcard /
-   recursive descent / array filters with ``== != < <= > >= && ||`` and
-   existence) into a **native boolean Column** over it. Pure Catalyst
+1. ``struct_node_fn(dtype, path)`` — when the record has a typed struct,
+   compiles the JsonPath subset (child / index / wildcard / recursive
+   descent / array filters with ``== != < <= > >= && ||`` and existence;
+   a comparison only on a definite relative path) into a node function
+   that builds a **native boolean Column** over it. Pure Catalyst
    expressions (``exists`` / higher-order functions) — whole-stage
    codegen, no Python in the hot path. Recursive descent is
    schema-directed: ``$..name`` is statically expanded over the struct
@@ -25,7 +26,9 @@ A rule runs in one of two tiers, chosen from the parse tree alone
    the decoded object inside the decode UDF or on parsed JSON in
    ``jsonpath_match_many_pandas_udf``. ``evaluate``/``match`` interpret
    the same grammar and are the reference the compiled form is tested
-   against. Semantics identical: errors ⇒ non-match.
+   against. Semantics identical: errors ⇒ non-match, and a comparison
+   between kinds (a boolean against a number, a string against either)
+   is a non-match, for which ``!=`` holds.
 
 Grammar (the subset the reference exercises, rules_example.yaml:2-11):
 
@@ -468,7 +471,20 @@ def _eval_filter(node: Any, expr) -> bool:
     raise JsonPathError(f"unknown filter term {expr!r}")
 
 
+def _same_kind(value: Any, literal: Any) -> bool:
+    """A boolean compares only with a boolean and a number only with a
+    number (Python's ``1 == True`` and ``True < 2`` do not carry over)."""
+    if isinstance(value, bool) or isinstance(literal, bool):
+        return isinstance(value, bool) and isinstance(literal, bool)
+    num = (int, float)
+    if isinstance(value, num) or isinstance(literal, num):
+        return isinstance(value, num) and isinstance(literal, num)
+    return True
+
+
 def _compare(value: Any, op: str, literal: Any) -> bool:
+    """``value <op> literal`` for an existing node: a mismatch in kind is
+    a non-match, so ``!=`` holds for a value of another kind."""
     if op == "in":
         return any(_compare(value, "==", x) for x in literal)
     if op == "=~":
@@ -482,12 +498,12 @@ def _compare(value: Any, op: str, literal: Any) -> bool:
             return re.fullmatch(pattern, value, f) is not None
         except re.error:
             return False
-    if op == "==":
-        return value == literal and type(value) in (type(literal), int, float) or (
-            isinstance(value, bool) == isinstance(literal, bool) and value == literal
-        )
     if op == "!=":
         return not _compare(value, "==", literal)
+    if not _same_kind(value, literal):
+        return False
+    if op == "==":
+        return value == literal
     try:
         if op == "<":
             return value < literal
@@ -523,11 +539,6 @@ def evaluate(obj: Any, path: str | tuple) -> list:
 # become one helper function each.
 
 
-def _eq_literal(v, literal) -> bool:
-    """``==`` as _compare defines it, for literals without a fast form."""
-    return _compare(v, "==", literal)
-
-
 class _Source:
     """Lines, helper functions, fresh names and bound constants of one
     compiled predicate."""
@@ -535,7 +546,7 @@ class _Source:
     def __init__(self):
         self.lines: list[str] = []
         self.helpers: list[str] = []
-        self.consts: dict[str, Any] = {"_eq": _eq_literal}
+        self.consts: dict[str, Any] = {"_cmp": _compare}
         self.n = 0
 
     def name(self, prefix: str) -> str:
@@ -551,21 +562,6 @@ class _Source:
         self.lines.append("    " * ind + line)
 
 
-def _order(op: str, literal):
-    """``v <op> literal``; a type mismatch is False, as in _compare."""
-    import operator
-
-    o = {"<": operator.lt, "<=": operator.le, ">": operator.gt, ">=": operator.ge}[op]
-
-    def cmp(v):
-        try:
-            return o(v, literal)
-        except TypeError:
-            return False
-
-    return cmp
-
-
 def _cmp_expr(src: _Source, v: str, op: str, literal) -> str:
     """Python expression for ``v <op> literal`` with _compare's meaning."""
     if op == "in":
@@ -577,7 +573,7 @@ def _cmp_expr(src: _Source, v: str, op: str, literal) -> str:
             return f"{v} == {literal!r}"
         if isinstance(literal, (int, float)) and not isinstance(literal, bool):
             return f"({v} == {literal!r} and not isinstance({v}, bool))"
-        return f"_eq({v}, {src.const(literal)})"
+        return f"_cmp({v}, '==', {src.const(literal)})"
     if op == "=~":
         import re
 
@@ -588,7 +584,7 @@ def _cmp_expr(src: _Source, v: str, op: str, literal) -> str:
             return "False"
         return f"(isinstance({v}, str) and {src.const(rx)}.fullmatch({v}) is not None)"
     if op in ("<", "<=", ">", ">="):
-        return f"{src.const(_order(op, literal))}({v})"
+        return f"_cmp({v}, {op!r}, {src.const(literal)})"
     raise JsonPathError(f"unknown op {op}")
 
 
@@ -775,12 +771,17 @@ def jsonpath_match_many_pandas_udf(paths: list[str]):
 # --------------------------------------------------------------------------
 # Native tier: Column compiler over a typed struct column
 # --------------------------------------------------------------------------
+#
+# ``_exists_fn`` is the one walker of a path over the struct schema. It
+# returns a node function (node Column -> boolean Column), ``lambda c:
+# F.lit(False)`` when the schema proves the path can never resolve (a
+# definite miss is a non-match, TopologyProducer.kt:221-223), or None for
+# a construct this tier does not compile (the rule runs in Python). At
+# the end of the path it calls ``leaf(column, dtype)``: existence for a
+# rule or an ``Exists`` filter term, the comparison for a ``Cmp`` term.
 
 NodeFn = Callable[[Column], Column]  # node column -> boolean Column
-
-
-def _lit(literal) -> Column:
-    return F.lit(literal)
+Leaf = Callable[[Column, T.DataType], Column]
 
 
 def _field_type(dtype: T.DataType, name: str) -> T.DataType | None:
@@ -791,16 +792,25 @@ def _field_type(dtype: T.DataType, name: str) -> T.DataType | None:
     return None
 
 
+def _literal_fits(dtype: T.DataType, literal) -> bool:
+    """A literal can equal a value of ``dtype``: a string only a string,
+    a boolean only a boolean, a number only a number (as _same_kind)."""
+    if isinstance(literal, bool):
+        return isinstance(dtype, T.BooleanType)
+    if isinstance(literal, (int, float)):
+        return isinstance(dtype, T.NumericType)
+    if isinstance(literal, str):
+        return isinstance(dtype, T.StringType)
+    return False  # null: a null struct field is an absent one
+
+
 def _cmp_column(node: Column, dtype: T.DataType, op: str, literal) -> Column:
-    """Comparison with JsonPath semantics: type-mismatch ⇒ non-match."""
+    """Comparison with _compare's meaning: a literal of another kind than
+    the column's never matches, and ``!=`` then holds where the value
+    exists."""
     if op == "in":
-        # typed membership: only literals type-compatible with the column
-        # can match (string list vs numeric column ⇒ False, like Jayway)
-        is_str_col = isinstance(dtype, T.StringType)
-        compat = [x for x in literal if isinstance(x, str) == is_str_col]
-        if not compat:
-            return F.lit(False)
-        return node.isin(*compat)
+        fits = [x for x in literal if _literal_fits(dtype, x)]
+        return node.isin(*fits) if fits else F.lit(False)
     if op == "=~":
         if not isinstance(dtype, T.StringType):
             return F.lit(False)
@@ -809,66 +819,17 @@ def _cmp_column(node: Column, dtype: T.DataType, op: str, literal) -> Column:
         # Jayway's =~ is Matcher.matches() — a FULL match; rlike searches,
         # so anchor explicitly. Spark rlike is Java regex, same dialect.
         return node.rlike(rf"{prefix}\A(?:{pattern})\Z")
-    if literal is None:
-        return node.isNull() if op == "==" else node.isNotNull()
-    # string literal vs non-string column (or vice versa) never matches,
-    # mirroring Jayway's typed comparison.
-    is_str_col = isinstance(dtype, T.StringType)
-    if isinstance(literal, str) != is_str_col:
-        if op == "!=":
-            return node.isNotNull()  # value exists and is of a different type
-        return F.lit(False)
-    ops = {
-        "==": node == _lit(literal),
-        "!=": node != _lit(literal),
-        "<": node < _lit(literal),
-        "<=": node <= _lit(literal),
-        ">": node > _lit(literal),
-        ">=": node >= _lit(literal),
-    }
-    return ops[op]
-
-
-_MISS = "miss"  # sentinel: path provably absent from the schema
-
-
-def _rel_compile(dtype: T.DataType, rel: tuple):
-    """Compile an '@.a.b[0]' relative path against the schema.
-
-    Returns (column_fn, final_dtype) when walkable, ``_MISS`` when the
-    schema proves the path can never resolve (definite miss ⇒ constant
-    non-match, TopologyProducer.kt:221-223), or None for constructs this
-    tier doesn't support (caller falls back to the UDF evaluator).
-    """
-    fns: list = []
-    dt = dtype
-    for step in rel:
-        if isinstance(step, Child):
-            ft = _field_type(dt, step.name)
-            if ft is None:
-                return _MISS
-            fns.append(lambda c, n=step.name: c.getField(n))
-            dt = ft
-        elif isinstance(step, Index):
-            if not isinstance(dt, T.ArrayType):
-                return _MISS
-            # try_element_at is 1-based; JsonPath [i] is 0-based, [-1] is
-            # last. MUST be the try_ variant: plain element_at THROWS on an
-            # out-of-bounds index under ANSI semantics, but reference
-            # semantics treat any evaluation error as a non-match
-            # (TopologyProducer.kt:221-223) — null propagates to False.
-            pos = step.i + 1 if step.i >= 0 else step.i
-            fns.append(lambda c, p=pos: F.try_element_at(c, F.lit(p)))
-            dt = dt.elementType
-        else:
-            return None
-
-    def colfn(c: Column) -> Column:
-        for f in fns:
-            c = f(c)
-        return c
-
-    return colfn, dt
+    if not _literal_fits(dtype, literal):
+        return node.isNotNull() if op == "!=" else F.lit(False)
+    lit = F.lit(literal)
+    return {
+        "==": node == lit,
+        "!=": node != lit,
+        "<": node < lit,
+        "<=": node <= lit,
+        ">": node > lit,
+        ">=": node >= lit,
+    }[op]
 
 
 def _filter_fn(dtype: T.DataType, expr) -> NodeFn | None:
@@ -889,17 +850,12 @@ def _filter_fn(dtype: T.DataType, expr) -> NodeFn | None:
             return None
         return lambda c: ~F.coalesce(f(c), F.lit(False))
     if isinstance(expr, Exists):
-        f = _exists_fn(dtype, expr.rel)
-        return f
+        return _exists_fn(dtype, expr.rel)
     if isinstance(expr, Cmp):
-        resolved = _rel_compile(dtype, expr.rel)
-        if resolved is _MISS:
-            return lambda c: F.lit(False)  # definite miss ⇒ non-match
-        if resolved is None:
-            return None  # unsupported construct ⇒ UDF fallback
-        colfn, dt = resolved
-        return lambda c: F.coalesce(
-            _cmp_column(colfn(c), dt, expr.op, expr.literal), F.lit(False)
+        if not _definite(expr.rel):
+            return None  # the first node decides: Python keeps that order
+        return _exists_fn(
+            dtype, expr.rel, lambda c, dt: _cmp_column(c, dt, expr.op, expr.literal)
         )
     return None
 
@@ -918,17 +874,22 @@ def _reduce_and(cols: list[Column]) -> Column:
     return out
 
 
-def _exists_fn(dtype: T.DataType, steps: tuple) -> NodeFn | None:
-    """Compile steps to a fn: node Column -> boolean 'subtree has ≥1 match'."""
+def _exists(c: Column, dt: T.DataType) -> Column:
+    return c.isNotNull()
+
+
+def _exists_fn(dtype: T.DataType, steps: tuple, leaf: Leaf = _exists) -> NodeFn | None:
+    """Compile steps to a fn: node Column -> boolean 'some node the steps
+    reach satisfies ``leaf``'."""
     if not steps:
-        return lambda c: c.isNotNull()
+        return lambda c: leaf(c, dtype)
     step, rest = steps[0], steps[1:]
 
     if isinstance(step, Child):
         ft = _field_type(dtype, step.name)
         if ft is None:
             return lambda c: F.lit(False)  # definite miss ⇒ non-match
-        f = _exists_fn(ft, rest)
+        f = _exists_fn(ft, rest, leaf)
         if f is None:
             return None
         return lambda c: F.coalesce(f(c.getField(step.name)), F.lit(False))
@@ -936,11 +897,14 @@ def _exists_fn(dtype: T.DataType, steps: tuple) -> NodeFn | None:
     if isinstance(step, Index):
         if not isinstance(dtype, T.ArrayType):
             return lambda c: F.lit(False)
-        f = _exists_fn(dtype.elementType, rest)
+        f = _exists_fn(dtype.elementType, rest, leaf)
         if f is None:
             return None
-        # try_element_at, not element_at: out-of-bounds must be a
-        # non-match, not an ANSI runtime error (see _walk_steps)
+        # try_element_at is 1-based; JsonPath [i] is 0-based, [-1] is
+        # last. MUST be the try_ variant: plain element_at THROWS on an
+        # out-of-bounds index under ANSI semantics, but reference
+        # semantics treat any evaluation error as a non-match
+        # (TopologyProducer.kt:221-223) — null propagates to False.
         pos = step.i + 1 if step.i >= 0 else step.i
         return lambda c: F.coalesce(
             f(F.try_element_at(c, F.lit(pos))), F.lit(False)
@@ -949,7 +913,7 @@ def _exists_fn(dtype: T.DataType, steps: tuple) -> NodeFn | None:
     if isinstance(step, Union):
         if not isinstance(dtype, T.ArrayType):
             return lambda c: F.lit(False)
-        f = _exists_fn(dtype.elementType, rest)
+        f = _exists_fn(dtype.elementType, rest, leaf)
         if f is None:
             return None
         positions = [i + 1 if i >= 0 else i for i in step.indices]
@@ -971,7 +935,7 @@ def _exists_fn(dtype: T.DataType, steps: tuple) -> NodeFn | None:
         s = step.start or 0
         if s < 0 or (step.stop is not None and step.stop < 0):
             return None
-        f = _exists_fn(dtype.elementType, rest)
+        f = _exists_fn(dtype.elementType, rest, leaf)
         if f is None:
             return None
 
@@ -992,7 +956,7 @@ def _exists_fn(dtype: T.DataType, steps: tuple) -> NodeFn | None:
 
     if isinstance(step, Wildcard):
         if isinstance(dtype, T.ArrayType):
-            f = _exists_fn(dtype.elementType, rest)
+            f = _exists_fn(dtype.elementType, rest, leaf)
             if f is None:
                 return None
             return lambda c: F.coalesce(
@@ -1001,7 +965,7 @@ def _exists_fn(dtype: T.DataType, steps: tuple) -> NodeFn | None:
         if isinstance(dtype, T.StructType):
             fns = []
             for fld in dtype.fields:
-                f = _exists_fn(fld.dataType, rest)
+                f = _exists_fn(fld.dataType, rest, leaf)
                 if f is None:
                     return None
                 fns.append((fld.name, f))
@@ -1014,7 +978,7 @@ def _exists_fn(dtype: T.DataType, steps: tuple) -> NodeFn | None:
     if isinstance(step, Filter):
         if isinstance(dtype, T.ArrayType):
             pred = _filter_fn(dtype.elementType, step.expr)
-            f = _exists_fn(dtype.elementType, rest)
+            f = _exists_fn(dtype.elementType, rest, leaf)
             if pred is None or f is None:
                 return None
             return lambda c: F.coalesce(
@@ -1027,7 +991,7 @@ def _exists_fn(dtype: T.DataType, steps: tuple) -> NodeFn | None:
             )
         # filter applied to a single object: the object passes or not
         pred = _filter_fn(dtype, step.expr)
-        f = _exists_fn(dtype, rest)
+        f = _exists_fn(dtype, rest, leaf)
         if pred is None or f is None:
             return None
         return lambda c: F.coalesce(pred(c) & f(c), F.lit(False))
@@ -1035,7 +999,7 @@ def _exists_fn(dtype: T.DataType, steps: tuple) -> NodeFn | None:
     if isinstance(step, RecursiveChild):
         # Schema-directed expansion: find every position in the (finite)
         # schema tree whose field name matches, apply the rest there.
-        fns = _recursive_fns(dtype, step.name, rest)
+        fns = _recursive_fns(dtype, step.name, rest, leaf)
         if fns is None:
             return None
         if not fns:
@@ -1047,19 +1011,21 @@ def _exists_fn(dtype: T.DataType, steps: tuple) -> NodeFn | None:
     return None  # pragma: no cover
 
 
-def _recursive_fns(dtype: T.DataType, name: str, rest: tuple) -> list[NodeFn] | None:
+def _recursive_fns(
+    dtype: T.DataType, name: str, rest: tuple, leaf: Leaf
+) -> list[NodeFn] | None:
     """All match-functions for '..name' descendants under dtype."""
     fns: list[NodeFn] = []
     if isinstance(dtype, T.StructType):
         for fld in dtype.fields:
             if fld.name == name:
-                f = _exists_fn(fld.dataType, rest)
+                f = _exists_fn(fld.dataType, rest, leaf)
                 if f is None:
                     return None
                 fns.append(
                     (lambda fname, ff: lambda c: ff(c.getField(fname)))(fld.name, f)
                 )
-            sub = _recursive_fns(fld.dataType, name, rest)
+            sub = _recursive_fns(fld.dataType, name, rest, leaf)
             if sub is None:
                 return None
             fns.extend(
@@ -1067,7 +1033,7 @@ def _recursive_fns(dtype: T.DataType, name: str, rest: tuple) -> list[NodeFn] | 
                 for s in sub
             )
     elif isinstance(dtype, T.ArrayType):
-        sub = _recursive_fns(dtype.elementType, name, rest)
+        sub = _recursive_fns(dtype.elementType, name, rest, leaf)
         if sub is None:
             return None
         fns.extend(
@@ -1081,12 +1047,13 @@ def _recursive_fns(dtype: T.DataType, name: str, rest: tuple) -> list[NodeFn] | 
     return fns
 
 
-def compiles_natively(path: str | tuple, struct_type: T.DataType | None) -> bool:
-    """True when ``compile_struct_predicate`` accepts ``path`` over
-    ``struct_type`` — decided on the parse tree, without building a Column
-    (so without a SparkContext). Raises JsonPathError like ``parse``."""
+def struct_node_fn(dtype: T.DataType | None, path: str | tuple) -> NodeFn | None:
+    """The native form of ``path`` over a struct of type ``dtype``: a node
+    function, or None when the path needs the Python tier (always when
+    there is no struct type). Builds no Column, so it needs no
+    SparkContext. Raises JsonPathError like ``parse``."""
     steps = parse(path) if isinstance(path, str) else path
-    return struct_type is not None and _exists_fn(struct_type, steps) is not None
+    return None if dtype is None else _exists_fn(dtype, steps)
 
 
 def compile_struct_predicate(
@@ -1095,16 +1062,13 @@ def compile_struct_predicate(
     """Compile a JsonPath to a native boolean Column over a struct column.
 
     Returns None when the path uses constructs outside the compilable
-    subset (caller falls back to the Pandas-UDF evaluator). A path that is
-    in the subset but cannot match the schema (e.g. ``$.nop``) compiles to
+    subset (the rule runs in the Python tier). A path that is in the
+    subset but cannot match the schema (e.g. ``$.nop``) compiles to
     ``lit(False)`` — the reference treats missed definite paths as
     non-matches (TopologyProducer.kt:221-223).
     """
-    steps = parse(path) if isinstance(path, str) else path
-    f = _exists_fn(dtype, steps)
-    if f is None:
-        return None
-    return F.coalesce(f(col), F.lit(False))
+    f = struct_node_fn(dtype, path)
+    return None if f is None else F.coalesce(f(col), F.lit(False))
 
 
 # --------------------------------------------------------------------------

@@ -33,7 +33,6 @@ __all__ = [
     "encode_varint",
     "parse_group",
     "reencode_tx",
-    "tx_to_json_obj",
 ]
 
 
@@ -179,32 +178,35 @@ def _registry():
     return default_registry()
 
 
-_DECODERS: dict[bool, Any] = {}  # strict_any → the default registry's decoders
+_types: dict | None = None  # the default registry's decoder table, bound on first decode
 
 
-def decode_tx(raw: bytes, strict_any: bool = False) -> dict:
+def decode_tx(raw: bytes) -> dict:
     """bytes → Tx dict — exactly `TxRaw.toTx()` (TopologyProducer.kt:48-54).
     TxRaw{1: body_bytes, 2: auth_info_bytes, 3: repeated signatures} has
     Tx's wire layout, so the generated `cosmos.tx.v1beta1.Tx` decoder
     reads it directly; `body` and `authInfo` are always present, as
-    `toTx()` always sets them. Raises DecodeError on any malformed input
-    (the error-branch trigger); no other exception type escapes — the
-    decode stage's failure-capture catches DecodeError only, so anything
-    else would crash the job instead of routing the record to the error
-    topic. `strict_any` selects the unknown-Any policy (descriptors.py,
-    ``_any_source``)."""
-    types = _DECODERS.get(strict_any)
-    if types is None:
-        types = _DECODERS[strict_any] = _registry().decoders(strict_any)
+    `toTx()` always sets them. An `Any` of a type outside the descriptor
+    set renders opaque (descriptors.py, ``_any_source``). The returned
+    dict, serialized with json.dumps(separators=(',', ':')), is the
+    reference's canonical protobuf-JSON. Raises DecodeError on any
+    malformed input (the error-branch trigger); no other exception type
+    escapes — the decode stage's failure-capture catches DecodeError
+    only, so anything else would crash the job instead of routing the
+    record to the error topic."""
+    global _types
+    if _types is None:
+        _types = _registry().decoders()
+    decode = _types[_TX]
     try:
-        return types[_TX](raw, {"body": {}, "authInfo": {}})
+        return decode(raw, {"body": {}, "authInfo": {}})
     except DecodeError:
         raise
     except Exception as e:  # malformed in a shape we didn't enumerate
         raise DecodeError(f"malformed tx: {e}") from e
 
 
-def reencode_tx(raw: bytes, strict_any: bool = False) -> bytes:
+def reencode_tx(raw: bytes) -> bytes:
     """Re-serialize the rebuilt Tx the way the reference's rule branches
     do (`tx.toByteArray()`, TopologyProducer.kt:155-159): parse
     TxRaw{body_bytes, auth_info_bytes, signatures}, canonically re-encode
@@ -232,12 +234,10 @@ def reencode_tx(raw: bytes, strict_any: bool = False) -> bytes:
         body = reg.reencode(
             "cosmos.tx.v1beta1.TxBody",
             _bytes(f[1][-1], "body_bytes") if 1 in f else b"",
-            strict_any,
         )
         auth = reg.reencode(
             "cosmos.tx.v1beta1.AuthInfo",
             _bytes(f[2][-1], "auth_info_bytes") if 2 in f else b"",
-            strict_any,
         )
         out = encode_ld(1, body) + encode_ld(2, auth)
         if 3 in f:
@@ -247,11 +247,3 @@ def reencode_tx(raw: bytes, strict_any: bool = False) -> bytes:
         raise
     except Exception as e:  # malformed in a shape we didn't enumerate
         raise DecodeError(f"malformed tx: {e}") from e
-
-
-def tx_to_json_obj(raw: bytes) -> dict:
-    """Alias with the rendering contract in the name: the returned dict,
-    serialized with json.dumps(separators=(',', ':')), matches the
-    reference's canonical protobuf-JSON (camelCase, @type, insignificant
-    whitespace omitted) for the supported message subset."""
-    return decode_tx(raw)

@@ -10,6 +10,8 @@ shape). Output adds:
                        tx_json_text
     error:   string  — decode failure message (null when decode
                        succeeded)
+    __tier3: array<boolean> — the Python-tier rules' results on the
+                       decoded object (see decode_tx_records)
 
 The original `value` bytes pass through untouched — the error branch
 must emit them verbatim (TopologyProducer.kt:122), and rule topics may
@@ -23,21 +25,13 @@ the supported subset).
 from __future__ import annotations
 
 import json
-import os
 
 import orjson
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions import protowire, pyworker
-
-_ADDED = "tx_json string, error string"
-
-DESCRIPTOR_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "resources",
-    "cosmos_tx.desc",
-)
+from ..functions.descriptors import load_descriptor_set  # noqa: F401 — re-exported
 
 
 def tx_json_text(obj: dict) -> str:
@@ -58,34 +52,24 @@ def tx_json_text(obj: dict) -> str:
     return json.dumps(obj, separators=(",", ":"))
 
 
-def load_descriptor_set() -> bytes:
-    """The checked-in FileDescriptorSet for cosmos.tx.v1beta1 (+ bank/
-    staking/gov/distribution msgs), generated by tools/gen_descriptor.py
-    without protoc — the Spark-native analog of the reference's compiled
-    proto classes (TopologyProducer.kt:86-96)."""
-    with open(DESCRIPTOR_PATH, "rb") as fh:
-        return fh.read()
-
-
 def decode_tx_records(
     df: DataFrame,
-    value_col: str = "value",
-    match_paths: list[str] | None = None,
+    match_paths: list[str],
     tier3_col: str = "__tier3",
 ) -> DataFrame:
-    """Arrow-batched decode with Result-style failure capture: wire
-    parsing runs per record in Python, in the generated decoders
-    (functions/descriptors.py).
+    """Arrow-batched decode of ``df.value`` with Result-style failure
+    capture: wire parsing runs per record in Python, in the generated
+    decoders (functions/descriptors.py).
 
     Shape: a SCALAR pandas_udf over ONLY the value column returning
-    struct<tx_json, error> — passthrough columns (key, offsets, any
-    upstream additions) never cross the Arrow boundary, unlike the
-    earlier mapInPandas full-frame roundtrip (which shipped and copied
-    every column both ways; switching measured ~13% on the 2-column
-    shape and grows with row width).
+    struct<tx_json, error, tier3_col> — passthrough columns (key,
+    offsets, any upstream additions) never cross the Arrow boundary,
+    unlike the earlier mapInPandas full-frame roundtrip (which shipped
+    and copied every column both ways; switching measured ~13% on the
+    2-column shape and grows with row width).
 
-    ``match_paths``: JsonPath predicates to evaluate ON THE DECODED
-    OBJECT inside the same UDF, emitted as ``tier3_col:
+    ``match_paths``: JsonPath predicates (possibly none) evaluated ON THE
+    DECODED OBJECT inside the same UDF, emitted as ``tier3_col:
     array<boolean>`` for `dispatch(tier3_col=...)`. `route` passes
     `python_tier_paths(rules)` — on wire input that is every rule that
     parses, in rule order. Without this fusion the downstream
@@ -102,17 +86,14 @@ def decode_tx_records(
     TopologyProducer.kt:221-223); decode failures emit all-False (the
     dispatcher's error sentinel wins before the Python-tier results are
     consulted)."""
-    from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
     from ..functions import jsonpath as jp
 
-    fused = match_paths is not None
-    preds = [jp.compile_predicate(p) for p in (match_paths or [])]
-    n_paths = len(preds)
-    schema = _ADDED + (f", {tier3_col} array<boolean>" if fused else "")
+    preds = [jp.compile_predicate(p) for p in match_paths]
+    no_match = [False] * len(preds)
 
-    @pandas_udf(schema)
+    @pandas_udf(f"tx_json string, error string, {tier3_col} array<boolean>")
     def decode_udf(vals: pd.Series) -> pd.DataFrame:
         pyworker.prepare()
         txs: list[str | None] = []
@@ -123,8 +104,7 @@ def decode_tx_records(
                 obj = protowire.decode_tx(bytes(raw))
                 txs.append(tx_json_text(obj))
                 errs.append(None)
-                if fused:
-                    t3.append([p(obj) for p in preds])
+                t3.append([p(obj) for p in preds])
                 continue
             except protowire.DecodeError as e:
                 txs.append(None)
@@ -136,15 +116,8 @@ def decode_tx_records(
                 # never kill the task
                 txs.append(None)
                 errs.append(f"{type(e).__name__}: {e}")
-            if fused:
-                t3.append([False] * n_paths)
-        out = {"tx_json": txs, "error": errs}
-        if fused:
-            out[tier3_col] = t3
-        return pd.DataFrame(out)
+            t3.append(no_match)
+        return pd.DataFrame({"tx_json": txs, "error": errs, tier3_col: t3})
 
-    cols = [F.col("__decoded.tx_json"), F.col("__decoded.error")]
-    if fused:
-        cols.append(F.col(f"__decoded.{tier3_col}"))
-    out = df.withColumn("__decoded", decode_udf(value_col))
-    return out.select(*df.columns, *cols)
+    out = df.withColumn("__decoded", decode_udf("value"))
+    return out.select(*df.columns, "__decoded.*")

@@ -51,25 +51,34 @@ DEFAULT_DLQ_TOPIC = "dlq"
 _TIER3 = "__tier3"
 
 
+def _rule_tiers(
+    rules: list[DispatchRule], struct_type: T.DataType | None
+) -> list[jp.NodeFn | str | jp.JsonPathError]:
+    """Each rule's tier, in rule order: the parse error of a predicate
+    that does not parse (never-match), the native node function when the
+    record has a struct type the path compiles over, otherwise the
+    predicate itself (Python tier). Decided on the parse tree, so it
+    needs no SparkContext."""
+    tiers: list[jp.NodeFn | str | jp.JsonPathError] = []
+    for r in rules:
+        try:
+            fn = jp.struct_node_fn(struct_type, r.predicate)
+            tiers.append(r.predicate if fn is None else fn)
+        except jp.JsonPathError as e:
+            tiers.append(e)
+    return tiers
+
+
 def python_tier_paths(
     rules: list[DispatchRule],
     json_col: str = "tx_json",
     struct_type: T.StructType | None = None,
 ) -> list[str]:
     """Predicates, in rule order, that `with_matches` runs in the Python
-    tier: every rule that parses and does not compile natively over
-    ``struct_type`` (all of them when there is no struct). This order is
-    the contract of a precomputed ``tier3_col``. Decided on the parse
-    tree, so it needs no SparkContext. ``json_col`` plays no part in the
-    choice; it stays because existing callers pass it."""
-    paths = []
-    for r in rules:
-        try:
-            if not jp.compiles_natively(r.predicate, struct_type):
-                paths.append(r.predicate)
-        except jp.JsonPathError:
-            pass  # with_matches compiles it to never-match and warns
-    return paths
+    tier (all that parse when there is no struct): the contract of a
+    precomputed ``tier3_col``. ``json_col`` plays no part in the choice;
+    it stays because existing callers pass it."""
+    return [t for t in _rule_tiers(rules, struct_type) if isinstance(t, str)]
 
 
 def with_matches(
@@ -88,63 +97,52 @@ def with_matches(
     the reference's evaluate-once/route-by-tag shape; Catalyst's
     subexpression elimination keeps it single-pass.
 
-    Each rule is one of: never-match (with a warning) when its path does
-    not parse; native, over ``struct_col``, when `jp.compiles_natively`
-    accepts it; otherwise Python — the `python_tier_paths()` rules.
+    `_rule_tiers` decides each rule once: never-match (with a warning)
+    when its path does not parse; native, over ``struct_col``; otherwise
+    Python — the `python_tier_paths()` rules, whose results are read
+    from one ``array<boolean>`` column, one element per Python-tier rule
+    in rule order.
 
-    ``tier3_col``: name of an existing ``array<boolean>`` column holding
-    the PRECOMPUTED Python-tier results, one per `python_tier_paths()`
-    entry in rule order (produced upstream by
-    ``decode_tx_records(match_paths=...)`` where the decoded object is
-    already in hand; `route` wires both). When set, no matcher UDF is
-    planned and the column is consumed (dropped from the output).
+    ``tier3_col`` names that column when it is PRECOMPUTED upstream
+    (``decode_tx_records(match_paths=...)`` evaluates the rules on the
+    decoded object it already holds; `route` wires both). Otherwise the
+    JSON-text UDF over ``json_col`` writes it. The column is consumed
+    (dropped from the output).
     """
     st = df.schema[struct_col].dataType if struct_col else None
-
-    preds: list[Column | None] = []
-    for r in rules:
-        try:
-            steps = jp.parse(r.predicate)
-        except jp.JsonPathError as e:
+    tiers = _rule_tiers(rules, st)
+    py_paths = [t for t in tiers if isinstance(t, str)]
+    if py_paths and tier3_col is None:
+        if json_col is None:
+            raise ValueError(
+                f"rule {rules[tiers.index(py_paths[0])].name!r} needs a "
+                "json_col or a typed struct_col"
+            )
+        # Every Python-tier rule rides ONE fused UDF (one json.loads per
+        # record for the whole bank, one Arrow column back), MATERIALIZED
+        # as its own column: inlined into each element_at it would leave
+        # one copy of the PythonUDF per rule for Catalyst to dedup.
+        tier3_col = _TIER3
+        df = df.withColumn(
+            tier3_col, jp.jsonpath_match_many_pandas_udf(py_paths)(F.col(json_col))
+        )
+    preds: list[Column] = []
+    pos = 0
+    for r, t in zip(rules, tiers):
+        if isinstance(t, jp.JsonPathError):
             warnings.warn(
                 f"rule {r.name!r}: unparseable predicate "
-                f"{r.predicate!r} ({e}) — compiled to never-match",
+                f"{r.predicate!r} ({t}) — compiled to never-match",
                 stacklevel=2,
             )
             preds.append(F.lit(False))
-            continue
-        if jp.compiles_natively(steps, st):
-            preds.append(jp.compile_struct_predicate(F.col(struct_col), st, steps))
-        else:
-            preds.append(None)
-    py_idx = [i for i, p in enumerate(preds) if p is None]
-    if py_idx and tier3_col is not None:
-        for pos, i in enumerate(py_idx):
+        elif isinstance(t, str):
+            pos += 1
             # coalesce: a null element (malformed precomputed array)
             # must read as non-match, never null-propagate into `tagged`
-            preds[i] = F.coalesce(
-                F.element_at(F.col(tier3_col), pos + 1), F.lit(False)
-            )
-    elif py_idx:
-        if json_col is None:
-            raise ValueError(
-                f"rule {rules[py_idx[0]].name!r} needs a json_col or a "
-                "typed struct_col"
-            )
-        # Every Python-tier rule rides ONE fused UDF (one json.loads per
-        # record for the whole bank, one Arrow column back). The fused
-        # array is MATERIALIZED as its own column rather than inlined
-        # into each element_at: inlining leaves m copies of the same
-        # PythonUDF expression and relies on Catalyst's UDF extraction
-        # to dedup them — guaranteed single evaluation beats
-        # optimizer-version-dependent behavior.
-        many = jp.jsonpath_match_many_pandas_udf(
-            [rules[i].predicate for i in py_idx]
-        )(F.col(json_col))
-        tier3_col = "__tier3_matches"
-        df = df.withColumn(tier3_col, many)
-        for pos, i in enumerate(py_idx):
-            preds[i] = F.element_at(F.col(tier3_col), pos + 1)
+            preds.append(F.coalesce(F.element_at(F.col(tier3_col), pos), F.lit(False)))
+        else:
+            preds.append(F.coalesce(t(F.col(struct_col)), F.lit(False)))
     tagged = F.array(
         *[F.when(p, F.lit(i)).otherwise(F.lit(None)) for i, p in enumerate(preds)]
     )
@@ -162,11 +160,7 @@ def with_matches(
             F.col(error_col).isNotNull(), F.array(F.lit(ERROR))
         ).otherwise(matched)
     out = df.withColumn("matches", matched.cast(T.ArrayType(T.IntegerType())))
-    if tier3_col is not None:
-        # consumed plumbing — caller-provided or the internally
-        # materialized fused array (tier3_col was reassigned above)
-        out = out.drop(tier3_col)
-    return out
+    return out.drop(tier3_col) if tier3_col is not None else out
 
 
 def topic_map(
@@ -225,19 +219,16 @@ def dispatch(
     return out
 
 
-def dlq_envelope(
-    tx_json: Column, raw_bytes: Column | None = None, message: Column | None = None
-) -> Column:
+def dlq_envelope(tx_json: Column, raw_bytes: Column) -> Column:
     """The DLQ JSON envelope, field-for-field with the reference's Jackson
     serialization of ``DLQ(txJson, txBytes, message)`` (TopologyProducer.kt:
-    32-41, 186-195): camelCase keys, bytes base64-encoded, explicit nulls.
+    32-41, 186-195): camelCase keys, bytes base64-encoded, explicit nulls
+    (the reference never sets ``message``).
     """
     fields = [
         tx_json.alias("txJson"),
-        (F.base64(raw_bytes) if raw_bytes is not None else F.lit(None).cast("string")).alias(
-            "txBytes"
-        ),
-        (message if message is not None else F.lit(None).cast("string")).alias("message"),
+        F.base64(raw_bytes).alias("txBytes"),
+        F.lit(None).cast("string").alias("message"),
     ]
     return F.to_json(F.struct(*fields), {"ignoreNullFields": "false"})
 
@@ -248,7 +239,6 @@ def value_for_topic(
     payload_col: str,
     raw_col: str | None = None,
     json_col: str | None = None,
-    dlq_topic: str = DEFAULT_DLQ_TOPIC,
     reserialize: bool = False,
 ) -> DataFrame:
     """Project the per-destination output value, mirroring the branches:
@@ -339,9 +329,7 @@ def route(
         df, rules, json_col="tx_json", dlq_topic=dlq_topic,
         error_topic=error_topic, **views,
     )
-    return value_for_topic(
-        routed, rules, payload_col="value", json_col="tx_json", dlq_topic=dlq_topic
-    )
+    return value_for_topic(routed, rules, payload_col="value", json_col="tx_json")
 
 
 def dispatch_metrics() -> list[Column]:

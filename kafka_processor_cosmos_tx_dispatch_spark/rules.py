@@ -43,16 +43,17 @@ def _to_rules(obj: object) -> list[DispatchRule]:
     for i, item in enumerate(obj["rules"]):
         if not isinstance(item, dict):
             raise RulesParseError(f"rule #{i} is not a mapping")
-        try:
-            rules.append(
-                DispatchRule(
-                    name=str(item["name"]),
-                    topic=str(item["topic"]),
-                    predicate=str(item["predicate"]),
-                )
-            )
-        except KeyError as e:
-            raise RulesParseError(f"rule #{i} missing required field {e}") from e
+        fields = []
+        for key in ("name", "topic", "predicate"):
+            if key not in item:
+                raise RulesParseError(f"rule #{i} missing required field {key!r}")
+            v = item[key]
+            # str() would turn null into the topic "None" and a list or
+            # map into its Python repr
+            if v is None or isinstance(v, (list, dict)):
+                raise RulesParseError(f"rule #{i} field {key!r} must be a scalar, got {v!r}")
+            fields.append(str(v))
+        rules.append(DispatchRule(*fields))
     return rules
 
 

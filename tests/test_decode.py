@@ -202,7 +202,7 @@ def test_nested_any_recursion():
     payload. Every nesting level must resolve through the ONE registry
     (every generated decoder renders its Any fields through the same
     `_any`), and an unknown type at ANY depth must follow the pinned
-    opaque/strict policy."""
+    opaque policy."""
     inner_send = _any(MSG_SEND_URL, _msg_send(OKP4_ADDR, "tesTo"))
     coin = _ld(1, b"uknow") + _ld(2, b"42")
     inner_transfer = _any(
@@ -236,9 +236,8 @@ def test_nested_any_recursion():
         "description": "Do the upgrade",
     }
 
-    # unknown type NESTED inside MsgExec: opaque by default,
-    # DecodeError (→ error topic) under strict_any — same policy as
-    # top level
+    # unknown type NESTED inside MsgExec: opaque — same policy as top
+    # level
     nested_unknown = _ld(1, b"g") + _ld(
         2, _any("type.googleapis.com/x.y.MsgNope", b"\x0a\x01a")
     )
@@ -247,14 +246,6 @@ def test_nested_any_recursion():
     )
     inner = tx["body"]["messages"][0]["msgs"][0]
     assert base64.b64decode(inner["value"]) == b"\x0a\x01a"
-    try:
-        protowire.decode_tx(
-            _tx_raw(_ld(1, _any(MSG_AUTHZ_EXEC_URL, nested_unknown))),
-            strict_any=True,
-        )
-        raise AssertionError("expected DecodeError")
-    except protowire.DecodeError:
-        pass
 
 
 MSG_CREATE_VALIDATOR_URL = (
@@ -486,19 +477,13 @@ def test_routing_on_validator_and_vesting_fields(spark):
 def test_unknown_any_policy_pinned():
     """Pinned unknown-Any semantics (VERDICT r1 next-round #6). The
     reference's printer throws on an unregistered type OUTSIDE the decode
-    Result capture — crashing the stream task. Engine policy: default
-    renders opaque (total function); strict_any=True maps the unknown
-    type to DecodeError → error-topic routing, the recoverable analog."""
+    Result capture — crashing the stream task. Engine policy: the unknown
+    type renders opaque (total function), so the record still routes."""
     unknown = _tx_raw(_ld(1, _any("type.googleapis.com/x.y.MsgNope", b"\x0a\x01a")))
-    tx = protowire.decode_tx(unknown)  # default: opaque, never throws
+    tx = protowire.decode_tx(unknown)  # opaque, never throws
     msg = tx["body"]["messages"][0]
     assert msg["@type"] == "type.googleapis.com/x.y.MsgNope"
     assert base64.b64decode(msg["value"]) == b"\x0a\x01a"
-    try:
-        protowire.decode_tx(unknown, strict_any=True)
-        raise AssertionError("expected DecodeError")
-    except protowire.DecodeError as e:
-        assert "unregistered" in str(e)
 
 
 def test_routing_on_non_msgsend_predicate(spark):
@@ -756,7 +741,7 @@ def test_fused_decode_match_parity(spark):
         return sorted((r["tx_id"], r["topic"]) for r in routed.collect())
 
     unfused = dsp.dispatch(
-        decode_tx_records(df),
+        decode_tx_records(df, match_paths=[]),
         RULES,
         json_col="tx_json",
         error_col="error",

@@ -170,20 +170,14 @@ class TestRegistryPolicy:
         assert tx["body"]["messages"][0]["option"] == 9
 
     def test_strict_any_propagates_through_nesting(self):
-        # unknown type nested inside a known one must still trip strict
+        # an unknown type inside the tx renders opaque (the one Any policy)
         unknown = _any("type.googleapis.com/x.Nope", b"")
         tx_bytes = _tx_raw(_ld(1, unknown))
-        out = protowire.decode_tx(tx_bytes)  # default: opaque
+        out = protowire.decode_tx(tx_bytes)
         assert out["body"]["messages"][0] == {
             "@type": "type.googleapis.com/x.Nope",
             "value": "",
         }
-        try:
-            protowire.decode_tx(tx_bytes, strict_any=True)
-        except protowire.DecodeError:
-            pass
-        else:
-            raise AssertionError("strict_any should raise on unknown type")
 
     def test_every_message_in_desc_is_decodable_empty(self):
         reg = default_registry()

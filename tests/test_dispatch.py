@@ -65,6 +65,14 @@ def test_rules_loader(rules):
         loads_rules("rules:\n  - name: x\n    topic: t\n")  # missing predicate
     with pytest.raises(RulesParseError):
         loads_rules("nope: 1")
+    # a null, list or map field is no name, topic or predicate
+    for field in ("name", "topic", "predicate"):
+        for bad in ("", "[a, b]", "{a: b}"):
+            doc = {"name": "a", "topic": "t", "predicate": "$.x", field: bad}
+            text = "rules:\n- " + "\n  ".join(f"{k}: {v}" for k, v in doc.items())
+            with pytest.raises(RulesParseError, match=field):
+                loads_rules(text)
+    assert loads_rules("rules:\n- name: 1\n  topic: t\n  predicate: $.x")[0].name == "1"
 
 
 def test_golden_routing_with_error_topic(tx_df, rules):
@@ -165,10 +173,10 @@ def test_value_projection_reserialize(spark, rules):
     # matches no rule → DLQ; also non-canonical at the parsed level
     dlq_raw = _ld(1, b"") + _ld(2, _ld(2, nm_fee))
     rows = [
-        (1, canonical, protowire.tx_to_json_obj(canonical), None),
-        (2, non_minimal, protowire.tx_to_json_obj(non_minimal), None),
+        (1, canonical, protowire.decode_tx(canonical), None),
+        (2, non_minimal, protowire.decode_tx(non_minimal), None),
         (3, b"not-protobuf", None, "decode failure"),
-        (4, dlq_raw, protowire.tx_to_json_obj(dlq_raw), None),
+        (4, dlq_raw, protowire.decode_tx(dlq_raw), None),
     ]
     df = spark.createDataFrame(
         [(i, r, json.dumps(j) if j is not None else None, e) for i, r, j, e in rows],

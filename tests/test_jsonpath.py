@@ -173,6 +173,79 @@ class TestNativeCompiler:
         }
         assert got == {1: True, 2: False, 3: False}
 
+    def test_number_and_boolean_compare_by_kind(self, spark):
+        """A boolean compares only with a boolean and a number only with a
+        number, in both tiers: over a struct with int, bool and array
+        fields every native Column equals the interpreter, and a bank
+        holding such rules still routes through route(schema=...)."""
+        from kafka_processor_cosmos_tx_dispatch_spark.operators import dispatch as dsp
+        from kafka_processor_cosmos_tx_dispatch_spark.rules import DispatchRule
+
+        body = T.StructType(
+            [
+                T.StructField("memo", T.StringType()),
+                T.StructField("timeoutHeight", T.LongType()),
+                T.StructField("flag", T.BooleanType()),
+                T.StructField("heights", T.ArrayType(T.LongType())),
+                T.StructField("flags", T.ArrayType(T.BooleanType())),
+            ]
+        )
+        schema = T.StructType([T.StructField("body", body)])
+        docs = [
+            {"body": {"memo": "m", "timeoutHeight": 1, "flag": True, "heights": [1, 2], "flags": [True]}},
+            {"body": {"timeoutHeight": 0, "flag": False, "heights": [], "flags": [False, True]}},
+            {"body": {"timeoutHeight": 5, "heights": [0]}},
+            {"body": {"flag": True}},
+            {"body": {}},
+        ]
+        paths = [
+            "$.body.memo",
+            "$.body[?(@.timeoutHeight == true)]",
+            "$.body[?(@.timeoutHeight != true)]",
+            "$.body[?(@.timeoutHeight < true)]",
+            "$.body[?(@.timeoutHeight in [true, 5])]",
+            "$.body[?(@.timeoutHeight == 1)]",
+            "$.body[?(@.flag == 1)]",
+            "$.body[?(@.flag != 1)]",
+            "$.body[?(@.flag < 2)]",
+            "$.body[?(@.flag == true)]",
+            "$.body[?(@.flag in [1, 0])]",
+            "$.body[?(@.heights == 1)]",
+            "$.body[?(@.heights != 1)]",
+            "$.body.heights[?(@ == true)]",
+            "$.body.heights[?(@ > 1)]",
+            "$.body.flags[?(@ == 1)]",
+            "$.body.flags[?(@ != 0)]",
+            "$.body.flags[?(@ == true)]",
+            "$.body[?(@.memo == 1)]",
+            "$.body[?(@.memo != true)]",
+        ]
+        assert not jp._compare(1, "==", True) and not jp._compare(True, "==", 1)
+        assert not jp._compare(True, "<", 2) and jp._compare(True, "!=", 1)
+        df = spark.createDataFrame(
+            [(i, json.dumps(d)) for i, d in enumerate(docs)], "id long, j string"
+        ).withColumn("tx", F.from_json("j", schema))
+        cols = [jp.compile_struct_predicate(F.col("tx"), schema, p) for p in paths]
+        assert all(c is not None for c in cols)
+        rows = df.select("id", *[c.alias(f"p{k}") for k, c in enumerate(cols)]).collect()
+        for r in rows:
+            txt = json.dumps(docs[r["id"]])
+            got = [r[f"p{k}"] for k in range(len(paths))]
+            assert got == [jp.match(txt, p) for p in paths], docs[r["id"]]
+
+        rules = [DispatchRule(f"r{k}", f"t{k}", p) for k, p in enumerate(paths[:5])]
+        wire = spark.createDataFrame(
+            [(f"k{i}", json.dumps(d).encode()) for i, d in enumerate(docs)],
+            "key string, value binary",
+        )
+        routed = dsp.route(wire, rules, schema=schema)
+        got = sorted((r["key"], r["topic"]) for r in routed.collect())
+        want = []
+        for i, d in enumerate(docs):
+            topics = [r.topic for r in rules if jp.match(json.dumps(d), r.predicate)]
+            want += [(f"k{i}", t) for t in topics or ["dlq"]]
+        assert got == sorted(want)
+
 
 class TestJsonStringTier:
     def test_definite_path_compiles(self, spark):
@@ -423,6 +496,13 @@ class TestCompiledPredicateFuzz:
             "$.body.messages[?(@.amount[0].amount in ['5', 5])]",
             "$..messages[?(@.option in ['NO', 3])]",
             "$.body.messages[?(@.option == 1)]",
+            # a boolean compares only with a boolean, a number with a number
+            "$.body[?(@.timeoutHeight == true)]",
+            "$.body.messages[?(@.option == true)]",
+            "$.body.messages[?(@.option != 1)]",
+            "$.body.messages[?(@.option < 2)]",
+            "$.body.messages[?(@.option >= false)]",
+            "$.body.messages[?(@.option in [true, 'NO'])]",
         ]
         preds = [jp.compile_predicate(p) for p in battery]
         docs = [gen._random_tx(rng) for _ in range(200)]  # WITH nulls
@@ -458,6 +538,8 @@ class TestCompiledPredicateFuzz:
             {"a": {"amount": [None, {"denom": "uosmo"}]}},
             {"body": {"messages": [{"option": 3}, {"option": True}]}},
             {"body": {"messages": [{"amount": [{"amount": 5.0}]}]}},
+            {"body": {"timeoutHeight": 1, "messages": [{"option": 1}, {"option": False}]}},
+            {"body": {"timeoutHeight": True, "messages": [{"option": 1.0}, {"option": 0}]}},
         ]
         for d in docs:
             txt = json.dumps(d)

@@ -14,6 +14,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -45,6 +50,20 @@ def get_spark(
       scan tasks fit executor memory regardless of input size.
     - Arrow on: the Pandas-UDF operators (tx decode, Python-tier
       JsonPath, multimodal decode) move batches, not rows.
+    - ``spark.sql.streaming.checkpointFileManagerClass``: streaming
+      checkpoints (offsets, commits, the file-source log, state-store
+      files) are written through Hadoop's ``FileSystem`` API
+      (``create``/``rename``), Spark's own fallback for file systems
+      without ``FileContext`` support; it is valid on HDFS and object
+      stores alike. The default ``FileContext`` manager asks for
+      ``getFileLinkStatus`` on every rename, and without the native
+      Hadoop library (``libhadoop``) the local file system answers it by
+      spawning ``readlink``, four times per rename. On a ``live_tail``
+      run of 52 triggers that was 640 ``readlink`` + 171 ``chmod``
+      spawns (15.7 per trigger, 3–5 ms each), most of ``walCommit``,
+      ``commitOffsets`` and ``latestOffset``; with this manager it is
+      0 + 171 (3.4 per trigger). The ``chmod`` spawns come from
+      ``setPermission`` on temp files and go only with native IO.
     """
     cpus = default_parallelism()
     if master is None:
@@ -67,6 +86,7 @@ def get_spark(
         # pandas-generated parquet carries TIMESTAMP(NANOS); Spark has no
         # nanos timestamp type — read as long, sources convert to micros.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

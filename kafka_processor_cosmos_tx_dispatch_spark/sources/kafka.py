@@ -108,9 +108,16 @@ def kafka_topic_sink(
 ):
     """writeStream for a routed frame carrying (key, value, topic): Spark's
     Kafka sink reads the destination from the `topic` column — the whole
-    split()/branch() fan-out of the reference collapses here."""
+    split()/branch() fan-out of the reference collapses here.
+
+    Only `key` (when present), `value` and `topic` are written. The sink
+    also reads a `partition` column, and a frame routed from
+    `kafka_stream_reader` still carries the input record's; passing it
+    on would pin each output row to that partition number instead of
+    spreading rows by key as the reference's producers do."""
     validate_routed_frame(routed)
-    writer = routed.writeStream.format("kafka")
+    cols = [c for c in ("key", "value", "topic") if c in routed.columns]
+    writer = routed.select(*cols).writeStream.format("kafka")
     for k, v in kafka_writer_options(bootstrap_servers, checkpoint_dir).items():
         writer = writer.option(k, v)
     return writer

@@ -103,8 +103,21 @@ class TestBuilders:
             .option("rows_per_batch", 50)
             .load()
         )
-        routed = dsp.route(stream, RULES, error_topic="errors").select(
-            "key", "value", "topic"
-        )
+        routed = dsp.route(stream, RULES, error_topic="errors")
         writer = kafka_topic_sink(routed, "broker:9092", str(tmp_path / "ckpt"))
-        assert writer is not None
+        assert writer._df.columns == ["key", "value", "topic"]
+
+    def test_sink_drops_source_partition(self, spark, tmp_path):
+        """route() keeps the source frame's columns, and a Kafka-shaped
+        input carries `partition`: the Kafka sink would write each row to
+        that partition number instead of spreading rows by key, and fail
+        on a destination topic with fewer partitions."""
+        src = tmp_path / "src"
+        src.mkdir()
+        stream = spark.readStream.schema(
+            "key binary, value binary, partition int, offset long"
+        ).parquet(str(src))
+        routed = dsp.route(stream, RULES, error_topic="errors")
+        assert {"partition", "offset"} <= set(routed.columns)
+        writer = kafka_topic_sink(routed, "broker:9092", str(tmp_path / "ckpt"))
+        assert writer._df.columns == ["key", "value", "topic"]

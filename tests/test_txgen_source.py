@@ -3,6 +3,7 @@ through the full decode → dispatch path, in batch and as a bounded
 stream (same record mix as the reference's golden fixtures,
 TopologyTest.kt:25-69)."""
 
+import os
 import uuid
 
 from pyspark.sql import functions as F
@@ -162,3 +163,31 @@ def test_restart_from_checkpoint_routes_each_record_once(spark, tmp_path):
     assert got == batch_routes()
     assert {k for k, _ in got} == {f"tx-{i}" for i in range(180)}
 
+    # the checkpoint's two logs agree batch for batch, and every temp
+    # file was renamed into place
+    def batch_ids(log: str) -> list[int]:
+        return sorted(int(f) for f in os.listdir(os.path.join(ckpt, log)) if f.isdigit())
+
+    offsets = batch_ids("offsets")
+    assert offsets == batch_ids("commits") == list(range(len(offsets)))
+    assert len(offsets) >= 3  # one file per trigger
+    left = [
+        f
+        for root in (ckpt, out)
+        for _, _, files in os.walk(root)
+        for f in files
+        if ".tmp" in f
+    ]
+    assert left == []
+
+
+def test_session_writes_checkpoints_through_filesystem(spark):
+    """get_spark() picks the FileSystem-based checkpoint manager, which
+    renames without spawning `readlink` when libhadoop is absent; the
+    class must resolve in this Spark."""
+    name = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+    assert name == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert spark._jvm.java.lang.Class.forName(name).getName() == name

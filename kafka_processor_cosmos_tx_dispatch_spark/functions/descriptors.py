@@ -48,9 +48,6 @@ from .protowire import (
     DecodeError,
     _vrest,
     _wire_value,
-    encode_ld,
-    encode_varint,
-    parse_fields,
     parse_group,
 )
 
@@ -596,147 +593,6 @@ class TypeRegistry:
         if fn is None:
             raise DecodeError(f"type not in descriptor set: {fqn!r}")
         return fn(buf, {})
-
-    # -- re-encoding ---------------------------------------------------------
-
-    def reencode(self, fqn: str, buf: bytes) -> bytes:
-        """Canonical re-serialization of one message: the bytes
-        protobuf-java produces after parse→toByteArray() — known fields
-        in ascending number order, minimal varints, proto3 default-valued
-        singular scalars omitted, repeated packable scalars emitted
-        packed, singular fields last-occurrence-wins, message fields
-        emitted whenever present on the wire (even empty). Field numbers
-        NOT in the descriptor go to the trailing unknown-field section —
-        protobuf-java writes the UnknownFieldSet after all known fields
-        (sorted by number among themselves; per number: varints, fixed32,
-        fixed64, length-delimited), so an unknown number lower than a
-        known one must NOT interleave. Wrong-wire-type occurrences raise
-        DecodeError, mirroring the decoder's strictness."""
-        try:
-            known = {f.number: f for f in self._messages[fqn]}
-        except KeyError:
-            raise DecodeError(f"type not in descriptor set: {fqn!r}") from None
-        occ: dict[int, list[tuple[int, object]]] = {}
-        for no, wt, val in parse_fields(buf):
-            occ.setdefault(no, []).append((wt, val))
-        out = b""
-        for no in sorted(occ):
-            fd = known.get(no)
-            if fd is not None:
-                out += self._reenc_field(fd, occ[no])
-        for no in sorted(occ):
-            if no not in known:
-                out += self._reenc_unknown(no, occ[no])
-        return out
-
-    def _reenc_field(self, fd: _Field, occ: list[tuple[int, object]]) -> bytes:
-        t, no = fd.ftype, fd.number
-        if t == _T_GROUP:
-            raise DecodeError("proto2 groups are not supported")
-        if t == _T_MESSAGE:
-            vals = [v for _wt, v in occ]
-            if not fd.repeated:
-                vals = vals[-1:]
-            out = b""
-            for v in vals:
-                if not isinstance(v, bytes):
-                    raise DecodeError("expected length-delimited message")
-                # an Any takes this branch too: its `value` is a BYTES
-                # field, so the payload passes through VERBATIM, as in
-                # protobuf-java (TxRaw.parseFrom→toTx→toByteArray never
-                # parses the payload behind an Any), while the envelope
-                # gets the canonical treatment
-                out += encode_ld(no, self.reencode(fd.type_name, v))
-            return out
-        if t in (_T_STRING, _T_BYTES):
-            vals = [v for _wt, v in occ]
-            if not fd.repeated:
-                vals = vals[-1:]
-            out = b""
-            for v in vals:
-                if not isinstance(v, bytes):
-                    raise DecodeError("expected length-delimited field")
-                if v or fd.repeated:  # singular "" is the proto3 default
-                    out += encode_ld(no, v)
-            return out
-        # numeric families: re-emit raw wire integers canonically.
-        # Repeated fields unpack packed blobs and re-emit packed (proto3
-        # writer default); SINGULAR fields require an int occurrence —
-        # a length-delimited value on a singular scalar is the same
-        # wrong-wire-type error the decoder raises.
-        if t in _PACKED_VARINT:
-            if fd.repeated:
-                ints = [
-                    self._canon_varint(t, v)
-                    for v in _unpack(fd.ftype, [v for _wt, v in occ])
-                ]
-                payload = b"".join(encode_varint(v) for v in ints)
-                return encode_ld(no, payload) if payload else b""
-            v = self._canon_varint(t, occ[-1][1])
-            return encode_varint(no << 3 | 0) + encode_varint(v) if v else b""
-        if t in _PACKED_FIXED64:
-            if fd.repeated:
-                ints = _unpack(fd.ftype, [v for _wt, v in occ])
-                self._require_ints(ints)
-                payload = b"".join(v.to_bytes(8, "little") for v in ints)
-                return encode_ld(no, payload) if payload else b""
-            v = occ[-1][1]
-            self._require_ints([v])
-            return (
-                encode_varint(no << 3 | 1) + v.to_bytes(8, "little") if v else b""
-            )
-        if t in _PACKED_FIXED32:
-            if fd.repeated:
-                ints = _unpack(fd.ftype, [v for _wt, v in occ])
-                self._require_ints(ints)
-                payload = b"".join(v.to_bytes(4, "little") for v in ints)
-                return encode_ld(no, payload) if payload else b""
-            v = occ[-1][1]
-            self._require_ints([v])
-            return (
-                encode_varint(no << 3 | 5) + v.to_bytes(4, "little") if v else b""
-            )
-        raise DecodeError(f"unsupported field type {t}")
-
-    @staticmethod
-    def _require_ints(vals: list) -> None:
-        for v in vals:
-            if not isinstance(v, int):
-                raise DecodeError("expected numeric wire value")
-
-    @staticmethod
-    def _canon_varint(t: int, v) -> int:
-        """The 64-bit varint payload protobuf-java would re-emit for a
-        parsed value: 32-bit types truncate then sign-extend (int32/enum)
-        or zero-extend (uint32/sint32's zigzag), bool collapses to 0/1."""
-        if not isinstance(v, int):
-            raise DecodeError("expected numeric wire value")
-        mask64 = (1 << 64) - 1
-        v &= mask64
-        if t == _T_BOOL:
-            return 1 if v else 0
-        if t in (_T_INT32, _T_ENUM):
-            v &= 0xFFFFFFFF
-            if v >= 1 << 31:  # negative int32 re-emits sign-extended
-                v = (v - (1 << 32)) & mask64
-            return v
-        if t in (_T_UINT32, _T_SINT32):
-            return v & 0xFFFFFFFF
-        return v
-
-    @staticmethod
-    def _reenc_unknown(no: int, occ: list[tuple[int, object]]) -> bytes:
-        out = b""
-        for want_wt, emit in (
-            (0, lambda v: encode_varint(no << 3 | 0) + encode_varint(v & ((1 << 64) - 1))),
-            (5, lambda v: encode_varint(no << 3 | 5) + v.to_bytes(4, "little")),
-            (1, lambda v: encode_varint(no << 3 | 1) + v.to_bytes(8, "little")),
-            (2, lambda v: encode_ld(no, v)),
-        ):
-            for wt, val in occ:
-                if wt == want_wt:
-                    out += emit(val)
-        return out
 
 
 _DESC_PATH = os.path.join(

@@ -4,13 +4,17 @@ Re-implements the reference's tx-deserialization operator
 (/root/reference/src/main/kotlin/com/okp4/processor/cosmos/
 TopologyProducer.kt:86-96 and TxRaw.toTx() at :48-54) without compiled
 protobuf classes: a minimal, pure-Python reader of the protobuf wire
-format (varints, 64/32-bit, length-delimited — the full tag space) for
-re-encoding and descriptor parsing. Decoding renders the tx and every
+format (varints, 64/32-bit, length-delimited — the full tag space),
+shared with descriptors.py's descriptor-set parser and its generated
+decoders. Decoding renders the tx and every
 `Any` payload through the decoders functions/descriptors.py generates
 from the checked-in descriptor set, by the protobuf-JSON conventions the
 reference's predicates are written against (camelCase field names,
 `Any` as an `@type` key, 64-bit ints as strings, bytes as base64 —
 JsonFormat printer at TopologyProducer.kt:79-82).
+
+The module reads only: rule topics carry the input bytes, never a
+re-encoded tx (operators/dispatch.py:value_for_topic).
 
 Production note: on a real cluster this step belongs in spark-protobuf
 (`from_protobuf` with a descriptor set) so decode stays JVM-side; this
@@ -26,40 +30,12 @@ from __future__ import annotations
 
 from typing import Any
 
-__all__ = [
-    "DecodeError",
-    "decode_tx",
-    "encode_ld",
-    "encode_varint",
-    "parse_group",
-    "reencode_tx",
-]
+__all__ = ["DecodeError", "decode_tx", "parse_group"]
 
 
 class DecodeError(ValueError):
     """Malformed wire bytes — the analog of `Result.failure` in the
     reference's decode stage."""
-
-
-# ---------------------------------------------------------------------------
-# wire-level writer (canonical: minimal varints)
-# ---------------------------------------------------------------------------
-
-
-def encode_varint(n: int) -> bytes:
-    """Minimal varint of a value in [0, 2^64)."""
-    out = b""
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        out += bytes([b | 0x80]) if n else bytes([b])
-        if not n:
-            return out
-
-
-def encode_ld(field_no: int, data: bytes) -> bytes:
-    """One length-delimited field."""
-    return encode_varint(field_no << 3 | 2) + encode_varint(len(data)) + data
 
 
 # ---------------------------------------------------------------------------
@@ -137,16 +113,10 @@ def _fields(buf: bytes):
         yield key >> 3, key & 7, val
 
 
-def parse_fields(buf: bytes) -> list[tuple[int, int, Any]]:
-    """(field_no, wire_type, raw_value) triples in wire order — the
-    re-encoding path's reader."""
-    return list(_fields(buf))
-
-
 def parse_group(buf: bytes) -> dict[int, list[Any]]:
-    """field_no → [values in wire order]. Reads the descriptor set and,
-    when re-encoding, the TxRaw envelope (decoding goes through the
-    generated decoders, functions/descriptors.py)."""
+    """field_no → [values in wire order]. Reads the descriptor set
+    (decoding goes through the generated decoders,
+    functions/descriptors.py)."""
     out: dict[int, list[Any]] = {}
     for no, _wt, val in _fields(buf):
         lst = out.get(no)
@@ -158,24 +128,6 @@ def parse_group(buf: bytes) -> dict[int, list[Any]]:
 
 
 _TX = "cosmos.tx.v1beta1.Tx"
-
-
-def _bytes(v: Any, what: str) -> bytes:
-    """Wire value that MUST be length-delimited: garbage can encode any
-    field number with any wire type (e.g. b'\\x08\\x00' = field 1 as a
-    varint), and that must surface as DecodeError — the error-topic
-    trigger — not as a TypeError that would fail the whole decode stage.
-    Found by the hypothesis garbage corpus."""
-    if not isinstance(v, bytes):
-        raise DecodeError(f"{what}: expected length-delimited, got {type(v).__name__}")
-    return v
-
-
-def _registry():
-    # lazy: descriptors imports this module
-    from .descriptors import default_registry
-
-    return default_registry()
 
 
 _types: dict | None = None  # the default registry's decoder table, bound on first decode
@@ -196,53 +148,12 @@ def decode_tx(raw: bytes) -> dict:
     record to the error topic."""
     global _types
     if _types is None:
-        _types = _registry().decoders()
+        from .descriptors import default_registry  # lazy: it imports this module
+
+        _types = default_registry().decoders()
     decode = _types[_TX]
     try:
         return decode(raw, {"body": {}, "authInfo": {}})
-    except DecodeError:
-        raise
-    except Exception as e:  # malformed in a shape we didn't enumerate
-        raise DecodeError(f"malformed tx: {e}") from e
-
-
-def reencode_tx(raw: bytes) -> bytes:
-    """Re-serialize the rebuilt Tx the way the reference's rule branches
-    do (`tx.toByteArray()`, TopologyProducer.kt:155-159): parse
-    TxRaw{body_bytes, auth_info_bytes, signatures}, canonically re-encode
-    the nested TxBody/AuthInfo through the descriptor registry, and emit
-    Tx in protobuf-java's writer shape — fields in ascending number
-    order, minimal varints, default-valued proto3 scalars omitted.
-
-    Tx's `body` and `auth_info` MESSAGE fields are always emitted (even
-    empty): `TxRaw.toTx()` always sets them (kt:48-54), and a set message
-    field serializes as a zero-length field — which is why the
-    reference's empty-tx fixture is `0a00 1200`, not `b""`. Canonical
-    inputs round-trip byte-identically; non-canonical-but-legal inputs
-    (out-of-order fields, non-minimal varints, explicitly-present
-    default scalars) are normalized at every level protobuf-java
-    actually PARSES (Tx/TxBody/AuthInfo/SignerInfo/Fee/Coin and the Any
-    envelopes). `Any.value` payloads are opaque bytes to protobuf-java
-    and pass through VERBATIM — never recursively canonicalized — and
-    unknown field numbers re-emit after all known fields
-    (UnknownFieldSet writer order). Raises DecodeError on malformed
-    input — but the dispatch path only re-serializes records that
-    already decoded successfully."""
-    reg = _registry()
-    try:
-        f = parse_group(raw)
-        body = reg.reencode(
-            "cosmos.tx.v1beta1.TxBody",
-            _bytes(f[1][-1], "body_bytes") if 1 in f else b"",
-        )
-        auth = reg.reencode(
-            "cosmos.tx.v1beta1.AuthInfo",
-            _bytes(f[2][-1], "auth_info_bytes") if 2 in f else b"",
-        )
-        out = encode_ld(1, body) + encode_ld(2, auth)
-        if 3 in f:
-            out += b"".join(encode_ld(3, _bytes(s, "signature")) for s in f[3])
-        return out
     except DecodeError:
         raise
     except Exception as e:  # malformed in a shape we didn't enumerate

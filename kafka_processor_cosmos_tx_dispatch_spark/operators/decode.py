@@ -13,10 +13,11 @@ shape). Output adds:
     __tier3: array<boolean> — the Python-tier rules' results on the
                        decoded object (see decode_tx_records)
 
-The original `value` bytes pass through untouched — the error branch
-must emit them verbatim (TopologyProducer.kt:122), and rule topics may
-re-serialize (here: original bytes, which round-trip identically for
-the supported subset).
+The original `value` bytes pass through untouched: the error branch
+emits them verbatim (TopologyProducer.kt:122), and rule topics and the
+DLQ envelope's txBytes carry them too, where the reference writes the
+rebuilt Tx's `toByteArray()` (kt:155-159, :186-195). The two agree on
+every canonically encoded tx.
 
 `operators/dispatch.py:route` wires this stage to dispatch and
 `value_for_topic` — the full reference topology with zero extra stages.

@@ -36,8 +36,6 @@ from __future__ import annotations
 
 import warnings
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -227,7 +225,10 @@ def dlq_envelope(tx_json: Column, raw_bytes: Column) -> Column:
     """
     fields = [
         tx_json.alias("txJson"),
-        F.base64(raw_bytes).alias("txBytes"),
+        # Spark 4's chunked base64 puts CRLF after every 76 characters;
+        # Jackson's byte[] encoding never wraps. replace() is a byte
+        # search; translate() would cost about ten times as much per row.
+        F.replace(F.base64(raw_bytes), F.lit("\r\n"), F.lit("")).alias("txBytes"),
         F.lit(None).cast("string").alias("message"),
     ]
     return F.to_json(F.struct(*fields), {"ignoreNullFields": "false"})
@@ -237,65 +238,28 @@ def value_for_topic(
     dispatched: DataFrame,
     rules: list[DispatchRule],
     payload_col: str,
-    raw_col: str | None = None,
     json_col: str | None = None,
-    reserialize: bool = False,
 ) -> DataFrame:
     """Project the per-destination output value, mirroring the branches:
 
-    rule topics → the (re-serialized) payload (TopologyProducer.kt:155-159);
-    DLQ → the JSON envelope as a string (:186-195);
-    error topic → the original input bytes (:122).
+    DLQ → the JSON envelope as a string (TopologyProducer.kt:186-195),
+    its txBytes the payload;
+    rule topics and the error topic → the payload (kt:155-159, :122).
 
-    ``reserialize=False`` (default) passes the original input bytes to
-    rule topics (and into the DLQ envelope's txBytes) — byte-identical
-    to the reference for canonical wire encodings, and free.
-    ``reserialize=True`` reproduces the reference's exact semantics
-    (`tx.toByteArray()` on the REBUILT Tx — rule branches kt:155-159 AND
-    the DLQ envelope's txBytes kt:186-195): the payload is re-encoded
-    through protowire.reencode_tx, normalizing non-canonical-but-legal
-    inputs exactly where protobuf-java's parse→serialize does (Any
-    payloads stay verbatim, see reencode_tx). Costs one Arrow-batched
-    Python pass; the UDF is total (undecodable bytes pass through
-    unchanged) because when() does NOT stop Python UDF evaluation on
-    non-matching rows — error-branch rows flow through the batch too,
-    and their value comes from the raw-bytes branch anyway.
+    The payload is the input bytes. The reference writes the rebuilt
+    Tx's `toByteArray()` to rule topics and into txBytes, which equals
+    the input for every canonically encoded tx; a non-canonical but
+    decodable tx is forwarded as it came.
 
     Output column ``value`` is binary (DLQ string UTF-8 encoded) so one
     Kafka sink handles all destinations.
     """
-    payload = F.col(payload_col)
-    raw = F.col(raw_col) if raw_col else payload
+    payload = F.col(payload_col).cast("binary")
     txj = F.col(json_col) if json_col else F.lit(None).cast("string")
-    if reserialize:
-        from pyspark.sql.functions import pandas_udf
-
-        from ..functions import pyworker
-        from ..functions.protowire import DecodeError, reencode_tx
-
-        def _one(b) -> bytes | None:
-            if b is None:
-                return None
-            try:
-                return reencode_tx(bytes(b))
-            except DecodeError:
-                return bytes(b)  # error-branch rows: value unused there
-
-        @pandas_udf("binary")
-        def _reenc(col: pd.Series) -> pd.Series:
-            pyworker.prepare()
-            return col.map(_one)
-
-        rule_value = _reenc(raw.cast("binary"))
-        dlq_bytes = rule_value  # reference: DLQ carries tx.toByteArray()
-    else:
-        rule_value = payload.cast("binary")
-        dlq_bytes = raw
-    value = (
-        F.when(F.col("rule_idx") >= 0, rule_value)
-        .when(F.col("rule_idx") == F.lit(ERROR), raw.cast("binary"))
-        .otherwise(F.encode(dlq_envelope(txj, dlq_bytes), "UTF-8"))
-    )
+    value = F.when(
+        F.col("rule_idx") == F.lit(UNFILTERED),
+        F.encode(dlq_envelope(txj, payload), "UTF-8"),
+    ).otherwise(payload)
     return dispatched.withColumn("value", value)
 
 

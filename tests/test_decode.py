@@ -522,6 +522,16 @@ TX_64BIT = _tx_raw(
 )
 
 
+def _send_with_fee(fee: bytes) -> bytes:
+    return _tx_raw(_ld(1, _any(MSG_SEND_URL, _msg_send("testFrom", "tesTo"))), _ld(2, fee))
+
+
+# Fee.gas_limit = 1 as the legal but non-minimal varint 81 00: decodes
+# like the minimal 01, and its rule topic still carries the input bytes
+TX_NON_MINIMAL = _send_with_fee(bytes([2 << 3 | 0, 0x81, 0x00]))
+TX_MINIMAL = _send_with_fee(bytes([2 << 3 | 0, 0x01]))
+
+
 def test_golden_routing_end_to_end(spark):
     inputs = [
         (1, TX1),
@@ -531,6 +541,7 @@ def test_golden_routing_end_to_end(spark):
         (5, TX_MEMO_UNICODE),
         (6, TX_MEMO_CONTROL),
         (7, TX_64BIT),
+        (8, TX_NON_MINIMAL),
     ]
     df = spark.createDataFrame(inputs, "tx_id int, value binary")
     out = dsp.route(df, RULES, error_topic="error").collect()
@@ -539,6 +550,9 @@ def test_golden_routing_end_to_end(spark):
         want = None if raw == TX_ERR else json.dumps(protowire.decode_tx(raw), separators=(",", ":"))
         assert tx_json[tx_id] == want, tx_id
     assert '"proposalId":"18446744073709551615"' in tx_json[7]
+    assert TX_MINIMAL != TX_NON_MINIMAL
+    assert tx_json[8] == json.dumps(protowire.decode_tx(TX_MINIMAL), separators=(",", ":"))
+    assert '"gasLimit":"1"' in tx_json[8]
     got = sorted((r["tx_id"], r["topic"]) for r in out)
     assert got == [
         (1, "topic-1"),
@@ -549,19 +563,27 @@ def test_golden_routing_end_to_end(spark):
         (5, "dlq"),
         (6, "dlq"),
         (7, "dlq"),
+        (8, "topic-1"),
     ]
 
     rows = {(r["tx_id"], r["topic"]): bytes(r["value"]) for r in out}
     # error topic carries the ORIGINAL bytes (TopologyProducer.kt:122)
     assert rows[(4, "error")] == TX_ERR
-    # rule topics carry the payload bytes
+    # rule topics carry the input bytes, canonical or not
     assert rows[(1, "topic-1")] == TX1
+    assert rows[(8, "topic-1")] == TX_NON_MINIMAL
     # DLQ carries the Jackson-shaped envelope with txJson + base64 bytes
     dlq = json.loads(rows[(3, "dlq")].decode())
     assert set(dlq.keys()) == {"txJson", "txBytes", "message"}
     assert json.loads(dlq["txJson"]) == {"body": {}, "authInfo": {}}
-    assert base64.b64decode(dlq["txBytes"]) == TX3
     assert dlq["message"] is None
+    # txBytes is one unwrapped base64 string, as Jackson writes it; TX_64BIT
+    # is longer than the 57 bytes that fill one 76-character base64 line
+    assert len(TX_64BIT) > 57
+    for tx_id, raw in inputs:
+        if (tx_id, "dlq") in rows:
+            dlq = json.loads(rows[(tx_id, "dlq")].decode())
+            assert dlq["txBytes"] == base64.b64encode(raw).decode(), tx_id
 
 
 def test_descriptor_set_is_valid_protobuf(spark):
@@ -575,9 +597,8 @@ def test_descriptor_set_is_valid_protobuf(spark):
 
     data = dec.load_descriptor_set()
     # wire-parse with our own reader: FileDescriptorSet{file=1 repeated}
-    files = [
-        v for n, wt, v in protowire.parse_fields(data) if n == 1 and wt == 2
-    ]
+    files = protowire.parse_group(data)[1]
+    assert all(isinstance(f, bytes) for f in files)
     # r12: +authz.proto/vesting.proto layout files, evidence (2),
     # crisis, gov v1 (2), upgrade (2); wave 4: params, distribution
     # proposal, bank/staking authz payloads, ed25519 + multisig keys,
@@ -592,48 +613,34 @@ def test_descriptor_set_is_valid_protobuf(spark):
     # message_type=4 (DescriptorProto: name=1, field=2;
     # FieldDescriptorProto: name=1, type_name=6), enum_type=5
     per_file: dict[str, dict] = {}
+    def strings(group: dict, no: int) -> list[str]:
+        return [v.decode() for v in group.get(no, [])]
+
     for f in files:
-        fname, pkg, deps, type_names, declared = None, "", [], [], []
+        type_names, declared = [], []
 
         def walk_message(buf: bytes, scope: str) -> None:
             # DescriptorProto: name=1, field=2, nested_type=3, enum_type=4
-            mname, nested, nenums = None, [], []
-            for n2, _, v2 in protowire.parse_fields(buf):
-                if n2 == 1:
-                    mname = v2.decode()
-                elif n2 == 2:  # field
-                    for n3, _, v3 in protowire.parse_fields(v2):
-                        if n3 == 6:  # type_name
-                            type_names.append(v3.decode())
-                elif n2 == 3:
-                    nested.append(v2)
-                elif n2 == 4:
-                    nenums.append(v2)
+            m = protowire.parse_group(buf)
+            mname = strings(m, 1)[-1]
+            for fb in m.get(2, []):  # field
+                type_names.extend(strings(protowire.parse_group(fb), 6))
             fqn = f"{scope}.{mname}" if scope else mname
             declared.append(fqn)
-            for nb in nested:
+            for nb in m.get(3, []):
                 walk_message(nb, fqn)
-            for eb in nenums:
-                for n3, _, v3 in protowire.parse_fields(eb):
-                    if n3 == 1:
-                        declared.append(f"{fqn}.{v3.decode()}")
+            for eb in m.get(4, []):
+                for ename in strings(protowire.parse_group(eb), 1):
+                    declared.append(f"{fqn}.{ename}")
 
-        msg_bufs = []
-        for n, wt, v in protowire.parse_fields(f):
-            if n == 1:
-                fname = v.decode()
-            elif n == 2:
-                pkg = v.decode()
-            elif n == 3:
-                deps.append(v.decode())
-            elif n == 4:
-                msg_bufs.append(v)
-            elif n == 5:
-                for n2, _, v2 in protowire.parse_fields(v):
-                    if n2 == 1:
-                        ename = v2.decode()
-                        declared.append(f"{pkg}.{ename}" if pkg else ename)
-        for mb in msg_bufs:
+        g = protowire.parse_group(f)
+        fname = strings(g, 1)[-1]
+        pkg = (strings(g, 2) or [""])[-1]
+        deps = strings(g, 3)
+        for eb in g.get(5, []):
+            for ename in strings(protowire.parse_group(eb), 1):
+                declared.append(f"{pkg}.{ename}" if pkg else ename)
+        for mb in g.get(4, []):
             walk_message(mb, pkg)
         names.append(fname)
         pkgs.append(pkg)

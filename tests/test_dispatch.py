@@ -3,6 +3,7 @@ TopologyTest.kt:25-94 fixture corpus: 4 transactions through a 3-rule
 config, asserting destination topics, multicast duplication, the DLQ
 JSON envelope, and error-topic gating."""
 
+import base64
 import json
 
 import pytest
@@ -113,95 +114,44 @@ def test_rule_idx_and_names(tx_df, rules):
 
 def test_dlq_envelope_exact_shape(spark):
     """TopologyTest.kt:147-154 asserts the exact Jackson string:
-    {"txJson":...,"txBytes":<base64>,"message":null}"""
+    {"txJson":...,"txBytes":<base64>,"message":null}. Jackson's base64
+    never wraps lines, so a payload past 57 bytes (76 base64 characters)
+    must come back as one unbroken string."""
+    raws = [json.dumps(TX3).encode(), json.dumps(TX2).encode() * 4]
+    assert len(raws[1]) > 57
     df = spark.createDataFrame(
-        [(json.dumps(TX3, separators=(",", ":")), json.dumps(TX3).encode())],
+        [(json.dumps(TX3, separators=(",", ":")), raw) for raw in raws],
         "tx_json string, raw binary",
     )
-    env = df.select(
-        dsp.dlq_envelope(F.col("tx_json"), F.col("raw")).alias("v")
-    ).collect()[0]["v"]
-    obj = json.loads(env)
-    assert set(obj.keys()) == {"txJson", "txBytes", "message"}
-    assert obj["message"] is None
-    assert json.loads(obj["txJson"]) == TX3
-    import base64
-
-    assert base64.b64decode(obj["txBytes"]) == json.dumps(TX3).encode()
-    # Jackson includes null fields; ours must too.
-    assert '"message":null' in env
+    envs = [
+        r["v"]
+        for r in df.select(
+            dsp.dlq_envelope(F.col("tx_json"), F.col("raw")).alias("v")
+        ).collect()
+    ]
+    for env, raw in zip(envs, raws):
+        obj = json.loads(env)
+        assert set(obj.keys()) == {"txJson", "txBytes", "message"}
+        assert obj["message"] is None
+        assert json.loads(obj["txJson"]) == TX3
+        assert obj["txBytes"] == base64.b64encode(raw).decode()
+        # Jackson includes null fields; ours must too.
+        assert '"message":null' in env
 
 
 def test_value_projection_per_destination(tx_df, rules):
-    """Rule topics carry the payload; error carries ORIGINAL bytes
+    """Rule topics carry the input bytes; error carries them too
     (TopologyProducer.kt:122); DLQ carries the envelope string."""
     out = dsp.dispatch(
         tx_df, rules, json_col="tx_json", error_col="error", error_topic="error"
     )
-    out = dsp.value_for_topic(
-        out, rules, payload_col="tx_json", raw_col="raw", json_col="tx_json"
-    )
+    out = dsp.value_for_topic(out, rules, payload_col="raw", json_col="tx_json")
     vals = {(r["tx_id"], r["topic"]): bytes(r["value"]) for r in out.collect()}
     assert vals[(1, "topic-1")] == json.dumps(TX1).encode()
     assert vals[(4, "error")] == b"test"
     dlq = json.loads(vals[(3, "dlq")].decode())
     assert dlq["message"] is None and json.loads(dlq["txJson"]) == TX3
-
-
-def test_value_projection_reserialize(spark, rules):
-    """reserialize=True: rule topics AND the DLQ envelope's txBytes carry
-    the protowire re-encoded Tx (reference semantics — tx.toByteArray(),
-    TopologyProducer.kt:155-159 and :186-195). Canonical wire inputs
-    round-trip byte-identically; non-canonical input at a PARSED level
-    (Fee.gas_limit non-minimal varint) is normalized (bytes differ, JSON
-    equal); an Any payload's bytes stay verbatim (protobuf-java never
-    parses them); the error branch keeps the ORIGINAL bytes."""
-    import base64
-
-    from kafka_processor_cosmos_tx_dispatch_spark.functions import protowire
-    from kafka_processor_cosmos_tx_dispatch_spark.sources.txgen import record_at
-
-    def _ld(no, b):
-        return protowire.encode_ld(no, b)
-
-    canonical = record_at(0, 0)[1]  # txgen emits canonical MsgSend txs
-    # gas_limit = 1 as the legal-but-non-minimal varint 81 00, in
-    # AuthInfo.fee — a level protobuf-java PARSES, so it normalizes
-    nm_fee = bytes([2 << 3 | 0, 0x81, 0x00])
-    body = _ld(1, _ld(1, MSG_SEND.removeprefix("/").encode()))
-    non_minimal = _ld(1, body) + _ld(2, _ld(2, nm_fee))
-    # matches no rule → DLQ; also non-canonical at the parsed level
-    dlq_raw = _ld(1, b"") + _ld(2, _ld(2, nm_fee))
-    rows = [
-        (1, canonical, protowire.decode_tx(canonical), None),
-        (2, non_minimal, protowire.decode_tx(non_minimal), None),
-        (3, b"not-protobuf", None, "decode failure"),
-        (4, dlq_raw, protowire.decode_tx(dlq_raw), None),
-    ]
-    df = spark.createDataFrame(
-        [(i, r, json.dumps(j) if j is not None else None, e) for i, r, j, e in rows],
-        "tx_id long, raw binary, tx_json string, error string",
-    )
-    type_rule = [
-        DispatchRule("any-send-or-vote", "topic-1", "$.body.messages")
-    ]
-    out = dsp.dispatch(
-        df, type_rule, json_col="tx_json", error_col="error", error_topic="error"
-    )
-    out = dsp.value_for_topic(
-        out, type_rule, payload_col="raw", raw_col="raw", json_col="tx_json",
-        reserialize=True,
-    )
-    vals = {(r["tx_id"], r["topic"]): bytes(r["value"]) for r in out.collect()}
-    assert vals[(1, "topic-1")] == canonical  # canonical → byte-identical
-    reenc = vals[(2, "topic-1")]
-    assert reenc != non_minimal  # parsed-level normalization
-    assert protowire.decode_tx(reenc) == protowire.decode_tx(non_minimal)
-    assert vals[(3, "error")] == b"not-protobuf"  # error: ORIGINAL bytes
-    dlq = json.loads(vals[(4, "dlq")].decode("utf-8"))
-    want = protowire.reencode_tx(dlq_raw)
-    assert want != dlq_raw
-    assert dlq["txBytes"] == base64.b64encode(want).decode()  # toByteArray()
+    assert base64.b64decode(dlq["txBytes"]) == json.dumps(TX3).encode()
 
 
 def test_multicast_count_matches_rule_hits(spark, rules):

@@ -95,12 +95,6 @@ def minhash_base_hashes(shingle: Column) -> tuple[Column, Column]:
     return h1, h2
 
 
-def minhash_value(shingle: Column, seed: int) -> Column:
-    """One MinHash family member applied to one shingle (integer-valued)."""
-    h1, h2 = minhash_base_hashes(shingle)
-    return h1 + F.lit(seed) * h2
-
-
 # ---------------------------------------------------------------------------
 # language ID / quality (heuristic, deterministic)
 # ---------------------------------------------------------------------------
@@ -181,8 +175,8 @@ def token_rarity_scores(
     scale: int = 1_000_000,
 ):
     """Per-doc (n_tokens, rarity_sum) from corpus-wide token statistics —
-    the unigram-LM quality-scoring core (CCNet shape), shared by
-    queries.text_token_rarity (oracle-checked) and tools/scale_probe.py.
+    the unigram-LM quality-scoring core (CCNet shape) behind
+    queries.text_token_rarity (oracle-checked).
 
     Per-token rarity is the exact integer floor(scale * total / cnt)
     (one correctly-rounded IEEE divide + floor — ln() would differ

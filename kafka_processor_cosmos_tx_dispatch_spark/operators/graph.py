@@ -6,9 +6,8 @@ extensions in the Pregel shape: each round is one edges⋈ranks equi-join
 plus a dst-keyed aggregation — the formulation that partitions by node
 key and survives any edge count.
 
-Shared by queries.graph_pagerank (oracle-checked against unrolled CTEs)
-and tools/scale_probe.py (throughput at 50× bench scale) so the measured
-plan and the verified plan cannot drift apart.
+Driven by queries.graph_pagerank, which is oracle-checked against
+unrolled CTEs.
 """
 
 from __future__ import annotations

@@ -1481,13 +1481,6 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes and its derivation includes the union-find's
     driver-coordinated global rounds, the one piece that must not run
     twice."""
-    return _funnel_report(load_table(spark, sf_dir, "documents"))
-
-
-def _funnel_report(docs: DataFrame) -> DataFrame:
-    """dedup_funnel_report's body over an explicit (doc_id, text)
-    relation — also driven by tools/scale_probe.py on synthetic
-    corpora."""
     from ..operators.dedup import (
         drop_exact_duplicates,
         minhash_lsh_pairs,
@@ -1495,6 +1488,7 @@ def _funnel_report(docs: DataFrame) -> DataFrame:
     )
     from ..functions import text as TX
 
+    docs = load_table(spark, sf_dir, "documents")
     ntok = F.size(
         F.filter(TX.tokens(F.col("text")), lambda w: w != "")
     ).cast("long")

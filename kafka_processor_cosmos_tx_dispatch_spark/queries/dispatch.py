@@ -67,18 +67,16 @@ def dispatch_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dispatch_dlq_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DLQ envelope fields for unmatched records (exact Jackson-shape
-    envelope string is pinned by tests/test_dispatch.py; here the fields
-    are checked against the oracle)."""
+    """DLQ envelope fields for unmatched records: the router's own
+    envelope (dsp.dlq_envelope) parsed back into its three fields and
+    checked against the oracle (the exact Jackson-shape envelope string
+    is pinned by tests/test_dispatch.py)."""
     ev = _events_record(spark, sf_dir)
     out = dsp.dispatch(ev, EVENT_RULES, struct_col="rec")
     dlq = out.filter(F.col("topic") == dsp.DEFAULT_DLQ_TOPIC)
-    return dlq.select(
-        "event_id",
-        F.col("props").alias("txJson"),
-        F.base64(F.encode(F.col("props"), "UTF-8")).alias("txBytes"),
-        F.lit(None).cast("string").alias("message"),
-    )
+    env = dsp.dlq_envelope(F.col("props"), F.encode("props", "UTF-8"))
+    fields = F.from_json(env, "txJson string, txBytes string, message string")
+    return dlq.select("event_id", fields.alias("env")).select("event_id", "env.*")
 
 
 @register(

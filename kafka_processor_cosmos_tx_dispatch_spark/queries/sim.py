@@ -1939,13 +1939,6 @@ def sim_pq_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan/codegen cost ÷4 (measured 7.4 s → ~2.5 s at sf0.1).
     tests/test_llm_ops.py pins the pass-count claim on the physical
     plan (InMemoryTableScan-fed training subtree, ONE corpus scan)."""
-    return _pq_train_sampled_body(load_table(spark, sf_dir, "embeddings"))
-
-
-def _pq_train_sampled_body(emb: DataFrame) -> DataFrame:
-    """sim_pq_train_sampled's body over an explicit (vec_id, embedding)
-    relation — also driven by tools/scale_probe.py on synthetic
-    corpora."""
     from ..operators.similarity import (
         KMEANS_MEAN_OFFSET,
         PQ_K,
@@ -1954,6 +1947,7 @@ def _pq_train_sampled_body(emb: DataFrame) -> DataFrame:
         kmeans_assign_grouped,
     )
 
+    emb = load_table(spark, sf_dir, "embeddings")
     samp = _pq_sample(emb)
     off = KMEANS_MEAN_OFFSET
     asg = kmeans_assign_grouped(

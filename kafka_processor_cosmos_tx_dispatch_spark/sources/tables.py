@@ -16,8 +16,8 @@ from pyspark.sql import types as T
 
 # Session-scoped memo of load_table PLANS (never results): every
 # spark.read.parquet call pays py4j round-trips plus a driver-side
-# footer/schema read, and the bench invokes each registered query fresh
-# per iteration — thousands of identical table loads per sweep, each
+# footer/schema read, and a registry sweep invokes each registered query
+# fresh — hundreds of identical table loads per sweep, each
 # rebuilding the identical scan plan (the r15 _dims-probe lesson: count
 # driver round-trips, not just plan nodes). DataFrames are immutable, so
 # handing every caller the same handle is safe; execution still scans
@@ -30,18 +30,6 @@ from pyspark.sql import types as T
 # via spark.read directly).
 _TABLE_MEMO: WeakKeyDictionary = WeakKeyDictionary()
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 # Dimension tables small enough to broadcast at any realistic scale factor
 # (region=5 rows, nation=25 rows fixed; supplier/part/customer grow with SF
@@ -128,19 +116,3 @@ def widen(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if n_files < target:
         return df.repartition(target)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    """Register each table as a temp view (for the SQL API surface)."""
-    tables = load_tables(spark, sf_dir, names)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

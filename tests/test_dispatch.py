@@ -6,10 +6,15 @@ JSON envelope, and error-topic gating."""
 import base64
 import json
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from kafka_processor_cosmos_tx_dispatch_spark.operators import dispatch as dsp
+from kafka_processor_cosmos_tx_dispatch_spark.queries.dispatch import (
+    dispatch_dlq_envelope,
+)
 from kafka_processor_cosmos_tx_dispatch_spark.rules import (
     ERROR,
     UNFILTERED,
@@ -137,6 +142,30 @@ def test_dlq_envelope_exact_shape(spark):
         assert obj["txBytes"] == base64.b64encode(raw).decode()
         # Jackson includes null fields; ours must too.
         assert '"message":null' in env
+
+
+def test_dlq_envelope_query_keeps_long_tx_bytes_unwrapped(spark, tmp_path):
+    """The registry query dispatch_dlq_envelope reports the envelope the
+    router writes: an unmatched record whose props run past 57 bytes (76
+    base64 characters) still gets txBytes as one unbroken base64 string."""
+    props = json.dumps({"k": 3, "note": "x" * 80})
+    assert len(props.encode()) > 57
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": [7],
+                "event_type": ["signup"],
+                "value": [1.0],
+                "props": [props],
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    rows = dispatch_dlq_envelope(spark, str(tmp_path)).collect()
+    assert [(r["event_id"], r["txJson"], r["message"]) for r in rows] == [
+        (7, props, None)
+    ]
+    assert rows[0]["txBytes"] == base64.b64encode(props.encode()).decode()
 
 
 def test_value_projection_per_destination(tx_df, rules):

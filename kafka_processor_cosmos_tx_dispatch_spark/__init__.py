@@ -22,8 +22,8 @@ Package layout:
                    operators (dedup, similarity, graph, sampling, …)
     sources/     — Kafka reader/writer builders, the synthetic tx source
                    and the parquet table loaders
-    streaming/   — file-stream source, foreachBatch router, windowed,
-                   stateful and incremental streaming operators
+    streaming/   — file-stream source, windowed, stateful and
+                   incremental streaming operators
     sinks        — batch parquet layouts (partitioned, bucketed)
     queries/     — the registry of named queries with their DuckDB oracles
 """

@@ -156,5 +156,9 @@ def decode_tx(raw: bytes) -> dict:
         return decode(raw, {"body": {}, "authInfo": {}})
     except DecodeError:
         raise
+    except RecursionError as e:
+        # CPython's wording depends on the call that hit the limit
+        # ("... exceeded in comparison"); keep the reason stable per cause
+        raise DecodeError("malformed tx: maximum recursion depth exceeded") from e
     except Exception as e:  # malformed in a shape we didn't enumerate
         raise DecodeError(f"malformed tx: {e}") from e

@@ -7,9 +7,9 @@ DataFrame plan:
     reference                           here
     ---------                           ----
     mapValues tx-deserialization        route(): decode_tx_records or from_json
-    mapValues evaluate-tx (:97,205-231) with_matches(): one array<int> column
-    flatMapValues flatten (:100-105)    explode(matches)
-    split()+branches (:106-201)         a 'topic' string column
+    mapValues evaluate-tx (:97,205-231) dispatch(): one array of rule indices
+    flatMapValues flatten (:100-105)    explode_outer of that array
+    split()+branches (:106-201)         dispatch(): a 'topic' string column
     per-branch serialization            value_for_topic() projections
 
 `route()` builds that whole chain from a Kafka-shaped frame.
@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import jsonpath as jp
-from ..functions.exprs import bind
 from ..rules import ERROR, UNFILTERED, DispatchRule
 from .decode import decode_tx_records
 
@@ -72,28 +71,33 @@ def python_tier_paths(
     json_col: str = "tx_json",
     struct_type: T.StructType | None = None,
 ) -> list[str]:
-    """Predicates, in rule order, that `with_matches` runs in the Python
+    """Predicates, in rule order, that `dispatch` runs in the Python
     tier (all that parse when there is no struct): the contract of a
     precomputed ``tier3_col``. ``json_col`` plays no part in the choice;
     it stays because existing callers pass it."""
     return [t for t in _rule_tiers(rules, struct_type) if isinstance(t, str)]
 
 
-def with_matches(
+def dispatch(
     df: DataFrame,
     rules: list[DispatchRule],
     json_col: str | None = None,
     struct_col: str | None = None,
     error_col: str | None = None,
+    dlq_topic: str = DEFAULT_DLQ_TOPIC,
+    error_topic: str | None = None,
     tier3_col: str | None = None,
 ) -> DataFrame:
-    """Add ``matches: array<int>`` — indices of matching rules in rule order.
+    """Full routing: one output row per (record, destination).
 
-    ``[-1]`` for decode failures (error_col non-null), ``[-2]`` when no rule
-    matches (≅ getEvaluatedTxList, TopologyProducer.kt:205-231). All rules
-    are evaluated once per record against one shared JSON/struct view —
-    the reference's evaluate-once/route-by-tag shape; Catalyst's
-    subexpression elimination keeps it single-pass.
+    Adds ``rule_idx`` (int; -1 error, -2 unfiltered), ``rule_name`` (null
+    for sentinels) and ``topic``. All rules are evaluated once per record
+    against one shared JSON/struct view — the reference's evaluate-once/
+    route-by-tag shape (getEvaluatedTxList, TopologyProducer.kt:205-231).
+    A record goes to every matching rule in rule order, to ``dlq_topic``
+    when none matches, and to ``error_topic`` when ``error_col`` is
+    non-null; those records are DROPPED when no error topic is configured
+    (TopologyProducer.kt:124-131).
 
     `_rule_tiers` decides each rule once: never-match (with a warning)
     when its path does not parse; native, over ``struct_col``; otherwise
@@ -137,84 +141,44 @@ def with_matches(
         elif isinstance(t, str):
             pos += 1
             # coalesce: a null element (malformed precomputed array)
-            # must read as non-match, never null-propagate into `tagged`
+            # must read as non-match, never null-propagate into `hits`
             preds.append(F.coalesce(F.element_at(F.col(tier3_col), pos), F.lit(False)))
         else:
             preds.append(F.coalesce(t(F.col(struct_col)), F.lit(False)))
-    tagged = F.array(
-        *[F.when(p, F.lit(i)).otherwise(F.lit(None)) for i, p in enumerate(preds)]
-    )
-    hits = F.filter(tagged, lambda x: x.isNotNull())
-    no_match = F.array(F.lit(UNFILTERED))
-    # bind(): `hits` (the full rule-bank evaluation) appears twice in the
-    # WHEN/OTHERWISE below; without the let-binding Catalyst duplicates
-    # the whole predicate array textually into both branches (and into
-    # any filter later inferred from this column).
-    matched = bind(
-        hits, lambda h: F.when(F.size(h) > 0, h).otherwise(no_match)
+    hits = F.filter(
+        F.array(*[F.when(p, F.lit(i)) for i, p in enumerate(preds)]),
+        lambda x: x.isNotNull(),
     )
     if error_col is not None:
-        matched = F.when(
-            F.col(error_col).isNotNull(), F.array(F.lit(ERROR))
-        ).otherwise(matched)
-    out = df.withColumn("matches", matched.cast(T.ArrayType(T.IntegerType())))
-    return out.drop(tier3_col) if tier3_col is not None else out
-
-
-def topic_map(
-    rules: list[DispatchRule],
-    dlq_topic: str = DEFAULT_DLQ_TOPIC,
-    error_topic: str | None = None,
-) -> Column:
-    """rule_idx → destination topic as a literal map (broadcast by value)."""
-    pairs: list[Column] = []
-    for i, r in enumerate(rules):
-        pairs += [F.lit(i), F.lit(r.topic)]
-    pairs += [F.lit(UNFILTERED), F.lit(dlq_topic)]
-    if error_topic is not None:
-        pairs += [F.lit(ERROR), F.lit(error_topic)]
-    return F.create_map(*pairs)
-
-
-def dispatch(
-    df: DataFrame,
-    rules: list[DispatchRule],
-    json_col: str | None = None,
-    struct_col: str | None = None,
-    error_col: str | None = None,
-    dlq_topic: str = DEFAULT_DLQ_TOPIC,
-    error_topic: str | None = None,
-    tier3_col: str | None = None,
-) -> DataFrame:
-    """Full routing: one output row per (record, destination).
-
-    Adds ``rule_idx`` (int; -1 error, -2 unfiltered), ``rule_name`` (null
-    for sentinels) and ``topic``. Records that fail decode are DROPPED when
-    no error topic is configured (TopologyProducer.kt:124-131).
-    ``tier3_col``: see `with_matches` — precomputed Python-tier results.
-    """
-    out = with_matches(
-        df, rules, json_col, struct_col, error_col, tier3_col=tier3_col
-    )
-    # explode_outer, deliberately: `matches` is never empty (the UNFILTERED
-    # sentinel guarantees ≥1 element) so outer vs inner explode is
-    # semantically identical — but the non-outer Generate makes Catalyst
-    # infer a `size(matches) > 0` filter and push it below the Generate,
-    # re-evaluating the entire rule bank once more per input row (measured
-    # ~2× on the dispatch bench).
-    out = out.withColumn("rule_idx", F.explode_outer("matches")).drop("matches")
+        hits = F.when(F.col(error_col).isNotNull(), F.array(F.lit(ERROR))).otherwise(hits)
+    # explode_outer, deliberately: it emits one null `rule_idx` for a record
+    # that matches no rule, which the coalesce turns into UNFILTERED, so
+    # `hits` is referenced once. A non-outer Generate over a materialized
+    # array column would make Catalyst infer a `size(...) > 0` filter and
+    # push it below the Generate, re-evaluating the entire rule bank once
+    # more per input row (measured ~2× on the dispatch bench).
+    out = df.withColumn("rule_idx", F.explode_outer(hits))
+    # before the error filter: `null != ERROR` is null and would drop the
+    # unmatched records
+    out = out.withColumn("rule_idx", F.coalesce(F.col("rule_idx"), F.lit(UNFILTERED)))
     if error_topic is None:
         out = out.filter(F.col("rule_idx") != F.lit(ERROR))
+    if tier3_col is not None:
+        out = out.drop(tier3_col)
     name_pairs: list[Column] = []
+    topic_pairs: list[Column] = []
     for i, r in enumerate(rules):
         name_pairs += [F.lit(i), F.lit(r.name)]
+        topic_pairs += [F.lit(i), F.lit(r.topic)]
+    topic_pairs += [F.lit(UNFILTERED), F.lit(dlq_topic)]
+    if error_topic is not None:
+        topic_pairs += [F.lit(ERROR), F.lit(error_topic)]
     out = out.withColumn(
         "rule_name", F.element_at(F.create_map(*name_pairs), F.col("rule_idx"))
     )
-    out = out.withColumn(
-        "topic", F.element_at(topic_map(rules, dlq_topic, error_topic), F.col("rule_idx"))
+    return out.withColumn(
+        "topic", F.element_at(F.create_map(*topic_pairs), F.col("rule_idx"))
     )
-    return out
 
 
 def dlq_envelope(tx_json: Column, raw_bytes: Column) -> Column:
@@ -296,19 +260,17 @@ def route(
     return value_for_topic(routed, rules, payload_col="value", json_col="tx_json")
 
 
-def dispatch_metrics() -> list[Column]:
-    """The observability analog of the reference's three peek taps
-    (decode-failure / per-rule routing / unfiltered logs,
-    TopologyProducer.kt:114-121, 152-154, 183-185): counters computed
-    inline by the observe() framework — collected as accumulators during
-    the normal pass, zero extra jobs, zero extra scans.
-    """
-    return [
-        F.count(F.lit(1)).alias("n_output_rows"),
-        F.count_if(F.col("rule_idx") >= 0).alias("n_rule_matches"),
-        F.count_if(F.col("rule_idx") == F.lit(UNFILTERED)).alias("n_unfiltered"),
-        F.count_if(F.col("rule_idx") == F.lit(ERROR)).alias("n_decode_errors"),
-    ]
+# The observability analog of the reference's three peek taps
+# (decode-failure / per-rule routing / unfiltered logs,
+# TopologyProducer.kt:114-121, 152-154, 183-185): counters computed inline
+# by the observe() framework — collected as accumulators during the normal
+# pass, zero extra jobs, zero extra scans.
+_METRICS = [
+    "count(1) AS n_output_rows",
+    "count_if(rule_idx >= 0) AS n_rule_matches",
+    f"count_if(rule_idx = {UNFILTERED}) AS n_unfiltered",
+    f"count_if(rule_idx = {ERROR}) AS n_decode_errors",
+]
 
 
 def with_observed_metrics(dispatched: DataFrame, name: str = "dispatch_metrics"):
@@ -319,11 +281,11 @@ def with_observed_metrics(dispatched: DataFrame, name: str = "dispatch_metrics")
     from pyspark.sql import Observation
 
     obs = Observation(name)
-    return dispatched.observe(obs, *dispatch_metrics()), obs
+    return dispatched.observe(obs, *map(F.expr, _METRICS)), obs
 
 
-def with_streaming_metrics(dispatched: DataFrame, name: str = "dispatch_metrics") -> DataFrame:
-    """Streaming: named observation; per-batch values arrive in every
-    StreamingQueryProgress.observedMetrics[name] (hook a
+def with_streaming_metrics(dispatched: DataFrame) -> DataFrame:
+    """Streaming: per-batch values arrive in every
+    StreamingQueryProgress.observedMetrics["dispatch_metrics"] (hook a
     StreamingQueryListener to ship them to a metrics sink)."""
-    return dispatched.observe(name, *dispatch_metrics())
+    return dispatched.observe("dispatch_metrics", *map(F.expr, _METRICS))

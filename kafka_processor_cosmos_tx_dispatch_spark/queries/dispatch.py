@@ -111,7 +111,7 @@ def dispatch_route_tier3(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no typed struct, so every rule — the regex rule (`=~`, Jayway
     full-match semantics), the &&-band filter and the definite paths
     `$.bigValue` / `$.missing` — routes through the ONE fused Arrow UDF
-    (with_matches: single json.loads per record for the whole bank). The
+    (dispatch: single json.loads per record for the whole bank). The
     sometimes-absent `bigValue` key (to_json omits nulls) makes the
     definite-path rule a real filter rather than an always-match.
 

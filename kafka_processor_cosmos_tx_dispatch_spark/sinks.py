@@ -1,10 +1,9 @@
 """Batch dataset sinks: partitioned and bucketed parquet layouts.
 
 The reference's only sinks are Kafka producers (TopologyProducer.kt:
-126-129, 160-164, 196-199 — see sources/kafka.py and
-streaming/dispatch.py:foreach_batch_router for those); an analytics
-engine also needs durable TABLE layouts, and at 100 TB the layout IS the
-performance model:
+126-129, 160-164, 196-199 — see sources/kafka.py:kafka_topic_sink for
+those); an analytics engine also needs durable TABLE layouts, and at
+100 TB the layout IS the performance model:
 
 - hive-style partition directories → partition PRUNING: a predicate on
   the partition column skips whole directories at plan time;

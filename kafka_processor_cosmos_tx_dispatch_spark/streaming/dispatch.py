@@ -5,89 +5,24 @@ The batch and streaming engines share ONE plan builder —
 operators/dispatch.py works unchanged on a streaming DataFrame because
 every dispatch stage is stateless and narrow (the reference topology has
 no state either, TopologyProducer.kt:84-202). What this module adds is the
-streaming wiring: source → dispatch → multi-destination sink.
-
-Sink strategy (≅ the reference's per-branch producers with mixed value
-types, :126/:162/:198): against Kafka, one sink with a `topic` column.
-Against heterogeneous sinks (or for per-destination formats), the
-`foreach_batch_router` persists each micro-batch once and writes each
-destination from the cached frame — the reference's evaluate-once/
-route-by-tag shape at micro-batch granularity.
+streaming source; the routed frame's `topic` column feeds one Kafka sink
+(sources/kafka.py:kafka_topic_sink).
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from ..operators import dispatch as dsp
-from ..rules import DispatchRule
+from pyspark.sql import SparkSession
 
 
 def file_stream_reader(
     spark: SparkSession,
     path: str,
     schema,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ):
-    """File-based stream source (the test harness path; also the pattern
+    """Parquet file stream source (the test harness path; also the pattern
     for landing-zone ingestion at scale — schema must be explicit)."""
-    reader = spark.readStream.format(fmt).schema(schema)
+    reader = spark.readStream.format("parquet").schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(path)
-
-
-def foreach_batch_router(
-    rules: list[DispatchRule],
-    write_destination: Callable[[DataFrame, str, int], None],
-    json_col: str | None = None,
-    struct_col: str | None = None,
-    error_col: str | None = None,
-    dlq_topic: str = dsp.DEFAULT_DLQ_TOPIC,
-    error_topic: str | None = None,
-):
-    """Build a foreachBatch function that routes each micro-batch.
-
-    `write_destination(df, topic, epoch_id)` is called once per
-    destination present in the batch. The batch is persisted before the
-    per-destination filters so the dispatch plan runs ONCE, not once per
-    destination (the reference evaluates predicates once per record and
-    branches on the precomputed tag, TopologyProducer.kt:213-219 + :109).
-    """
-
-    # The destination set is static — rules + dlq (+ error) — so don't
-    # run a distinct+collect job per micro-batch to discover it (VERDICT
-    # r1 minor #5): destinations with no rows in a batch cost one empty
-    # filtered write, cheaper than an extra Spark job every trigger.
-    topics = [r.topic for r in rules] + [dlq_topic]
-    if error_topic is not None:
-        topics.append(error_topic)
-    static_topics = list(dict.fromkeys(topics))  # dedupe, keep order
-
-    def route(batch: DataFrame, epoch_id: int) -> None:
-        routed = dsp.dispatch(
-            batch, rules, json_col, struct_col, error_col, dlq_topic, error_topic
-        ).persist()
-        try:
-            for topic in static_topics:
-                write_destination(routed.filter(F.col("topic") == topic), topic, epoch_id)
-        finally:
-            routed.unpersist()
-
-    return route
-
-
-def parquet_destination_writer(base_dir: str):
-    """Per-topic parquet directories — the local stand-in for per-topic
-    Kafka producers; at scale this is the 'route to N tables' pattern."""
-
-    def write(df: DataFrame, topic: str, epoch_id: int) -> None:
-        out = os.path.join(base_dir, topic.replace("/", "_"))
-        df.drop("topic").write.mode("append").parquet(out)
-
-    return write

@@ -27,11 +27,13 @@ def test_dispatch_is_shuffle_free(spark, sf_dir):
 
 def test_dispatch_evaluates_rules_once(spark, sf_dir):
     """The JSON extraction (the dispatch hot path's only expensive
-    expression) must appear exactly once in the physical plan. Two known
-    regressions multiply it: a non-outer explode makes Catalyst infer a
-    size(matches)>0 filter below the Generate (re-running the whole rule
-    bank per row), and the WHEN/OTHERWISE fallback duplicates the
-    predicate array unless let-bound (operators/dispatch.py)."""
+    expression) must appear exactly once in the physical plan. dispatch
+    explodes the hit array with an OUTER explode, and the null row that
+    explode emits for a record with no hits is what sends it to the DLQ:
+    the hit array is referenced once, so nothing duplicates it. A
+    non-outer explode over a materialized array column would make
+    Catalyst infer a size(...)>0 filter below the Generate, re-running
+    the whole rule bank per row (operators/dispatch.py)."""
     from kafka_processor_cosmos_tx_dispatch_spark import queries as q
 
     df = q.queries()["dispatch_route"](spark, sf_dir)
@@ -42,7 +44,7 @@ def test_dispatch_evaluates_rules_once(spark, sf_dir):
 def test_dispatch_tier3_bank_is_one_fused_arrow_pass(spark, sf_dir):
     """dispatch_route_tier3's rules (a JSON-string view, no struct) all
     ride ONE fused ArrowEvalPython stage (one json.loads per record for
-    the whole bank, one Arrow transfer — with_matches' fused-bank
+    the whole bank, one Arrow transfer — dispatch's fused-bank
     contract), and the plan stays shuffle-free like the all-native
     dispatch."""
     from kafka_processor_cosmos_tx_dispatch_spark import queries as q
@@ -52,6 +54,26 @@ def test_dispatch_tier3_bank_is_one_fused_arrow_pass(spark, sf_dir):
     assert "Exchange" not in plan
     # the one get_json_object is the view's own `$.k`: dispatch plans none
     assert plan.count("get_json_object") == 1, plan
+
+
+def test_wire_route_is_one_arrow_pass_and_one_generate(spark):
+    """The wire path (`route` on TxRaw bytes, the benchmark's pipeline)
+    decodes and evaluates every rule in ONE ArrowEvalPython, multicasts
+    through ONE Generate and never shuffles, with and without an error
+    topic."""
+    from kafka_processor_cosmos_tx_dispatch_spark.operators import dispatch as dsp
+    from tests.test_decode import RULES, TX1, TX2, TX3, TX_ERR
+
+    df = spark.createDataFrame(
+        [(1, TX1), (2, TX2), (3, TX3), (4, TX_ERR)], "tx_id int, value binary"
+    )
+    for error_topic in ("error", None):
+        routed = dsp.route(df, RULES, error_topic=error_topic)
+        routed.collect()
+        plan = _plan(routed)
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert plan.count("Generate") == 1, plan
+        assert "Exchange" not in plan, plan
 
 
 def test_star_join_broadcasts_all_dims(spark, sf_dir):

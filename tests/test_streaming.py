@@ -110,36 +110,6 @@ class TestStreamingDispatch:
         assert (3, "topic-purchases") in got and (3, "topic-high-k") in got
         assert (4, "dlq") in got
 
-    def test_foreach_batch_router_writes_per_topic(self, spark, stream_dir, tmp_path):
-        rows = [(1, 1, 10, "purchase", 5.0, 10), (2, 1, 11, "click", 5.0, 10)]
-        _mk_events(spark, rows).write.parquet(os.path.join(stream_dir, "b0"))
-        out_dir = str(tmp_path / "routed")
-
-        stream = sdsp.file_stream_reader(
-            spark, os.path.join(stream_dir, "b0"), EVENTS_SCHEMA
-        )
-        rec = F.struct(
-            F.col("event_type"),
-            F.col("value"),
-            F.from_json(F.col("props"), "struct<k: int>").alias("props"),
-        )
-        router = sdsp.foreach_batch_router(
-            RULES, sdsp.parquet_destination_writer(out_dir), struct_col="rec"
-        )
-        q = (
-            stream.withColumn("rec", rec)
-            .writeStream.foreachBatch(router)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        purchases = spark.read.parquet(os.path.join(out_dir, "topic-purchases"))
-        dlq = spark.read.parquet(os.path.join(out_dir, "dlq"))
-        assert [r["event_id"] for r in purchases.collect()] == [1]
-        assert [r["event_id"] for r in dlq.collect()] == [2]
-
 
 class TestWindows:
     def test_tumbling_counts(self, spark, stream_dir):

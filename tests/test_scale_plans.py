@@ -68,9 +68,7 @@ def test_wire_route_is_one_arrow_pass_and_one_generate(spark):
         [(1, TX1), (2, TX2), (3, TX3), (4, TX_ERR)], "tx_id int, value binary"
     )
     for error_topic in ("error", None):
-        routed = dsp.route(df, RULES, error_topic=error_topic)
-        routed.collect()
-        plan = _plan(routed)
+        plan = _plan(dsp.route(df, RULES, error_topic=error_topic))
         assert plan.count("ArrowEvalPython") == 1, plan
         assert plan.count("Generate") == 1, plan
         assert "Exchange" not in plan, plan
